@@ -190,11 +190,7 @@ def run_overlapped(thunks, max_workers: int = 4) -> list:
         return [f.result() for f in futures]
 
 
-def widen_for_compute(
-    df: DataFrame,
-    min_parts: int | None = None,
-    work_factor: int = 1,
-) -> DataFrame:
+def widen_for_compute(df: DataFrame, work_factor: int = 1) -> DataFrame:
     """Repartition ``df`` to the session's default parallelism IFF its
     scan statistics say input splits are scarce — a no-op exactly when
     splits are plentiful (any real cluster table).
@@ -220,7 +216,7 @@ def widen_for_compute(
     if df.isStreaming:  # partitioning is the source's business there
         return df
     spark = df.sparkSession
-    target = min_parts or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     try:
         max_split = int(
             spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()

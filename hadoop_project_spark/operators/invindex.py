@@ -342,9 +342,9 @@ def bm25_topk(
     a window over the bounded survivors — the ANN rankings' pattern),
     so a hot single-term query can never funnel a 100 TB posting list
     through one window task (VERDICT r8 watch item)."""
-    spark = docs.sparkSession
     tf, dfr, dl, scal = _bm25_inputs(docs)
-    return _bm25_score_topk(spark, tf, dfr, dl, scal, _bm25_qt(spark, queries), k)
+    qt = _bm25_qt(docs.sparkSession, queries)
+    return _bm25_topk_from_agg(_bm25_scored_agg(tf, dfr, dl, scal, qt), k)
 
 
 def bm25_topk_stored(
@@ -364,7 +364,8 @@ def bm25_topk_stored(
         F.count("*").cast("long").alias("n"),
         F.sum("dl").cast("long").alias("t"),
     )
-    return _bm25_score_topk(spark, tf, dfr, dl, scal, _bm25_qt(spark, queries), k)
+    qt = _bm25_qt(spark, queries)
+    return _bm25_topk_from_agg(_bm25_scored_agg(tf, dfr, dl, scal, qt), k)
 
 
 def _bm25_inputs(docs: DataFrame):
@@ -410,42 +411,33 @@ def bm25_relevance_eval(
     cross-engine bit-exact. Shape: the tf relation is pinned and shared
     by scoring and relevance; relevance is one broadcast-literal join +
     a (query, doc)-keyed aggregate; the metric join touches only k rows
-    per query."""
+    per query. Raises ValueError for a query that repeats a term."""
+    dup = [q for q in queries if len(q.split()) != len(set(q.split()))]
+    if dup:
+        # the relevance set reads the scoring aggregate's matched-row
+        # count as the distinct-matched-term count, which a repeated
+        # term over-counts
+        raise ValueError(
+            f"bm25_relevance_eval: queries repeat a term: {dup!r}"
+        )
     spark = docs.sparkSession
     tf, dfr, dl, scal = _bm25_inputs(docs)
     qt = _bm25_qt(spark, queries)
     nqdf = spark.createDataFrame(
-        [(q, len(set(q.split()))) for q in queries], "query string, nq long"
+        [(q, len(q.split())) for q in queries], "query string, nq long"
     )
-    if all(len(q.split()) == len(set(q.split())) for q in queries):
-        # dup-free queries (every current workload): the scoring
-        # aggregate's matched-row count IS the distinct-matched-term
-        # count, so the relevance set derives from the SAME pinned
-        # aggregate the top-k ranks — the qt ⋈ tf match runs ONCE
-        # instead of once for scoring and once for relevance
-        # (round 13; guide §2.4). The pin replaces the old rel pin:
-        # same job count, strictly more reuse.
-        agg = eager_pin(_bm25_scored_agg(tf, dfr, dl, scal, qt))
-        topk = _bm25_topk_from_agg(agg, k)
-        rel = (
-            agg.join(F.broadcast(nqdf), "query")
-            .filter(F.col("n_terms") == F.col("nq"))
-            .select("query", "doc_id")
-        )
-    else:
-        # a repeated query term makes n_terms over-count vs DISTINCT —
-        # keep the explicit two-pass form for that (currently unused)
-        # shape
-        topk = _bm25_score_topk(spark, tf, dfr, dl, scal, qt, k)
-        rel = eager_pin(
-            F.broadcast(qt)
-            .join(tf, "term")
-            .groupBy("query", "doc_id")
-            .agg(F.countDistinct("term").alias("nm"))
-            .join(F.broadcast(nqdf), "query")
-            .filter(F.col("nm") == F.col("nq"))
-            .select("query", "doc_id")
-        )
+    # the relevance set derives from the SAME pinned aggregate the top-k
+    # ranks: with dup-free queries its matched-row count IS the
+    # distinct-matched-term count, so the qt ⋈ tf match runs ONCE
+    # instead of once for scoring and once for relevance (round 13;
+    # guide §2.4)
+    agg = eager_pin(_bm25_scored_agg(tf, dfr, dl, scal, qt))
+    topk = _bm25_topk_from_agg(agg, k)
+    rel = (
+        agg.join(F.broadcast(nqdf), "query")
+        .filter(F.col("n_terms") == F.col("nq"))
+        .select("query", "doc_id")
+    )
     hit = topk.join(rel, ["query", "doc_id"]).groupBy("query").agg(
         F.min("rnk").alias("frr"),
         F.count("*").cast("long").alias("n_hits"),
@@ -475,20 +467,6 @@ def bm25_relevance_eval(
                 / F.lit(float(k))
             ).alias("precision_at_k"),
         )
-    )
-
-
-def _bm25_score_topk(
-    spark,
-    tf: DataFrame,
-    dfr: DataFrame,
-    dl: DataFrame,
-    scal: DataFrame,
-    qt: DataFrame,
-    k: int,
-) -> DataFrame:
-    return _bm25_topk_from_agg(
-        _bm25_scored_agg(tf, dfr, dl, scal, qt), k
     )
 
 

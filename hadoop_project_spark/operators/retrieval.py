@@ -249,8 +249,8 @@ def hard_negatives_for_anchors(
     anchors: DataFrame,
     exclude_pairs: DataFrame,
     k: int,
+    sets: DataFrame,
     df_cap: int = NEG_SHINGLE_DF_CAP,
-    sets: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k HARD NEGATIVES per anchor: documents that share a
     (df-capped) 3-shingle with the anchor — lexically close at the
@@ -269,38 +269,35 @@ def hard_negatives_for_anchors(
     positive pairs — a tiny fraction of the corpus); scoring joins the
     per-doc distinct token ARRAYS only for the bounded candidate set.
     Returns (query_id, neighbor_id, score, rank).
+
+    ``sets`` is the scoring relation ``eager_pin(doc_token_sets(docs))``
+    for the same corpus, pinned by the caller (contrastive_pairs builds
+    it concurrently with its own blocking pin, guide §2.6). Two guards
+    check what is checkable here and raise ValueError otherwise: its
+    column NAMES must be exactly {doc_id, ts, n} — no column missing,
+    none extra, order free, types not checked — and it must already be
+    persisted (an unpinned relation recomputes the corpus tokenization
+    once per consuming exchange: the anchor-side and candidate-side
+    scoring exchanges start concurrently). Provenance — that it was
+    built from ``docs`` — remains the caller's promise.
     """
-    from hadoop_project_spark.execution import eager_pin, pin
+    from hadoop_project_spark.execution import pin
     from hadoop_project_spark.operators import dedup as dd
 
-    # EAGER pin: the anchor-side and candidate-side scoring exchanges
-    # are submitted concurrently at job start, so a lazy persist loses
-    # the race and the corpus tokenization computes twice anyway (the
-    # documented eager_pin failure mode; review finding x2). A caller
-    # may pass the relation ALREADY pinned (doc_token_sets) when it
-    # overlapped the pin with its own independent build jobs.
-    if sets is None:
-        sets = eager_pin(doc_token_sets(docs))
-    else:
-        # Contract (ADVICE r12 #1): a caller-supplied relation must BE
-        # doc_token_sets(docs) for the same corpus, already pinned — a
-        # mismatched or unpinned frame silently yields wrong/slow
-        # negatives. The schema is checkable here; provenance remains
-        # the caller's docstring-level promise.
-        expected = {"doc_id", "ts", "n"}
-        if set(sets.columns) != expected:
-            raise ValueError(
-                "hard_negatives_for_anchors: `sets` must be the pinned "
-                f"doc_token_sets relation (columns {sorted(expected)}), "
-                f"got columns {sets.columns}"
-            )
-        if sets.storageLevel == StorageLevel.NONE:
-            raise ValueError(
-                "hard_negatives_for_anchors: caller-supplied `sets` must "
-                "already be persisted (eager_pin(doc_token_sets(docs))) — "
-                "an unpinned relation recomputes the corpus tokenization "
-                "once per consuming exchange"
-            )
+    expected = {"doc_id", "ts", "n"}
+    if set(sets.columns) != expected:
+        raise ValueError(
+            "hard_negatives_for_anchors: `sets` must be the pinned "
+            f"doc_token_sets relation (columns {sorted(expected)}), "
+            f"got columns {sets.columns}"
+        )
+    if sets.storageLevel == StorageLevel.NONE:
+        raise ValueError(
+            "hard_negatives_for_anchors: `sets` must already be "
+            "persisted (eager_pin(doc_token_sets(docs))) — an unpinned "
+            "relation recomputes the corpus tokenization once per "
+            "consuming exchange"
+        )
     # pinned: the df aggregate, the corpus join side, and the anchor
     # join side all consume the exploded shingle stream
     sh = pin(dd.doc_shingles(docs))

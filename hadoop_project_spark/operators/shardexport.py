@@ -145,50 +145,32 @@ def export_file_stats(root: str) -> dict[int, tuple[tuple[str, int, int], ...]]:
 def incremental_shard_rewrite(
     spark: SparkSession,
     root: str,
-    v1_members: DataFrame | None,
     v2_members: DataFrame,
     dirty_ids: list[int],
-    surviving_ids: set[int] | None = None,
-    v1_written: bool = False,
+    surviving_ids: set[int],
 ) -> dict[int, bool]:
-    """The full incremental export: write v1 (all shards), snapshot,
-    dynamically overwrite only the dirty shards with their v2 rows
-    (removing all-dropped shard dirs), snapshot again. Returns the
-    measured per-shard ``reused`` map (shard untouched on disk).
+    """The incremental step over an export the caller already wrote at
+    ``root`` (write_shard_files of v1): snapshot, dynamically overwrite
+    only the dirty shards with their v2 rows (removing all-dropped
+    shard dirs), snapshot again. Returns the measured per-shard
+    ``reused`` map (shard untouched on disk).
 
     ``dirty_ids`` must be the CDC-derived dirty set; ``v2_members``
     rows outside it are ignored (filtered here) so callers can pass
-    the whole v2 relation.
-
-    Round-13 overlap hooks (guide §2.6): a caller that already knows
-    which dirty shards still have v2 rows passes ``surviving_ids``
-    (skipping this function's distinct-collect job — the driver query
-    derives both sets in ONE rollup it overlaps with the v1 write),
-    and a caller that wrote v1 itself — e.g. concurrently with that
-    rollup — passes ``v1_written=True`` (``v1_members`` is then
-    unused and may be None). Defaults reproduce the original
-    sequential protocol exactly."""
-    import shutil
-
-    if not v1_written:
-        shutil.rmtree(root, ignore_errors=True)
-        write_shard_files(v1_members, root)
+    the whole v2 relation. ``surviving_ids`` is the subset of
+    ``dirty_ids`` that still has v2 rows — the driver query derives
+    both sets in ONE rollup it overlaps with the v1 write (guide
+    §2.6)."""
     before = export_file_stats(root)
 
     dirty = [int(s) for s in dirty_ids]
-    dirty_rows = v2_members.filter(F.col("shard_id").isin(dirty))
-    surviving = (
-        {int(s) for s in surviving_ids}
-        if surviving_ids is not None
-        else {
-            int(r["shard_id"])
-            for r in dirty_rows.select("shard_id").distinct().collect()
-        }
-    )
+    surviving = {int(s) for s in surviving_ids}
     if surviving:
-        # dirty_rows only holds rows for shards in `surviving` by
-        # construction — no further filter needed
-        overwrite_dirty_shards(spark, root, dirty_rows)
+        # v2 rows of dirty shards exist only for shards in `surviving`
+        # — no further filter needed
+        overwrite_dirty_shards(
+            spark, root, v2_members.filter(F.col("shard_id").isin(dirty))
+        )
     remove_empty_dirty_shards(root, [s for s in dirty if s not in surviving])
 
     after = export_file_stats(root)

@@ -157,6 +157,41 @@ def lsh_bucket(vec_col: str, planes: list[list[float]]):
     return F.expr(f"cast({' + '.join(terms)} as bigint)")
 
 
+def _rerank_candidates(
+    cand: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    cosine_round: int | None,
+) -> DataFrame:
+    """Exact-cosine top-k over ANN candidate id pairs (query_id,
+    neighbor_id): the shared tail of lsh_topk and ivf_topk. A hot
+    bucket or cell can still concentrate one query's candidates — the
+    two-stage global_topk keeps the final window input at partitions ×
+    k regardless."""
+    q_full = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("q_vec"),
+        l2_norm(vec_col).alias("q_norm"),
+    )
+    c_full = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("c_vec"),
+        l2_norm(vec_col).alias("c_norm"),
+    )
+    cos = dot("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))
+    if cosine_round is not None:
+        cos = F.round(cos, cosine_round)
+    scored = (
+        cand.join(F.broadcast(q_full), "query_id")
+        .join(c_full, "neighbor_id")
+        .select("query_id", "neighbor_id", cos.alias("cosine"))
+    )
+    return global_topk(scored, k)
+
+
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -229,28 +264,9 @@ def lsh_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    q_full = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(vec_col).alias("q_norm"),
+    return _rerank_candidates(
+        cand, corpus, queries, k, id_col, vec_col, cosine_round
     )
-    c_full = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(vec_col).alias("c_norm"),
-    )
-    cos = dot("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))
-    if cosine_round is not None:
-        cos = F.round(cos, cosine_round)
-    scored = (
-        cand.join(F.broadcast(q_full), "query_id")
-        .join(c_full, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
-    # candidates are already bucket-bounded, but a hot bucket can still
-    # concentrate one query's candidates — the two-stage ranking keeps
-    # the final window input at partitions × k regardless
-    return global_topk(scored, k)
 
 
 def make_coarse_centroids(n_cells: int, dim: int, seed: int = 7) -> list[list[float]]:
@@ -355,25 +371,9 @@ def ivf_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
     )
-    q_full = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(vec_col).alias("q_norm"),
+    return _rerank_candidates(
+        cand, corpus, queries, k, id_col, vec_col, cosine_round
     )
-    c_full = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(vec_col).alias("c_norm"),
-    )
-    cos = dot("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))
-    if cosine_round is not None:
-        cos = F.round(cos, cosine_round)
-    scored = (
-        cand.join(F.broadcast(q_full), "query_id")
-        .join(c_full, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
-    return global_topk(scored, k)
 
 
 def blocked_pair_cosines(

@@ -1,40 +1,42 @@
-"""Count-min sketch heavy hitters: sketch pass -> candidate set ->
-exact verify pass.
+"""Count-min sketch heavy hitters over pinned per-key counts, plus the
+Bloom and HyperLogLog sketch primitives.
 
-The classic two-pass frequent-items shape for streams/corpora too large
-to hold exact per-key counts (Cormode & Muthukrishnan, J. Algorithms
-2005): pass 1 aggregates the stream into a D x W counter grid (here
-D=4 rows, W=2048 columns — a few KiB of state regardless of input
-size); every key's estimate min_r(cell[r, h_r(key)]) over-counts but
-NEVER under-counts, so thresholding estimates yields a candidate
-superset of the true heavy hitters with zero false negatives. Pass 2
-re-scans the stream restricted to the (small, broadcastable) candidate
-set and keeps exact counts that really clear the threshold.
+cm_heavy_hitters folds the key stream ONCE into an exact per-key count
+relation (key, cnt) and pins it (execution.eager_pin). Every later
+step derives from that pinned relation: the D x W count-min grid
+(D=4 rows, W=2048 columns; each key's count added to its D cells),
+the threshold totals (sum and number of counts), each key's estimate
+min_r(cell[r, h_r(key)]), the candidate set (estimates that clear the
+threshold), and the exact verify (the counts filtered to candidates).
+The estimate over-counts but NEVER under-counts, so the candidate set
+is a superset of the true heavy hitters with zero false negatives.
+
+Cost: the pin holds O(distinct keys) rows — the per-key relation the
+threshold's mean-count definition needs anyway — spilling to disk when
+it outgrows memory. In exchange the input stream is scanned once;
+unpinned, each of the grid, totals, estimate and verify steps re-runs
+the upstream key pipeline (4-5 corpus scans). The grid, estimate and
+verify are integer-identical to sketching the raw stream (the grid is
+the count-weighted sum of each key's cells).
 
 That no-false-negative property is what the DuckDB oracle certifies:
 the oracle computes plain exact heavy hitters — if the sketch path
 dropped a true hitter or admitted a light key, the hash would diverge.
 
-Round 13: cm_heavy_hitters folds the input stream ONCE into the
-per-key count relation and derives every pass (sketch grid, totals,
-candidate estimates, exact verify) from that pinned relation — the
-earlier literal two-pass form re-ran the upstream key pipeline once
-per consumer (4-5 corpus scans). The grid/estimate/threshold
-arithmetic is integer-identical (weighted sums of counts); the
-cache is O(distinct keys), the cardinality the old distinct pass
-already paid, not O(corpus).
-
 Hashing is md5-based (functions/text.py module doc: engine-portable,
 unlike F.hash/xxhash64), row-salted as ``md5(r || ':' || key)``.
 
-Scale shape (100 TB): pass 1 is one partial-aggregated groupBy over
-(row, col) — 8192 groups total, so the combiner collapses everything
-map-side and the shuffle is O(partitions * 8192) regardless of key
-cardinality. Pass 2 is a broadcast semi-join (candidate set is bounded
-by W/threshold-headroom) followed by one exact groupBy over candidates
-only. Driver state: none. The reference's word-count-with-combiner
-(WordCount1/src/main/java/WordCount.java:24, SURVEY.md §2 A1) is the
-exact-count special case; this is its bounded-memory scale path.
+Scale shape (100 TB): the per-key count is one partial-aggregated
+groupBy; the grid is one groupBy over (row, col) — at most D x W =
+8192 groups, combined map-side; the candidate estimates are broadcast
+joins against the grid rows; the verify is a broadcast join of the
+pinned counts against the (small) candidate set. Driver state: none.
+The bounded-state form — a grid of a few KiB whatever the key
+cardinality, with no per-key state — is cm_sketch, which the streaming
+sketch sink folds per micro-batch (streaming/sketch.py);
+cm_heavy_hitters does not implement it. The reference's
+word-count-with-combiner (WordCount1/src/main/java/WordCount.java:24,
+SURVEY.md §2 A1) is the exact-count special case.
 """
 
 from __future__ import annotations

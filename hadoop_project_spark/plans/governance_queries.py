@@ -39,7 +39,10 @@ actually gates on.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import operator
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from hadoop_project_spark.catalog import load_table
 from hadoop_project_spark.execution import (
@@ -313,21 +316,7 @@ def part_copurchase_rank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    # probe-side widen: same rationale as _pr_copurchase_edges
-    a = widen_for_compute(li).alias("a")
-    b = li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _copurchase_pairs(li, operator.ne).distinct()
     # three consumers below (deg, contrib, nodes-assembly) — persist or
     # the 2.4M-row join+distinct at sf0.1 re-runs per branch (measured:
     # 3.11 s -> 2.0 s median); tracked pin so release_pins() covers it
@@ -392,28 +381,30 @@ _PRI_UPDATE_EXPR = (
 )
 
 
-def _pr_copurchase_edges(li: DataFrame) -> DataFrame:
-    """Distinct (src, dst) part co-purchase edges — parts sharing an
-    order; per-order fanout bounded by order size, linear in lineitem.
+def _copurchase_pairs(
+    li: DataFrame, keep: Callable[[Column, Column], Column]
+) -> DataFrame:
+    """(src, dst) part pairs sharing an order, one row per shared
+    order, kept where ``keep(src, dst)`` holds (``operator.ne`` for the
+    directed PageRank edges, ``operator.lt`` for the undirected affinity
+    pairs); per-order fanout bounded by order size, linear in lineitem.
+    Callers add their own tail: ``distinct`` or a support filter.
 
     The self-join broadcasts one side, so the whole O(fanout) pair
-    expansion + partial distinct runs on the PROBE side's scan tasks —
-    widen that side (round 13: the single-file local lineitem packs
-    into 3 splits, and the 1.9 s probe stage sat on 3 of 32 cores;
-    no-op on any real multi-file cluster table, execution.py)."""
+    expansion + the callers' partial aggregate run on the PROBE side's
+    scan tasks — widen that side (round 13: the single-file local
+    lineitem packs into 3 splits, and the 1.9 s probe stage sat on 3 of
+    32 cores; no-op on any real multi-file cluster table,
+    execution.py)."""
     a = widen_for_compute(li).alias("a")
     b = li.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        .distinct()
+    return a.join(
+        b,
+        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+        & keep(F.col("a.l_partkey"), F.col("b.l_partkey")),
+    ).select(
+        F.col("a.l_partkey").alias("src"),
+        F.col("b.l_partkey").alias("dst"),
     )
 
 _SQL_PR_EDGES = """e AS MATERIALIZED (
@@ -482,7 +473,7 @@ def part_pagerank_iterated(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    edges = pin(_pr_copurchase_edges(li))
+    edges = pin(_copurchase_pairs(li, operator.ne).distinct())
     deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
     # out-degree folded into the cached edge relation ONCE; each
     # iteration then joins the RANK side by BROADCAST (the rank vector
@@ -561,7 +552,7 @@ def part_pagerank_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    edges = pin(_pr_copurchase_edges(li))
+    edges = pin(_copurchase_pairs(li, operator.ne).distinct())
     deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
     nodes = li.select(F.col("l_partkey").alias("part_id")).distinct()
     # the two bucketed writes are independent (separate tables; the
@@ -965,22 +956,12 @@ def part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    # probe-side widen: same rationale as _pr_copurchase_edges
-    a, b = widen_for_compute(li).alias("a"), li.alias("b")
     edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("a"),
-            F.col("b.l_partkey").alias("b"),
-        )
-        .groupBy("a", "b")
+        _copurchase_pairs(li, operator.lt)
+        .groupBy("src", "dst")
         .agg(F.count("*").alias("s"))
         .filter(F.col("s") >= 2)
-        .select("a", "b")
+        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
     )
     return triangle_count(edges)
 

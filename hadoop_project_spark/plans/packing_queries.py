@@ -461,8 +461,7 @@ def incremental_shard_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # any member still present in v2 — v2 = assign ⋈ corpus inner, so
     # "present" ≡ non-null mark), overlapped with the v1 full-export
     # write, which depends on neither (guide §2.6). O(#shards) driver
-    # rows, exactly as before; the operator's own distinct-collect and
-    # v1-write phases are skipped via its round-13 overlap hooks.
+    # rows.
     marks = assign.join(
         corpus.select("doc_id", "n_cut_tokens"), "doc_id", "left"
     )
@@ -493,10 +492,7 @@ def incremental_shard_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving = {
         int(r["shard_id"]) for r in roll if r["dirty"] == 1 and r["surv"] == 1
     }
-    reused = se.incremental_shard_rewrite(
-        spark, root, None, v2, dirty_ids,
-        surviving_ids=surviving, v1_written=True,
-    )
+    reused = se.incremental_shard_rewrite(spark, root, v2, dirty_ids, surviving)
 
     back = spark.read.parquet(root).select(
         F.col("shard_id").cast("long").alias("shard_id"),

@@ -621,24 +621,30 @@ def _semdedup_centroids() -> list[list[float]]:
     return SEMDEDUP_CENTROIDS
 
 
-def _sql_semdedup_oracle() -> str:
+def _sql_semdedup_oracle(planes: list[list[float]] | None = None) -> str:
     """Full SQL twin of semantic_dedup_decisions: same centroid
     literals, argmin cell assignment, within-cell cosine pairs, and the
-    (cdist, vec_id) keep rule."""
+    (cdist, vec_id) keep rule. With ``planes`` (the bucketed twin) the
+    blocks refine to (cell, sign-LSH bucket); the keep rule is the
+    same."""
     cents = _semdedup_centroids()
     ds = ", ".join(_sql_sqdist("embedding", c) for c in cents)
+    bkt_col = bkt_eq = ""
+    if planes is not None:
+        bkt_col = f",\n             {_sql_lsh_bucket('embedding', planes)} AS bkt"
+        bkt_eq = " AND a.bkt = b.bkt"
     return f"""
     WITH assigned AS (
       SELECT vec_id, embedding,
              CAST(list_position(dsl, list_min(dsl)) - 1 AS INT) AS cell,
-             list_min(dsl) AS cdist
+             list_min(dsl) AS cdist{bkt_col}
       FROM (SELECT vec_id, embedding, [{ds}] AS dsl FROM embeddings)
     ),
     pairs AS (
       SELECT a.vec_id AS va, b.vec_id AS vb,
              a.cdist AS ca, b.cdist AS cb
       FROM assigned a JOIN assigned b
-        ON a.cell = b.cell AND a.vec_id < b.vec_id
+        ON a.cell = b.cell{bkt_eq} AND a.vec_id < b.vec_id
       WHERE {_sql_cosine("a.embedding", "b.embedding")} >= {SEMDEDUP_TAU}
     ),
     nbrs AS (
@@ -661,6 +667,64 @@ def _sql_semdedup_oracle() -> str:
     LEFT JOIN nbrs n USING (vec_id)
     LEFT JOIN losers l USING (vec_id)
     """
+
+
+def _semdedup_decide(assigned: DataFrame, block_col: str) -> DataFrame:
+    """The SemDeDup decision table over a pinned ``assigned`` relation
+    (vec_id, embedding, cell, cdist, ``block_col``): within-block cosine
+    pairs, the (cdist, vec_id) keep rule, neighbour counts, and one
+    output row per vector. Shared by both semantic-dedup builders, which
+    differ only in how they block."""
+    raw = sim.blocked_pair_cosines(assigned, SEMDEDUP_TAU, block_col=block_col)
+    # authoritative round-then-threshold on the exact doubles (the Gram
+    # margin only guards the 9dp boundary) — same contract as
+    # embedding_neardup_pairs. eager_pin: pairs feeds the precedence
+    # join AND the neighbor-count aggregate — without the pin each
+    # consumer re-runs the whole Gram-scoring stage.
+    pairs = eager_pin(
+        raw.filter(F.round("cosine", 9) >= SEMDEDUP_TAU).select(
+            "vec_a", "vec_b"
+        )
+    )
+    # the cdist lookup is per-VECTOR (linear) joined against per-PAIR
+    # rows (superlinear): broadcast the small side so the pair relation
+    # never shuffles; at 100 TB this becomes a co-partitioned join on
+    # the same bucketing the pair generation already has
+    cd = F.broadcast(assigned.select("vec_id", "cdist"))
+    pj = (
+        pairs.join(
+            cd.select(F.col("vec_id").alias("vec_a"), F.col("cdist").alias("ca")),
+            "vec_a",
+        ).join(
+            cd.select(F.col("vec_id").alias("vec_b"), F.col("cdist").alias("cb")),
+            "vec_b",
+        )
+    )
+    losers = pj.select(
+        F.when(F.col("ca") > F.col("cb"), F.col("vec_a"))
+        .otherwise(F.col("vec_b"))  # ties: vec_a < vec_b, so b drops
+        .alias("vec_id")
+    ).distinct()
+    nbrs = (
+        pairs.select(F.col("vec_a").alias("vec_id"))
+        .unionAll(pairs.select(F.col("vec_b").alias("vec_id")))
+        .groupBy("vec_id")
+        .agg(F.count("*").alias("n_dup"))
+    )
+    return (
+        assigned.select("vec_id", "cell", "cdist")
+        .join(nbrs, "vec_id", "left")
+        .join(losers.withColumn("is_loser", F.lit(True)), "vec_id", "left")
+        .select(
+            F.col("vec_id").cast("long").alias("vec_id"),
+            F.col("cell").cast("int").alias("cell"),
+            F.col("cdist").alias("cdist"),
+            F.coalesce(F.col("n_dup"), F.lit(0))
+            .cast("long")
+            .alias("n_dup_neighbors"),
+            F.coalesce(F.col("is_loser"), F.lit(False)).alias("dropped"),
+        )
+    )
 
 
 @register(
@@ -715,56 +779,7 @@ def semantic_dedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_asg.cdist").alias("cdist"),
         )
     )
-    raw = sim.blocked_pair_cosines(assigned, SEMDEDUP_TAU, block_col="cell")
-    # authoritative round-then-threshold on the exact doubles (the Gram
-    # margin only guards the 9dp boundary) — same contract as
-    # embedding_neardup_pairs. eager_pin: pairs feeds the precedence
-    # join AND the neighbor-count aggregate — without the pin each
-    # consumer re-runs the whole Gram-scoring stage.
-    pairs = eager_pin(
-        raw.filter(F.round("cosine", 9) >= SEMDEDUP_TAU).select(
-            "vec_a", "vec_b"
-        )
-    )
-    # the cdist lookup is per-VECTOR (linear) joined against per-PAIR
-    # rows (superlinear): broadcast the small side so the pair relation
-    # never shuffles; at 100 TB this becomes a co-partitioned join on
-    # the same bucketing the pair generation already has
-    cd = F.broadcast(assigned.select("vec_id", "cdist"))
-    pj = (
-        pairs.join(
-            cd.select(F.col("vec_id").alias("vec_a"), F.col("cdist").alias("ca")),
-            "vec_a",
-        ).join(
-            cd.select(F.col("vec_id").alias("vec_b"), F.col("cdist").alias("cb")),
-            "vec_b",
-        )
-    )
-    losers = pj.select(
-        F.when(F.col("ca") > F.col("cb"), F.col("vec_a"))
-        .otherwise(F.col("vec_b"))  # ties: vec_a < vec_b, so b drops
-        .alias("vec_id")
-    ).distinct()
-    nbrs = (
-        pairs.select(F.col("vec_a").alias("vec_id"))
-        .unionAll(pairs.select(F.col("vec_b").alias("vec_id")))
-        .groupBy("vec_id")
-        .agg(F.count("*").alias("n_dup"))
-    )
-    return (
-        assigned.select("vec_id", "cell", "cdist")
-        .join(nbrs, "vec_id", "left")
-        .join(losers.withColumn("is_loser", F.lit(True)), "vec_id", "left")
-        .select(
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.col("cell").cast("int").alias("cell"),
-            F.col("cdist").alias("cdist"),
-            F.coalesce(F.col("n_dup"), F.lit(0))
-            .cast("long")
-            .alias("n_dup_neighbors"),
-            F.coalesce(F.col("is_loser"), F.lit(False)).alias("dropped"),
-        )
-    )
+    return _semdedup_decide(assigned, "cell")
 
 
 _SEMDEDUP_BUCKET_PLANES_SEED = 113
@@ -777,52 +792,9 @@ def _semdedup_bucket_planes() -> list[list[float]]:
     )
 
 
-def _sql_semdedup_bucketed_oracle() -> str:
-    """Oracle for the bucketed twin: identical keep rule, blocks
-    refined to (cell, sign-LSH bucket)."""
-    cents = _semdedup_centroids()
-    planes = _semdedup_bucket_planes()
-    ds = ", ".join(_sql_sqdist("embedding", c) for c in cents)
-    return f"""
-    WITH assigned AS (
-      SELECT vec_id, embedding,
-             CAST(list_position(dsl, list_min(dsl)) - 1 AS INT) AS cell,
-             list_min(dsl) AS cdist,
-             {_sql_lsh_bucket("embedding", planes)} AS bkt
-      FROM (SELECT vec_id, embedding, [{ds}] AS dsl FROM embeddings)
-    ),
-    pairs AS (
-      SELECT a.vec_id AS va, b.vec_id AS vb,
-             a.cdist AS ca, b.cdist AS cb
-      FROM assigned a JOIN assigned b
-        ON a.cell = b.cell AND a.bkt = b.bkt AND a.vec_id < b.vec_id
-      WHERE {_sql_cosine("a.embedding", "b.embedding")} >= {SEMDEDUP_TAU}
-    ),
-    nbrs AS (
-      SELECT vec_id, COUNT(*) AS n_dup FROM (
-        SELECT va AS vec_id FROM pairs
-        UNION ALL
-        SELECT vb AS vec_id FROM pairs
-      ) GROUP BY vec_id
-    ),
-    losers AS (
-      SELECT DISTINCT CASE WHEN ca > cb THEN va ELSE vb END AS vec_id
-      FROM pairs
-    )
-    SELECT CAST(a.vec_id AS BIGINT) AS vec_id,
-           CAST(a.cell AS INTEGER) AS cell,
-           a.cdist AS cdist,
-           CAST(COALESCE(n.n_dup, 0) AS BIGINT) AS n_dup_neighbors,
-           (l.vec_id IS NOT NULL) AS dropped
-    FROM assigned a
-    LEFT JOIN nbrs n USING (vec_id)
-    LEFT JOIN losers l USING (vec_id)
-    """
-
-
 @register(
     "semantic_dedup_bucketed",
-    oracle=_sql_semdedup_bucketed_oracle(),
+    oracle=_sql_semdedup_oracle(_semdedup_bucket_planes()),
     priority=10,  # round-7 new: self-promote into the driver window
     tags=("similarity", "dedup", "lsh", "extension"),
 )
@@ -864,47 +836,7 @@ def semantic_dedup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("blk2"),
         )
     )
-    raw = sim.blocked_pair_cosines(assigned, SEMDEDUP_TAU, block_col="blk2")
-    pairs = eager_pin(
-        raw.filter(F.round("cosine", 9) >= SEMDEDUP_TAU).select(
-            "vec_a", "vec_b"
-        )
-    )
-    cd = F.broadcast(assigned.select("vec_id", "cdist"))
-    pj = (
-        pairs.join(
-            cd.select(F.col("vec_id").alias("vec_a"), F.col("cdist").alias("ca")),
-            "vec_a",
-        ).join(
-            cd.select(F.col("vec_id").alias("vec_b"), F.col("cdist").alias("cb")),
-            "vec_b",
-        )
-    )
-    losers = pj.select(
-        F.when(F.col("ca") > F.col("cb"), F.col("vec_a"))
-        .otherwise(F.col("vec_b"))
-        .alias("vec_id")
-    ).distinct()
-    nbrs = (
-        pairs.select(F.col("vec_a").alias("vec_id"))
-        .unionAll(pairs.select(F.col("vec_b").alias("vec_id")))
-        .groupBy("vec_id")
-        .agg(F.count("*").alias("n_dup"))
-    )
-    return (
-        assigned.select("vec_id", "cell", "cdist")
-        .join(nbrs, "vec_id", "left")
-        .join(losers.withColumn("is_loser", F.lit(True)), "vec_id", "left")
-        .select(
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.col("cell").cast("int").alias("cell"),
-            F.col("cdist").alias("cdist"),
-            F.coalesce(F.col("n_dup"), F.lit(0))
-            .cast("long")
-            .alias("n_dup_neighbors"),
-            F.coalesce(F.col("is_loser"), F.lit(False)).alias("dropped"),
-        )
-    )
+    return _semdedup_decide(assigned, "blk2")
 
 
 # --- Product quantization (PQ / ADC) --------------------------------

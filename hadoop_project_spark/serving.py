@@ -44,6 +44,7 @@ metadata-only operation against a real (persistent) metastore.
 from __future__ import annotations
 
 import hashlib
+import operator
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -426,7 +427,7 @@ def ensure_served_pagerank_graph(
     from pyspark.sql import functions as F
 
     from hadoop_project_spark.plans.governance_queries import (
-        _pr_copurchase_edges,
+        _copurchase_pairs,
     )
     from hadoop_project_spark.sources.sinks import write_bucketed
 
@@ -459,7 +460,7 @@ def ensure_served_pagerank_graph(
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
         )
-        edges = eager_pin(_pr_copurchase_edges(li))
+        edges = eager_pin(_copurchase_pairs(li, operator.ne).distinct())
         deg = edges.groupBy("src").agg(
             F.count("*").cast("long").alias("out_deg")
         )

@@ -177,6 +177,21 @@ def test_phrase_guard_rejects_degenerate_inputs(spark):
         ix.phrase_occurrences(docs, ["a b", "   "])
 
 
+def test_bm25_relevance_eval_rejects_repeated_query_term(spark):
+    """The relevance set counts matched rows of the scoring aggregate
+    as distinct matched terms, which a repeated query term over-counts:
+    the eval raises instead of answering wrongly. The ranking itself
+    still accepts the query."""
+    import pytest
+
+    docs = spark.createDataFrame(
+        [Row(doc_id=1, text="a b c"), Row(doc_id=2, text="a a d")]
+    )
+    with pytest.raises(ValueError, match="repeat a term"):
+        ix.bm25_relevance_eval(docs, ["a b", "a a"], 3)
+    assert ix.bm25_topk(docs, ["a a"], 3).count() == 2
+
+
 def test_empty_document_contributes_no_terms(spark):
     """ADVICE r8: a document normalizing to the empty string yields
     ZERO postings (no '' term) — and the directory therefore skips it,

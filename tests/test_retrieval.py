@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hadoop_project_spark.catalog import load_table
+from hadoop_project_spark.execution import eager_pin
 from hadoop_project_spark.operators import retrieval as rt
 
 
@@ -117,7 +118,9 @@ def test_hard_negatives_exclude_positives_and_rank(spark):
     )
     anchors = spark.createDataFrame([(0,)], "anchor_id long")
     excl = spark.createDataFrame([(0, 1), (1, 0)], "anchor_id long, other_id long")
-    rows = rt.hard_negatives_for_anchors(docs, anchors, excl, k=5).collect()
+    rows = rt.hard_negatives_for_anchors(
+        docs, anchors, excl, k=5, sets=eager_pin(rt.doc_token_sets(docs))
+    ).collect()
     got = [(r["neighbor_id"], r["score"], r["rank"]) for r in sorted(rows, key=lambda r: r["rank"])]
     # equal scores tie-break on neighbor_id
     assert got == [(2, 3.0 / 7.0, 1), (3, 3.0 / 7.0, 2)]
@@ -134,8 +137,32 @@ def test_hard_negatives_df_cap_fuses_hot_shingles(spark):
     )
     anchors = spark.createDataFrame([(0,)], "anchor_id long")
     excl = spark.createDataFrame([], "anchor_id long, other_id long")
-    out = rt.hard_negatives_for_anchors(docs, anchors, excl, k=5, df_cap=3)
+    out = rt.hard_negatives_for_anchors(
+        docs,
+        anchors,
+        excl,
+        k=5,
+        sets=eager_pin(rt.doc_token_sets(docs)),
+        df_cap=3,
+    )
     assert out.count() == 0
+
+
+def test_hard_negatives_guard_the_caller_supplied_sets(spark):
+    """`sets` must have exactly the doc_token_sets columns and already
+    be persisted; either breach raises before any job runs."""
+    import pytest
+
+    docs = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
+    anchors = spark.createDataFrame([(0,)], "anchor_id long")
+    excl = spark.createDataFrame([], "anchor_id long, other_id long")
+    with pytest.raises(ValueError, match="persisted"):
+        rt.hard_negatives_for_anchors(
+            docs, anchors, excl, k=5, sets=rt.doc_token_sets(docs)
+        )
+    wide = eager_pin(rt.doc_token_sets(docs).withColumn("x", F.lit(1)))
+    with pytest.raises(ValueError, match="columns"):
+        rt.hard_negatives_for_anchors(docs, anchors, excl, k=5, sets=wide)
 
 
 def test_mmr_select_diversity_and_ties(spark):

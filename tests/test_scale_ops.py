@@ -375,23 +375,29 @@ def test_widen_for_compute_semantics(spark):
         widen_for_compute,
     )
 
+    target = spark.sparkContext.defaultParallelism
+    max_split = int(
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    )
+
     # tiny (8 KB estimate, far under SHIM_MIN_WORK_BYTES): identity
     tiny = spark.range(0, 1000).coalesce(1)
     assert plan_size_bytes(tiny) < SHIM_MIN_WORK_BYTES
-    assert widen_for_compute(tiny, min_parts=8) is tiny
+    assert widen_for_compute(tiny) is tiny
 
     # mid-size (>= the work floor, < target x maxPartitionBytes):
     # repartitioned to the target regardless of current splits
     mid = spark.range(0, 2 * SHIM_MIN_WORK_BYTES // 8).coalesce(1)
-    assert plan_size_bytes(mid) >= SHIM_MIN_WORK_BYTES
-    widened = widen_for_compute(mid, min_parts=8)
-    assert widened.rdd.getNumPartitions() == 8
+    assert SHIM_MIN_WORK_BYTES <= plan_size_bytes(mid) < target * max_split
+    widened = widen_for_compute(mid)
+    assert widened.rdd.getNumPartitions() == target
     assert widened.count() == 2 * SHIM_MIN_WORK_BYTES // 8
 
     # huge estimate (>= target x maxPartitionBytes): Spark's split
     # planning already provides the parallelism — identity, no exchange
-    huge = spark.range(0, 1 << 30)
-    assert widen_for_compute(huge, min_parts=8) is huge
+    huge = spark.range(0, target * max_split // 8)
+    assert plan_size_bytes(huge) >= target * max_split
+    assert widen_for_compute(huge) is huge
 
 
 def test_eager_pin_blocks_and_is_cache_released(spark):

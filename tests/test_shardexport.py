@@ -58,15 +58,21 @@ def test_incremental_rewrite_reuses_clean_shards_byte_for_byte(
     )
     dirty = [1, 2, 3]
 
-    # replicate the composed function's first step to capture v1 bytes
+    # the production protocol: the caller writes v1 itself ...
     se.write_shard_files(v1, root)
     clean_before = _shard_bytes(root, 0)
     dirty_before = _shard_bytes(root, 1)
 
-    # then drive the incremental path exactly as the query does
-    # (write_shard_files inside clears and rewrites v1 identically:
-    # deterministic single-file shards)
-    reused = se.incremental_shard_rewrite(spark, root, v1, v2, dirty)
+    # ... and passes the dirty shards that still have v2 rows
+    surviving = {
+        r.shard_id
+        for r in v2.filter(F.col("shard_id").isin(dirty))
+        .select("shard_id")
+        .distinct()
+        .collect()
+    }
+    assert surviving == {1, 2}
+    reused = se.incremental_shard_rewrite(spark, root, v2, dirty, surviving)
 
     assert reused == {0: True, 1: False, 2: False}
     # all-dropped shard: directory removed, not stale-served

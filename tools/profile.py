@@ -1,8 +1,9 @@
-"""Round-12 optimization profiler: per-query wall, per-JOB breakdown,
-and .explain("formatted") capture for the queries being optimized.
+"""Query profiler: per-query wall, per-JOB breakdown, and
+.explain("formatted") capture for the queries being optimized.
 
-Usage: python tools/profile_r13.py <tag> <query> [query ...]
-  tag: suffix for the plan files (plans/r13/<query>_<tag>.txt)
+Usage: python tools/profile.py <plan_dir> <tag> <query> [query ...]
+  plan_dir: directory the plan files go to (created if missing)
+  tag: suffix for the plan files (<plan_dir>/<query>_<tag>.txt)
 
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
 PROFILE_RUNS (default 3).
@@ -23,8 +24,12 @@ import statistics
 import sys
 import time
 import urllib.request
+from datetime import datetime
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# REPLACE the script's own directory on the path (not just prepend the
+# repo root): this file is named profile.py, and cProfile — imported by
+# pyspark — does `import profile`, which must find the stdlib module.
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 from hadoop_project_spark.execution import clear_query_state
 
@@ -40,9 +45,20 @@ def _rest(spark, path: str):
         return []
 
 
+def _job_ms(job: dict) -> float:
+    """Job wall in ms from the REST payload's submission/completion
+    timestamps; -1 for a job that has not completed."""
+    fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
+    if "completionTime" not in job:
+        return -1
+    return (
+        datetime.strptime(job["completionTime"], fmt)
+        - datetime.strptime(job["submissionTime"], fmt)
+    ).total_seconds() * 1000
+
+
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    plan_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     n_runs = int(os.environ.get("PROFILE_RUNS", "3"))
@@ -51,7 +67,7 @@ def main() -> None:
     from hadoop_project_spark.session import get_spark
 
     spark = get_spark(
-        app_name="hps-profile-r13",
+        app_name="hps-profile",
         cpus=cpus,
         shuffle_partitions=int(cpus),
         extra_conf={"spark.ui.enabled": "true"},
@@ -79,7 +95,7 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
 
-    os.makedirs("plans/r13", exist_ok=True)
+    os.makedirs(plan_dir, exist_ok=True)
     for name in names:
         spec = specs[name]
         builds, execs = [], []
@@ -107,7 +123,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        with open(f"plans/r13/{name}_{tag}.txt", "w") as fh:
+        with open(os.path.join(plan_dir, f"{name}_{tag}.txt"), "w") as fh:
             fh.write(plan)
         clear_query_state(spark)
         tot = [b + e for b, e in zip(builds, execs)]
@@ -121,18 +137,7 @@ def main() -> None:
         jobs = [j for j in _rest(spark, "jobs") if j["jobId"] > job_mark]
         jobs.sort(key=lambda j: j["jobId"])
         for j in jobs:
-            dur = j.get("duration_ms")
-            if dur is None:
-                try:
-                    from datetime import datetime
-
-                    fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-                    dur = (
-                        datetime.strptime(j["completionTime"], fmt)
-                        - datetime.strptime(j["submissionTime"], fmt)
-                    ).total_seconds() * 1000
-                except Exception:  # noqa: BLE001
-                    dur = -1
+            dur = _job_ms(j)
             desc = (j.get("description") or j.get("name") or "")[:110]
             print(
                 f"  job {j['jobId']:>4}  {dur/1000:7.2f}s "
