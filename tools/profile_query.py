@@ -1,7 +1,7 @@
 """Query profiler: per-query wall, per-JOB breakdown, and
 .explain("formatted") capture for the queries being optimized.
 
-Usage: python tools/profile.py <plan_dir> <tag> <query> [query ...]
+Usage: python tools/profile_query.py <plan_dir> <tag> <query> [query ...]
   plan_dir: directory the plan files go to (created if missing)
   tag: suffix for the plan files (<plan_dir>/<query>_<tag>.txt)
 
@@ -26,10 +26,7 @@ import time
 import urllib.request
 from datetime import datetime
 
-# REPLACE the script's own directory on the path (not just prepend the
-# repo root): this file is named profile.py, and cProfile — imported by
-# pyspark — does `import profile`, which must find the stdlib module.
-sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hadoop_project_spark.execution import clear_query_state
 
