@@ -4,8 +4,9 @@ Four families, each designed around Spark's shuffle model so cost is
 O(n) + O(candidate pairs) — never an n² cross join:
 
 * exact        — hash-groupBy on a canonical fingerprint.
-* MinHash+LSH  — shingle → K min-hashes → band keys → shuffle-join on
-                 band key → verify exact Jaccard on candidates only.
+* MinHash+LSH  — per-doc distinct shingle set → K min-hashes → band
+                 keys → shuffle-join on band key → exact Jaccard of the
+                 candidates' sets (array_intersect), candidates only.
 * SimHash      — 60-bit weighted token hash → chunk-banding (pigeonhole:
                  hamming ≤ 3 ⇒ one of 4 15-bit chunks equal) → verify.
 * n-gram Jaccard — char-n-gram blocking restricted to *rare* grams
@@ -26,9 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from hadoop_project_spark.execution import eager_pin, widen_for_compute
+from hadoop_project_spark.execution import eager_pin, pin, widen_for_compute
 from hadoop_project_spark.functions.text import (
-    md5_i64,
     md5_i64_sql,
     ngrams_from_normalized,
     normalize_text,
@@ -60,23 +60,20 @@ def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
 
 
 def doc_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3) -> DataFrame:
-    """Distinct (id, shingle) pairs — the set representation used by both
-    MinHash signatures and exact Jaccard verification.
+    """Distinct (id, shingle) pairs, deduped by a global distinct() —
+    the exploded set form the sketch, corpus and retrieval operators
+    and the streaming gate consume. minhash_lsh_pairs uses
+    doc_shingle_sets instead (deduped per row, no exchange).
 
     Tokenization is materialized in its own projection before the
     shingle transform: expressions referenced inside a transform lambda
     re-evaluate per element, so inlining split(normalize(...)) would run
     the regex once per shingle (6× measured slowdown at sf0.1).
 
-    (A per-doc array_distinct set formulation with array_min signatures
-    and array_intersect verification was benchmarked and is markedly
-    SLOWER end-to-end for THIS path — re-verified round 6 with a persist
-    anchor on the array table: 5.1 s vs 3.1 s at sf0.1, because the
-    16 min-hash aggregates want one pass over the exploded stream with
-    partial aggregation, which 16 transform+array_min passes can't match.
-    The char-ngram path is the mirror image — see ngram_jaccard_pairs,
-    where the persisted-array form wins 2.4 s vs 9.2 s because nothing
-    downstream needs a full-relation aggregate over the exploded set.)"""
+    (Round 6 measured SIGNATURES as 16 transform + array_min passes over
+    per-doc set arrays markedly SLOWER than the min-hash aggregate over
+    an exploded stream — 5.1 s vs 3.1 s at sf0.1 — so minhash_lsh_pairs
+    keeps the aggregate and feeds it by exploding doc_shingle_sets.)"""
     # widen on the RAW (id, text) projection: the normalize regex and
     # the split then run AFTER the exchange, so a split-starved scan
     # (single-row-group parquet) only pays serial decompression, not
@@ -101,6 +98,53 @@ def doc_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     )
 
 
+def doc_shingle_sets(docs: DataFrame, k: int = 3) -> DataFrame:
+    """(doc_id, shs, n): each document's DISTINCT k-word shingles as a
+    sorted array plus its size — deduped per row with array_distinct
+    BEFORE any explode, so "distinct (doc, sh)" costs no shuffle
+    (measured 3x cheaper than explode-then-global-distinct at sf0.1).
+    Equal to doc_shingles as a set because doc_id is unique per row.
+    Shingling runs on a MATERIALIZED token array (see
+    functions/text.py:shingles_from_tokens for the 6x re-evaluation
+    pitfall this avoids). The one set builder of the MinHash and
+    prefix-filter (operators/ssjoin.py) pipelines."""
+    # widen on raw text so the normalize/split regex runs post-exchange.
+    # work_factor 32: shingle + sort_array over ~30x-decompressing text
+    # — compressed-byte stats left this whole build on ONE task at
+    # bench scale (profiled as an 8.7 s single-task pin job inside
+    # lsh_band_sweep, round 12; same class as doc_shingles)
+    toks = widen_for_compute(
+        docs.select("doc_id", "text"), work_factor=32
+    ).select("doc_id", F.split(normalize_text("text"), " ").alias("t"))
+    return toks.select(
+        "doc_id",
+        F.sort_array(
+            F.array_distinct(shingles_from_tokens(F.col("t"), k))
+        ).alias("shs"),
+    ).withColumn("n", F.size("shs"))
+
+
+def set_overlap(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_inter, n_union) for candidate pairs, from the
+    doc_shingle_sets arrays: cand ⋈ sets (a side) ⋈ sets (b side),
+    |A∩B| = size(array_intersect), |A∪B| = |A| + |B| − |A∩B| — integer
+    counts, so each caller's Jaccard or threshold test is exact. Cost
+    is O(candidates × set size); the shingle stream is never joined.
+    The one verify tail of minhash_lsh_pairs and
+    ssjoin.prefix_filtered_jaccard_pairs_from_sets."""
+    inter = F.size(F.array_intersect(F.col("sa.shs"), F.col("sb.shs")))
+    return (
+        cand.join(sets.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sets.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
+        .select(
+            "doc_a",
+            "doc_b",
+            inter.alias("n_inter"),
+            (F.col("sa.n") + F.col("sb.n") - inter).alias("n_union"),
+        )
+    )
+
+
 def minhash_signatures(shingles: DataFrame) -> DataFrame:
     """K min-hashes per doc, as 60-bit INTEGER hashes (functions/text.
     md5_i64, engine-portable like every hash here).
@@ -114,9 +158,13 @@ def minhash_signatures(shingles: DataFrame) -> DataFrame:
     per partition, ~7 MB. Min over the top-60-bits integer is exactly
     as valid a MinHash as min over the full hex string (any uniform
     hash family works); the DuckDB oracle applies the same truncation,
-    so candidate sets still match bit-for-bit."""
+    so candidate sets still match bit-for-bit.
+
+    The 16 aggregates are Spark SQL text (functions/text.md5_i64_sql):
+    one JVM-side parse each instead of a py4j round-trip per Column
+    node, the same move as simhash_signatures."""
     aggs = [
-        F.min(md5_i64(F.col("sh"), seed=i)).alias(f"h{i}")
+        F.expr(f"min({md5_i64_sql('sh', i)})").alias(f"h{i}")
         for i in range(NUM_HASHES)
     ]
     return shingles.groupBy("doc_id").agg(*aggs)
@@ -142,20 +190,16 @@ def lsh_band_keys_config(signatures: DataFrame, n_bands: int) -> DataFrame:
             f"n_bands must divide NUM_HASHES={NUM_HASHES}, got {n_bands}"
         )
     rows_per_band = NUM_HASHES // n_bands
-    bands = []
-    for b in range(n_bands):
-        cols = [
-            F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)
-        ]
-        bands.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", *[c.cast("string") for c in cols])).alias("key"),
-            )
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'key', md5(concat_ws('|', "
+        + ", ".join(
+            f"cast(h{b * rows_per_band + r} as string)"
+            for r in range(rows_per_band)
         )
-    return signatures.select(
-        "doc_id", F.explode(F.array(*bands)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        + ")))"
+        for b in range(n_bands)
+    )
+    return signatures.selectExpr("doc_id", f"inline(array({bands}))")
 
 
 def lsh_candidate_pairs(band_keys: DataFrame) -> DataFrame:
@@ -176,88 +220,52 @@ def lsh_band_relation(docs: DataFrame) -> DataFrame:
     """Eager-pinned (doc_id, band, key) LSH index — the full
     shingle → signature → band-key pipeline materialized once.
 
-    Factored here (round 8, VERDICT r7 item 4) because every consumer
-    SELF-JOINS this relation (dedup_minhash_lsh's candidate stage, the
-    streaming gate's batch twin): without the pin, both join sides
-    recompute the 16-hash signature aggregate from raw text inside one
-    job — the gate twin was paying exactly that (the surface's slowest
-    sf0.1 query; measured 5.1 → 0.6 s at sf0.1 and 7.1 → 1.5 s at sf1
-    after the pin, shuffle 1.3 → 0.03 MB). The relation is
+    Factored here (round 8, VERDICT r7 item 4) because its consumer,
+    the streaming gate's batch twin, SELF-JOINS this relation (as
+    minhash_lsh_pairs self-joins its own pinned band keys): without the
+    pin, both join sides recompute the 16-hash signature aggregate from
+    raw text inside one job — the gate twin was paying exactly that
+    (the surface's slowest sf0.1 query; measured 5.1 → 0.6 s at sf0.1
+    and 7.1 → 1.5 s at sf1 after the pin, shuffle 1.3 → 0.03 MB). The relation is
     O(docs × NUM_BANDS) short rows — the LSH table a real feature
     store would persist."""
     return eager_pin(lsh_band_keys(minhash_signatures(doc_shingles(docs))))
 
 
-def jaccard_verify(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
-    """Exact Jaccard on candidate pairs via set-intersection counting:
-    |A∩B| from a join of the two shingle sets, |A∪B| = |A|+|B|-|A∩B|.
-    Cost is proportional to candidates × shared shingles, not n².
-
-    Round 6 restructure, driven by the sf1 shuffle telemetry: the old
-    form exchanged the FULL shingle relation twice (once per pair
-    side, 2 × 589 MB at sf1 — the engine's biggest shuffle). The
-    candidate relation is small by construction (LSH/rare-gram blocked),
-    so it is materialized eagerly (execution.eager_pin — a blocking
-    persist+count; a lazy persist would re-run the candidate pipeline
-    once per consumer branch within the single job) and then
-
-      * the a-side intersection join BROADCASTS the pairs — the shingle
-        relation streams from cache with no exchange at all;
-      * the b-side is first RESTRICTED to candidate doc_bs by a
-        broadcast semi-join before its (doc_b, sh) exchange, so only
-        candidate docs' shingles shuffle.
-
-    Measured at sf1: verify-path shuffle 1,178 MB → ~90 MB, wall
-    14.7 s → ~8 s for the full minhash query. At extreme scale, if the
-    candidate relation ever outgrew broadcast, swap both broadcasts for
-    shuffle semi-joins — the restriction logic is unchanged."""
-    pairs = eager_pin(pairs)
-    counts = shingles.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    sa = shingles.select(F.col("doc_id").alias("doc_a"), "sh")
-    sb = shingles.select(F.col("doc_id").alias("doc_b"), "sh")
-    cand_b = pairs.select("doc_b").distinct()
-    sb_restricted = sb.join(F.broadcast(cand_b), "doc_b")
-    inter = (
-        sa.join(F.broadcast(pairs), "doc_a")
-        .join(sb_restricted, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(ca, "doc_a").join(cb, "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            (F.col("n_inter").cast("double")
-             / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double")
-             ).alias("jaccard"),
-        )
-    )
-
-
 def minhash_lsh_pairs(docs: DataFrame, k_shingle: int = 3) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline → (doc_a, doc_b, jaccard).
 
-    The exploded shingle stream is pinned: the signature aggregate and
-    both verify-side probes consume it, and the interpreted shingle
-    transform re-runs per consumer otherwise (A/B at sf0.1, noop sink:
-    2.6 s -> 1.8 s warm; distinct from the losing array-table pin the
-    doc_shingles docstring records — the EXPLODED stream is what the
-    min-hash aggregate wants, it's only the transform we avoid redoing).
-    """
-    from hadoop_project_spark.execution import pin
+    Plan: (1) per-doc distinct shingle sets (doc_shingle_sets — deduped
+    inside the map task, no exchange), pinned lazily: the signature
+    stage and both verify sides read them; (2) the sets re-explode into
+    the (doc_id, sh) stream the 16-hash min aggregate wants; (3) band
+    keys, eager-pinned before the candidate self-join; (4) exact
+    Jaccard of each candidate pair from its two sets (set_overlap), the
+    same integer operands as the oracle's count form. A band collision
+    implies a shared shingle (equal 60-bit min-hashes), so every
+    candidate has |A∩B| ≥ 1 and the oracle's inner intersection join
+    drops none of them.
 
-    sh = pin(doc_shingles(docs, k=k_shingle))
-    # band keys materialize BEFORE the candidate self-join: both join
-    # sides would otherwise re-run the signature aggregate + 16-hash
-    # md5 pass inside one job (lazy persist can't help two concurrent
-    # stages of the same job — observed as twin 560 MB/50-100 s stages
-    # in the sf1 stage telemetry). 400k small rows; also truncates the
-    # lineage under jaccard_verify's pairs checkpoint.
+    Measured against the earlier explode → global distinct() stream
+    with a verify that pinned the candidate pairs (a second blocking
+    job) and joined the whole stream four ways, on 4 vCPUs: traced
+    warm pass of the compute_heavy benchmark workload (sf0.01) 25 → 14
+    Spark jobs, shuffle 0.76 → 0.07 MB, blocking pins 2 → 1,
+    query_p90_s 0.59x; sf0.1 fresh process, median of 6 interleaved
+    pairs, cold 18.3 → 13.6 s, warm 5.5 → 3.3 s."""
+    sets = pin(doc_shingle_sets(docs, k_shingle))
+    sh = sets.select("doc_id", F.explode("shs").alias("sh"))
+    # band keys materialize BEFORE the candidate self-join: AQE does
+    # not reuse the two join sides' exchanges, so both would re-run the
+    # signature aggregate + 16-hash md5 pass inside one job (observed
+    # as twin 560 MB/50-100 s stages in the sf1 stage telemetry).
     bk = eager_pin(lsh_band_keys(minhash_signatures(sh)))
-    cands = lsh_candidate_pairs(bk)
-    return jaccard_verify(cands, sh)
+    return set_overlap(lsh_candidate_pairs(bk), sets).select(
+        "doc_a",
+        "doc_b",
+        (F.col("n_inter").cast("double") / F.col("n_union").cast("double"))
+        .alias("jaccard"),
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from hadoop_project_spark.execution import eager_pin, widen_for_compute
 from hadoop_project_spark.functions.text import normalize_text, shingles_from_tokens
+from hadoop_project_spark.operators import dedup as dd
 
 # Jaccard threshold as an exact rational p/q so the verify comparison is
 # integer-only on both engines: J >= 1/2  <=>  2*inter >= union.
@@ -101,31 +102,11 @@ def _doc_bitmap(shs: F.Column) -> F.Column:
 
 
 def _doc_shingle_sets(docs: DataFrame, k: int = SPAN_K) -> DataFrame:
-    """(doc_id, shs, n, bm): each document's DISTINCT k-word shingles as
-    a sorted array plus its size and 256-bit presence bitmap — deduped
-    per-doc with array_distinct BEFORE any explode, so 'distinct
-    (doc, sh)' costs zero shuffle (measured 3x cheaper than
-    explode-then-global-distinct at sf0.1). Shingling runs on a
-    MATERIALIZED token array (see functions/text.py:shingles_from_tokens
-    for the 6x re-evaluation pitfall this avoids)."""
-    # widen on raw text so the normalize/split regex runs post-exchange.
-    # work_factor 32: shingle + sort_array + bitmap over ~30x-
-    # decompressing text — compressed-byte stats left this whole build
-    # on ONE task at bench scale (profiled as an 8.7 s single-task pin
-    # job inside lsh_band_sweep, round 12; same class as doc_shingles)
-    toks = widen_for_compute(
-        docs.select("doc_id", "text"), work_factor=32
-    ).select("doc_id", F.split(normalize_text("text"), " ").alias("t"))
-    return (
-        toks.select(
-            "doc_id",
-            F.sort_array(
-                F.array_distinct(shingles_from_tokens(F.col("t"), k))
-            ).alias("shs"),
-        )
-        .withColumn("n", F.size("shs"))
-        .withColumn("bm", _doc_bitmap(F.col("shs")))
-    )
+    """(doc_id, shs, n, bm): dedup.doc_shingle_sets (each document's
+    DISTINCT k-word shingles as a sorted array plus its size) with the
+    256-bit presence bitmap the candidate prune reads."""
+    sets = dd.doc_shingle_sets(docs, k)
+    return sets.withColumn("bm", _doc_bitmap(F.col("shs")))
 
 
 def _hashed_stream(sets: DataFrame, carry_n: bool = False) -> DataFrame:
@@ -293,18 +274,19 @@ def prefix_filtered_jaccard_pairs_from_sets(
     # at sf1, whose per-pair array shipping was 826 MB of the query's
     # 1.11 GB shuffle before round 7.
     cand = prefix_candidates(sets, tau_num, tau_den)
-    inter = F.size(F.array_intersect(F.col("sa.shs"), F.col("sb.shs")))
-    union = F.col("sa.n") + F.col("sb.n") - inter
     return (
-        cand.join(sets.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sets.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .where(inter * F.lit(tau_den) >= F.lit(tau_num) * union)
+        dd.set_overlap(cand, sets)
+        .where(
+            F.col("n_inter") * F.lit(tau_den)
+            >= F.lit(tau_num) * F.col("n_union")
+        )
         .select(
             F.col("doc_a").cast("long").alias("doc_a"),
             F.col("doc_b").cast("long").alias("doc_b"),
-            inter.cast("long").alias("n_inter"),
-            union.cast("long").alias("n_union"),
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
+            F.col("n_inter").cast("long").alias("n_inter"),
+            F.col("n_union").cast("long").alias("n_union"),
+            (F.col("n_inter").cast("double") / F.col("n_union").cast("double"))
+            .alias("jaccard"),
         )
     )
 

@@ -210,10 +210,11 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round 8 (VERDICT r7 item 2): both pipelines derive from ONE
     pinned materialization of the per-doc shingle arrays — the truth
-    side consumes it directly, the candidate side re-explodes it (the
+    side consumes it directly, the candidate side re-explodes it into
+    the same stream dd.minhash_lsh_pairs feeds its signatures (the
     arrays are distinct per doc, so the exploded stream equals
-    dd.doc_shingles bit-for-bit) — and the band-key relation is
-    pinned before its self-join exactly as dedup_minhash_lsh pins it
+    dd.doc_shingles as a set) — and the band-key relation is pinned
+    before its self-join exactly as dedup_minhash_lsh pins it
     (un-pinned, each join side recomputed the 16-hash signature
     aggregate). Together with the truth side's ranked-relation pin
     (operators/ssjoin.prefix_candidates — the same self-join

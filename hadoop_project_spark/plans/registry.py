@@ -55,20 +55,16 @@ _ORDER: dict[str, int] = {}
 # anchors are demoted to 500, still oracle-tested every CI run by
 # tests/test_oracle_parity.py.
 PRIORITY_OVERRIDES: dict[str, int] = {
-    # --- round-13 regression anchors: keep in-window (prio 20) ---
-    # Round 13 is optimization round 2: the window is the headline set,
-    # the LR trio (kept at its prio-10 registration until green twice —
-    # VERDICT r12 #10; the HUGEINT oracle-output-type fix lands this
-    # round), and a hash anchor for EVERY query whose code round 13
-    # touched: the CM-sketch one-scan rework (sketch.py), the
-    # co-purchase self-join widen (governance_queries.py — all five
-    # pagerank/copurchase queries), the gate pipelining
-    # (dedup_queries.py loops + dedup_gate.py sink), the BM25
-    # scored-agg split (invindex.py — every bm25 ranking/eval rider),
-    # the brute-force cosine expr-text rework (similarity_queries.py),
-    # the quantize_points widen (kmeans.py — whole kmeans family), and
-    # the shard-rewrite overlap (packing_queries.py/shardexport.py —
-    # the prio-10 shard trio stays in-window from r12).
+    # --- round-14 regression anchors: keep in-window (prio 20) ---
+    # Round 14: the window is the headline set, the LR trio (kept one
+    # more round — VERDICT r13), a hash anchor for every query whose
+    # code an earlier round-14 change touched (co-purchase pair builder,
+    # SemDeDup decision table, ANN rerank tail, BM25 single-pass
+    # relevance, shard-rewrite and hard-negative protocols — those
+    # riders sit in-window at prio 20 or their prio-10 registration),
+    # and every rider of the set-based MinHash-LSH rewrite
+    # (operators/dedup.py: doc_shingle_sets, set_overlap, one-parse
+    # signature and band-key text).
     **{
         name: 20
         for name in (
@@ -78,35 +74,34 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             "regional_revenue",
             "two_leg_conversion",
             "priority_month_matrix",
-            # sketch.py: cm_heavy_hitters one-scan rework
-            "heavy_hitter_bigrams",
-            # governance_queries.py: probe-side widen on all three
-            # lineitem self-join edge builders (served twin is already
+            # governance_queries.py: one _copurchase_pairs builder for
+            # all co-purchase/PageRank queries (served twin is already
             # in-window at its prio-10 registration)
             "part_pagerank_iterated",
             "part_pagerank_bucketed",
             "part_copurchase_rank_step",
             "part_copurchase_triangles",
-            # dedup_gate.py sink eager_pin threshold + dedup_queries.py
-            # batch pipelining (the LSM pair is in-window at prio 10)
-            "neardup_gate_admissions",
-            # invindex.py: _bm25_scored_agg split + one-pass relevance
+            # invindex.py: BM25 two-pass branch removed, score/top-k
+            # pass-through inlined
             "bm25_mrr_eval",
             "bm25_topk",
             "bm25_topk_stored",
-            # similarity_queries.py: one-parse dot/norm text in the
-            # brute-force cosine rankings (prefiltered is in-window at
-            # its prio-10 registration)
-            "ann_topk_bruteforce",
-            "ann_truncated_dim_recall",
+            # similarity.py: lsh_topk/ivf_topk share one rerank tail
             "ann_recall_at_k",
-            # kmeans.py: quantize_points widen — the whole pinned-fit
-            # family re-certifies
-            "kmeans_centroids",
-            "kmeans_cluster_sizes",
-            "kmeans_silhouette",
-            "kmeans_assign_step",
-            "nearest_two_centroids",
+            # dedup.py: set-based minhash_lsh_pairs and its consumers
+            "dedup_minhash_lsh",
+            "dedup_clusters",
+            "dedup_canonical_by_quality",
+            "leakage_free_split",
+            "split_leakage_report",
+            # dedup.py + ssjoin.py: shared set builder / verify tail and
+            # the one-parse signature + band-key text
+            "dedup_lsh_recall_eval",
+            "lsh_band_sweep",
+            "ssjoin_prefix_pairs",
+            "neardup_gate_admissions",
+            "neardup_gate_lsm_admissions",
+            "neardup_gate_served_probe",
         )
     },
     # --- green in r1-r8, still CI-oracle-tested: demote (prio 500) ---
@@ -118,6 +113,16 @@ PRIORITY_OVERRIDES: dict[str, int] = {
     **{
         name: 500
         for name in (
+            # r13 prio-20 anchors released in r14 (code untouched in
+            # r14; all green in CORRECTNESS_r13)
+            "heavy_hitter_bigrams",
+            "ann_topk_bruteforce",
+            "ann_truncated_dim_recall",
+            "kmeans_centroids",
+            "kmeans_cluster_sizes",
+            "kmeans_silhouette",
+            "kmeans_assign_step",
+            "nearest_two_centroids",
             # r12 prio-10/20 anchors released this round (code
             # untouched in r13; all green in CORRECTNESS_r12)
             "ann_topk_ivfpq",
@@ -136,7 +141,6 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             # r11 prio-10 anchors released in r12 (code untouched
             # in r12; all green in CORRECTNESS_r11)
             "tokenizer_fertility_by_source",
-            "dedup_canonical_by_quality",
             "exact_substring_spans",
             "doc_duplication_coverage",
             "exact_substring_dedup_rewrite",
@@ -145,8 +149,6 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             "contrastive_pairs",
             "image_dhash_neardup",
             "training_shard_manifest",
-            "leakage_free_split",
-            "split_leakage_report",
             # r10 anchors released in r11 (code untouched;
             # all green in CORRECTNESS_r10)
             "avro_roundtrip_segment_stats",
@@ -159,17 +161,12 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             # drift by the round-10 within-session A/B — SCALING.md)
             "dpp_partitioned_join_roundtrip",
             "proximity_search_pairs",
-            "lsh_band_sweep",
             "inverted_index_directory",
             "phrase_search_hits",
             # r8 anchors (released in r9; ssjoin-pin family deltas were
             # re-adjudicated by the round-9 within-session A/B)
-            "ssjoin_prefix_pairs",
             "doc_duplicate_spans",
             "doc_duplicate_span_ratio",
-            "dedup_lsh_recall_eval",
-            "dedup_minhash_lsh",
-            "dedup_clusters",
             "doc_winnowing_fingerprints",
             "winnowing_dup_candidates",
             "dedup_exact",

@@ -26,7 +26,7 @@ state becomes the LSH table of a real feature store, and the per-batch
 work is one join keyed by (band, key) plus an O(batch) append — never
 a rewrite of history. A production gate would follow the flags with
 the exact-Jaccard verify on flagged pairs only, exactly as
-jaccard_verify does in batch.
+dedup.set_overlap does in batch.
 
 Replay safety: both sinks write ``partitionBy(batch_id)`` under
 dynamic partition overwrite, so a re-executed micro-batch (foreachBatch

@@ -24,11 +24,9 @@ from hadoop_project_spark.plans import all_queries
 WINDOW = 50
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Regression anchors for round 13 (VERDICT r12 items 1-2, 4-6, 8-10):
-# the headline set, the LR trio (red two rounds — the HUGEINT oracle
-# output-type fix lands this round and must be proven green), and a
-# hash anchor for every query whose code round 13 touched — must be
-# proven green THIS round.
+# Regression anchors for round 14: the headline set, the LR trio (kept
+# in-window one more round), a hash anchor for every query whose code
+# round 14 touched — must be proven green THIS round.
 MUST_VERIFY = {
     # headline (every round)
     "word_count",
@@ -36,26 +34,19 @@ MUST_VERIFY = {
     "regional_revenue",
     "two_leg_conversion",
     "priority_month_matrix",
-    # round-13 #1: the LR trio after the oracle BIGINT casts (the
-    # two-round-old hash-red pair's root cause — DuckDB HUGEINT output
+    # the LR trio after the oracle BIGINT casts (DuckDB HUGEINT output
     # columns canonicalizing differently from int64)
     "quality_lr_train",
     "quality_lr_corpus_filter",
     "quality_lr_eval",
-    # sketch.py: cm_heavy_hitters one-scan rework
-    "heavy_hitter_bigrams",
-    # governance_queries.py: probe-side widen of the lineitem
-    # co-purchase self-joins (all five riders incl. the served twin)
+    # governance_queries.py: one _copurchase_pairs builder for all five
+    # co-purchase/PageRank riders incl. the served twin
     "part_pagerank_iterated",
     "part_pagerank_bucketed",
     "part_pagerank_served",
     "part_copurchase_rank_step",
     "part_copurchase_triangles",
-    # dedup_queries.py batch pipelining + dedup_gate.py sink eager_pin
-    "neardup_gate_lsm_admissions",
-    "neardup_gate_served_probe",
-    "neardup_gate_admissions",
-    # invindex.py: _bm25_scored_agg split + one-pass relevance set
+    # invindex.py: BM25 two-pass branch removed, pass-through inlined
     "bm25_mrr_eval",
     "bm25_topk",
     "bm25_topk_stored",
@@ -63,24 +54,30 @@ MUST_VERIFY = {
     "bm25_prf_dense_rerank",
     "hybrid_topk_rrf",
     "mmr_diversified_topk",
-    # similarity_queries.py: one-parse dot/norm text in the
-    # brute-force cosine rankings (+ the module's semdedup pair)
-    "ann_topk_bruteforce",
-    "ann_truncated_dim_recall",
+    # similarity.py / similarity_queries.py: one ANN rerank tail, one
+    # SemDeDup decision table
     "ann_recall_at_k",
     "ann_topk_prefiltered",
     "semantic_dedup_decisions",
     "semantic_dedup_bucketed",
-    # kmeans.py: quantize_points widen — the whole pinned-fit family
-    "kmeans_centroids",
-    "kmeans_cluster_sizes",
-    "kmeans_silhouette",
-    "kmeans_assign_step",
-    "nearest_two_centroids",
-    # packing_queries.py/shardexport.py: rollup ∥ v1-write overlap
+    # packing_queries.py/shardexport.py: production-only rewrite protocol
     "incremental_shard_rewrite",
     "training_shard_assignment",
     "incremental_shard_export",
+    # dedup.py: set-based minhash_lsh_pairs and every consumer
+    "dedup_minhash_lsh",
+    "dedup_clusters",
+    "dedup_canonical_by_quality",
+    "leakage_free_split",
+    "split_leakage_report",
+    # dedup.py + ssjoin.py: shared set builder / verify tail, one-parse
+    # signature and band-key text (the streaming gates build band keys)
+    "dedup_lsh_recall_eval",
+    "lsh_band_sweep",
+    "ssjoin_prefix_pairs",
+    "neardup_gate_lsm_admissions",
+    "neardup_gate_served_probe",
+    "neardup_gate_admissions",
 }
 
 
