@@ -2,8 +2,8 @@
 ntile over a total order WITHOUT a single-task global window.
 
 A naive ``Window.orderBy(...)`` with no partitionBy collapses the whole
-dataset into ONE task — the same scale-killer the brute-force ANN
-ranking had before its two-stage fix (see operators/similarity.py). The
+dataset into ONE task — the same scale-killer a per-query ANN ranking
+avoids by partitioning its window by query (operators/similarity.py). The
 classic distributed answer, implemented here:
 
 1. a deterministic bucket id ``_pid`` from literal split points over the

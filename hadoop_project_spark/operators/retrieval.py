@@ -6,9 +6,9 @@ operators.
 
 Scale notes (the 100 TB shapes):
 
-* Every leg ends in the two-stage top-k (partition-local pre-filter,
-  then a per-query window over <= partitions x k survivors) — the same
-  discipline as operators/similarity.global_topk; no leg ever funnels
+* Every leg ends in operators/similarity.global_topk: one per-query
+  row_number window whose Partial WindowGroupLimit keeps at most k rows
+  per partition and query before the exchange, so no leg ever funnels
   the full scored set into one reducer.
 * The lexical leg is computed in POSTINGS form: distinct tokens are
   exploded once with the per-doc set size carried alongside, the tiny
@@ -58,7 +58,7 @@ def topk_per_query(
     """Exact per-query top-k of (query_id, neighbor_id, score_col) rows
     with (score DESC, neighbor_id ASC) total order — the generic form of
     similarity.global_topk (which it delegates to, renaming the score
-    column through the certified NaN/NULL-bucketed local pre-filter)."""
+    column through its window)."""
     ranked = sim.global_topk(
         scored.withColumnRenamed(score_col, "cosine"), k
     )

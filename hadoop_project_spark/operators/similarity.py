@@ -3,13 +3,11 @@
 Two paths, per the standard ANN playbook:
 
 * brute_force_topk — exact cosine top-k: broadcast the (small) query
-  set, scan the corpus once, then rank in two stages: a partition-local
-  top-k (groupBy(partition, query) with a sorted-slice aggregate, so the
-  scored set leaves its scan stage list-batched and spread over
-  partitions × n_queries reducers) followed by a global per-query window
-  over at most partitions × k survivors per query. A single
-  Window.partitionBy(query_id) over the raw scores would collapse to
-  n_queries reducer tasks at scale.
+  set, scan the corpus once, then rank with one row_number ≤ k window
+  per query (global_topk). Spark plans it as a Partial WindowGroupLimit
+  inside the scan stage, so at most k rows per partition and query
+  reach the query-keyed exchange, and a Final one above it; the raw
+  scores never shuffle.
 * lsh_topk — random-hyperplane LSH: bucket corpus and queries by the
   sign-bit key of H fixed hyperplanes, search only matching buckets
   (optionally multi-probe by also matching hamming-1 neighbor buckets).
@@ -36,56 +34,23 @@ from hadoop_project_spark.functions.vector import (
 )
 
 
-def local_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Partition-local top-k on (query_id, neighbor_id, cosine) rows.
-
-    Keeps the best k rows per (scan partition, query) with one aggregate:
-    the sort key is an (ord, -cosine, neighbor_id) struct, so ascending
-    sort_array yields exactly the total order the global ranking window
-    uses (double negation is bit-exact). The window's `cosine DESC`
-    places NaN first (Spark orders NaN above every double) and NULL last
-    (DESC is NULLS LAST), while a bare ascending sort on -cosine would
-    put NaN last and NULL first — the explicit ord bucket (0 = NaN,
-    1 = value, 2 = NULL, with -cosine null-filled) restores parity.
-    The global top-k per query is invariant under this pre-filter — every
-    globally-ranked row is necessarily in its own partition's top-k — so
-    the downstream window sees at most num_partitions × k rows per query
-    instead of the whole scored set in one reducer task.
-    """
-    entry = F.struct(
-        F.when(F.col("cosine").isNull(), F.lit(2))
-        .when(F.isnan("cosine"), F.lit(0))
-        .otherwise(F.lit(1))
-        .alias("ord"),
-        F.coalesce(
-            F.when(~F.isnan("cosine"), -F.col("cosine")), F.lit(0.0)
-        ).alias("neg_cos"),
-        F.col("neighbor_id").alias("neighbor_id"),
-        F.col("cosine").alias("cosine"),
-    )
+def _window_topk(scored: DataFrame, score: str, order, k: int) -> DataFrame:
+    """Per-query top-k of (query_id, neighbor_id, score) rows under
+    (order, neighbor_id): one row_number ≤ k window, planned as a
+    Partial WindowGroupLimit below the query_id exchange and a Final
+    one above it."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
     return (
-        scored.groupBy(F.spark_partition_id().alias("pid"), "query_id")
-        .agg(F.slice(F.sort_array(F.collect_list(entry)), 1, k).alias("top"))
-        .select("query_id", F.explode("top").alias("e"))
-        .select(
-            "query_id",
-            F.col("e.neighbor_id").alias("neighbor_id"),
-            F.col("e.cosine").alias("cosine"),
-        )
+        scored.select("query_id", "neighbor_id", score)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
     )
 
 
 def global_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Exact per-query top-k: partition-local pre-filter, then the
-    ranking window over the bounded survivor set."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        local_topk(scored, k)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    """Exact per-query top-k by cosine DESC (NaN first, NULL last, as
+    the window orders doubles), neighbor_id tie-break."""
+    return _window_topk(scored, "cosine", F.col("cosine").desc(), k)
 
 
 def brute_force_topk(
@@ -169,8 +134,8 @@ def _rerank_candidates(
     """Exact-cosine top-k over ANN candidate id pairs (query_id,
     neighbor_id): the shared tail of lsh_topk and ivf_topk. A hot
     bucket or cell can still concentrate one query's candidates — the
-    two-stage global_topk keeps the final window input at partitions ×
-    k regardless."""
+    global_topk window's partial group limit keeps what shuffles to the
+    ranking at partitions × k regardless."""
     q_full = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
@@ -354,8 +319,8 @@ def ivf_topk(
     clustering key of the stored table, so the "inverted lists" are
     parquet partitions and probing prunes whole files); each query
     probes its n_probe nearest cells; the cell-key join carries ids
-    only; exact cosine runs on candidates; the two-stage global_topk
-    bounds the final ranking shuffle."""
+    only; exact cosine runs on candidates; the global_topk window's
+    partial group limit bounds the ranking shuffle."""
     cents = centroids if centroids is not None else make_coarse_centroids(
         n_cells, dim, seed
     )
@@ -693,22 +658,10 @@ def _adc_dist(m: int):
 
 
 def _ranked_by_adc(scored: DataFrame, k: int) -> DataFrame:
-    """Per-query top-k on an integer `adc_dist` (ascending) via the
-    same two-stage ranking as global_topk: negate into the descending
-    `cosine` slot (exact for |adc| < 2^53), rank, then restore."""
-    ranked = global_topk(
-        scored.select(
-            "query_id",
-            "neighbor_id",
-            (-F.col("adc_dist").cast("double")).alias("cosine"),
-        ),
-        k,
-    )
-    return ranked.select(
-        "query_id",
-        "neighbor_id",
-        (-F.col("cosine")).cast("long").alias("adc_dist"),
-        "rank",
+    """Per-query top-k on an integer `adc_dist`, ascending (NULL last),
+    neighbor_id tie-break: the global_topk window in ADC order."""
+    return _window_topk(
+        scored, "adc_dist", F.col("adc_dist").asc_nulls_last(), k
     )
 
 
@@ -727,7 +680,7 @@ def pq_adc_topk(
     instead of 4×dim, so the scan is memory/IO-bound 32× smaller); each
     query broadcasts its M×codes integer ADC table; scoring a pair is M
     element_at gathers + integer adds inside codegen, never a float
-    fold; ranking is the two-stage bounded top-k. The pair count is
+    fold; ranking is the group-limited top-k window. The pair count is
     still corpus × queries — PQ is the compression leg, ivfpq_topk adds
     the candidate-pruning leg."""
     books = books if books is not None else make_pq_codebooks()

@@ -310,9 +310,9 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (token-blocking is a measured anti-pattern here: see
     operators/retrieval.hard_negatives_for_anchors); exact Jaccard
     scoring joins token arrays only for the bounded candidate set;
-    ranking is the two-stage top-k. The oracle re-derives shingles,
-    positives (integer threshold test), the df cap, candidates, token
-    sets, exclusions, and both rankings from scratch.
+    ranking is the group-limited top-k window. The oracle re-derives
+    shingles, positives (integer threshold test), the df cap,
+    candidates, token sets, exclusions, and both rankings from scratch.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as w
@@ -445,8 +445,9 @@ def contrastive_dense_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.19 GB shuffle at sf1 — the block-restricted Gram is both the
     honest 100 TB shape (candidates come from a cell, never a global
     scan) and ~50x cheaper. Exclusions anti-join is pair-sized; ranking
-    is the two-stage top-k; the oracle re-derives positives, anchors,
-    the label restriction, cosines, exclusions, and the ranking."""
+    is the group-limited top-k window; the oracle re-derives positives,
+    anchors, the label restriction, cosines, exclusions, and the
+    ranking."""
     from pyspark.sql import functions as F
 
     from hadoop_project_spark.execution import eager_pin

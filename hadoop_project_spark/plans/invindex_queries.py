@@ -285,7 +285,7 @@ def bm25_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-k probing the STORED index: tf/df recovered off the
     term-bucketed postings table with zero exchange (bucket-local
     aggregates + co-located term join), document lengths read from the
-    doc_id-bucketed length table, and the same two-stage top-k as the
+    doc_id-bucketed length table, and the same top-k window as the
     in-session path. Same oracle as bm25_topk — the stored layout must
     not change a single score bit."""
     prefix = _build_index(spark, sf_dir)
@@ -506,7 +506,7 @@ def bm25_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-k over the ATTACHED pre-built index — the serving twin
     of `bm25_topk_stored` (which rebuilds per run and is therefore
     ~90% build cost): same bucket-local tf/df aggregates, same
-    two-stage top-k, same oracle, but the only per-query work is the
+    top-k window, same oracle, but the only per-query work is the
     probe itself. The bench's stored-vs-served delta IS the measured
     build/serve split."""
     from hadoop_project_spark.serving import ensure_served_index

@@ -55,16 +55,16 @@ _ORDER: dict[str, int] = {}
 # anchors are demoted to 500, still oracle-tested every CI run by
 # tests/test_oracle_parity.py.
 PRIORITY_OVERRIDES: dict[str, int] = {
-    # --- round-14 regression anchors: keep in-window (prio 20) ---
-    # Round 14: the window is the headline set, the LR trio (kept one
-    # more round — VERDICT r13), a hash anchor for every query whose
-    # code an earlier round-14 change touched (co-purchase pair builder,
-    # SemDeDup decision table, ANN rerank tail, BM25 single-pass
-    # relevance, shard-rewrite and hard-negative protocols — those
-    # riders sit in-window at prio 20 or their prio-10 registration),
-    # and every rider of the set-based MinHash-LSH rewrite
-    # (operators/dedup.py: doc_shingle_sets, set_overlap, one-parse
-    # signature and band-key text).
+    # --- round-15 regression anchors: keep in-window (prio 20) ---
+    # Round 15: the window is the headline set, the LR trio (at its
+    # prio-10 registration), every rider of the one-scan index probes
+    # and the group-limited top-k window (operators/invindex.py phrase,
+    # proximity and stored-BM25 probes, the BM25 top-k; similarity.py
+    # global_topk and the ADC ranking — 27 riders, those not listed here
+    # sit in-window at their prio-10 registration), and the round-14
+    # anchors still carrying a round-14 change (co-purchase pair
+    # builder, SemDeDup decision table, shard-rewrite protocol,
+    # set-based MinHash-LSH), one or more riders per change.
     **{
         name: 20
         for name in (
@@ -74,32 +74,45 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             "regional_revenue",
             "two_leg_conversion",
             "priority_month_matrix",
-            # governance_queries.py: one _copurchase_pairs builder for
-            # all co-purchase/PageRank queries (served twin is already
-            # in-window at its prio-10 registration)
-            "part_pagerank_iterated",
-            "part_pagerank_bucketed",
-            "part_copurchase_rank_step",
-            "part_copurchase_triangles",
-            # invindex.py: BM25 two-pass branch removed, score/top-k
-            # pass-through inlined
+            # invindex.py: one-scan phrase and proximity probes
+            "phrase_search_hits",
+            "proximity_search_pairs",
+            "inverted_index_build_roundtrip",
+            "phrase_search_served",
+            "index_segment_compaction_roundtrip",
+            "index_base_plus_segments_probe",
+            # invindex.py: query-term-pruned stored BM25, top-k window
             "bm25_mrr_eval",
             "bm25_topk",
             "bm25_topk_stored",
-            # similarity.py: lsh_topk/ivf_topk share one rerank tail
+            # similarity.py: global_topk / ADC ranking as one window
             "ann_recall_at_k",
-            # dedup.py: set-based minhash_lsh_pairs and its consumers
+            "ann_topk_bruteforce",
+            "ann_topk_ivf",
+            "ann_topk_lsh_verified",
+            "ann_truncated_dim_recall",
+            "ann_topk_pq_adc",
+            "ann_pq_recall",
+            "ann_topk_ivfpq",
+            "ann_topk_ivfpq_served",
+            "ann_ivfpq_segment_compaction",
+            "ann_ivfpq_base_plus_segments",
+            "contrastive_dense_negatives",
+            "contrastive_pairs",
+            # round 14, governance_queries.py: one _copurchase_pairs
+            # builder (served twin in-window at its prio-10 registration)
+            "part_pagerank_iterated",
+            "part_copurchase_rank_step",
+            "part_copurchase_triangles",
+            # round 14, dedup.py + ssjoin.py: set-based minhash_lsh_pairs,
+            # shared set builder / verify tail, one-parse signature and
+            # band-key text
             "dedup_minhash_lsh",
             "dedup_clusters",
-            "dedup_canonical_by_quality",
-            "leakage_free_split",
             "split_leakage_report",
-            # dedup.py + ssjoin.py: shared set builder / verify tail and
-            # the one-parse signature + band-key text
             "dedup_lsh_recall_eval",
             "lsh_band_sweep",
             "ssjoin_prefix_pairs",
-            "neardup_gate_admissions",
             "neardup_gate_lsm_admissions",
             "neardup_gate_served_probe",
         )
@@ -113,11 +126,18 @@ PRIORITY_OVERRIDES: dict[str, int] = {
     **{
         name: 500
         for name in (
+            # r14 anchors released in r15 (code untouched in r15; a
+            # sibling rider of the same round-14 change stays in-window;
+            # all green in their last CORRECTNESS row)
+            "semantic_dedup_bucketed",
+            "incremental_shard_export",
+            "part_pagerank_bucketed",
+            "dedup_canonical_by_quality",
+            "leakage_free_split",
+            "neardup_gate_admissions",
             # r13 prio-20 anchors released in r14 (code untouched in
             # r14; all green in CORRECTNESS_r13)
             "heavy_hitter_bigrams",
-            "ann_topk_bruteforce",
-            "ann_truncated_dim_recall",
             "kmeans_centroids",
             "kmeans_cluster_sizes",
             "kmeans_silhouette",
@@ -125,19 +145,11 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             "nearest_two_centroids",
             # r12 prio-10/20 anchors released this round (code
             # untouched in r13; all green in CORRECTNESS_r12)
-            "ann_topk_ivfpq",
-            "ann_topk_ivfpq_served",
-            "ann_ivfpq_segment_compaction",
-            "ann_ivfpq_base_plus_segments",
-            "contrastive_dense_negatives",
             "multimodal_bmp_features",
             "multimodal_wav_features",
             "audio_fingerprint_neardup",
             "pii_redaction_counts",
             "pii_planted_redaction",
-            "phrase_search_served",
-            "index_segment_compaction_roundtrip",
-            "index_base_plus_segments_probe",
             # r11 prio-10 anchors released in r12 (code untouched
             # in r12; all green in CORRECTNESS_r11)
             "tokenizer_fertility_by_source",
@@ -146,23 +158,17 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             "exact_substring_dedup_rewrite",
             "exact_substring_dedup_corpus",
             "corpus_version_diff",
-            "contrastive_pairs",
             "image_dhash_neardup",
             "training_shard_manifest",
             # r10 anchors released in r11 (code untouched;
             # all green in CORRECTNESS_r10)
             "avro_roundtrip_segment_stats",
-            "ann_topk_pq_adc",
-            "ann_pq_recall",
             "bucketed_join_roundtrip",
-            "inverted_index_build_roundtrip",
             # r9 anchors released in r10 (code untouched in r10;
             # the two writer-roundtrip movers were adjudicated as host
             # drift by the round-10 within-session A/B — SCALING.md)
             "dpp_partitioned_join_roundtrip",
-            "proximity_search_pairs",
             "inverted_index_directory",
-            "phrase_search_hits",
             # r8 anchors (released in r9; ssjoin-pin family deltas were
             # re-adjudicated by the round-9 within-session A/B)
             "doc_duplicate_spans",
@@ -200,7 +206,6 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             "embedding_neardup_pairs_bucketed",
             "events_decayed_engagement",
             "embedding_neardup_pairs",
-            "ann_topk_ivf",
             "events_hourly_rollup",
             "latest_event_per_user",
             "priority_month_matrix_formatted",

@@ -227,7 +227,7 @@ def bm25_prf_dense_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # pinned: the BM25 ranking feeds BOTH the PRF centroid path and the
     # fusion's lexical leg — unpinned, the whole tf/df/dl scoring chain
-    # and two-stage top-k execute twice (round 12: profiled as repeated
+    # and top-k window execute twice (round 12: profiled as repeated
     # ~4 s jobs inside this query; the pinned relation is queries × k
     # rows, so the blocking pin job costs the one scoring pass it must)
     from hadoop_project_spark.execution import eager_pin

@@ -110,8 +110,8 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(_cos_qc(), 9).alias("cosine"),
         )
     )
-    # two-stage ranking (partition-local top-k, then the global window
-    # over ≤ partitions × K survivors) — see operators.similarity
+    # one row_number window, group-limited to K rows per partition
+    # before its query_id exchange — see operators.similarity
     return sim.global_topk(scored, K)
 
 
@@ -450,7 +450,7 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     Runs BOTH pipelines (sim.ivf_topk and the exact baseline) and joins
     their neighbor sets, so this one driver hash transitively
     re-certifies the whole IVF path (cell assignment, probes, re-rank)
-    and the two-stage exact top-k in the same round. At scale both
+    and the exact top-k window in the same round. At scale both
     sides stay candidate-blocked; the evaluation join is K rows per
     query.
     """
@@ -530,7 +530,7 @@ def ann_truncated_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape for 100 TB: each truncated ranking is the same scale-safe
     plan as ann_topk_bruteforce (broadcast queries, one corpus scan,
-    two-stage top-k) over sliced arrays — slicing costs nothing at scan
+    top-k window) over sliced arrays — slicing costs nothing at scan
     time and cuts the per-pair fold by 64/d; the evaluation join is K
     rows per query per d. The full-width truth relation feeds one join
     per d, so it is eager-pinned rather than recomputed per branch."""
@@ -981,7 +981,7 @@ def ann_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives the seeded per-subspace codebooks, every vector's argmin
     codes, the per-query integer ADC tables, and the ranked integer
     distances from the same literals — hash-certifying the entire PQ
-    pipeline (encode → ADC table → integer scoring → two-stage rank).
+    pipeline (encode → ADC table → integer scoring → top-k window).
 
     The memory-bound ANN leg (Jégou et al., TPAMI 2011): at scale the
     stored index holds M=8 codes/vector (32× less than float32×64), a

@@ -226,3 +226,64 @@ def test_proximity_guard_rejects_degenerate_pairs(spark):
         ix.proximity_cooccurrence(docs, [], 2)
     with pytest.raises(ValueError, match="degenerate"):
         ix.proximity_cooccurrence(docs, [("a", "a")], 2)
+
+
+def test_phrase_guard_rejects_repeated_phrase(spark):
+    """A repeated phrase doubles its literal rows, so no start could
+    count exactly nw matches: the probe raises instead of dropping it."""
+    import pytest
+
+    docs = spark.createDataFrame([Row(doc_id=1, text="a b c")])
+    with pytest.raises(ValueError, match="repeated items"):
+        ix.phrase_occurrences(docs, ["a b", "b c", "a b"])
+
+
+def test_phrase_repeated_word_and_shared_words(spark):
+    """One probe answers phrases that share words and phrases that
+    repeat a word: each start counts the offsets its position fills."""
+    docs = spark.createDataFrame(
+        [Row(doc_id=1, text="a b a b a"), Row(doc_id=2, text="b a a b")]
+    )
+    got = {
+        (r["phrase"], r["doc_id"]): r["n_occ"]
+        for r in ix.phrase_occurrences(
+            docs, ["a b", "b a", "a b a", "a a"]
+        ).collect()
+    }
+    assert got == {
+        ("a b", 1): 2, ("a b", 2): 1,
+        ("b a", 1): 2, ("b a", 2): 1,
+        ("a b a", 1): 2,
+        ("a a", 2): 1,
+    }
+
+
+def test_proximity_guard_rejects_repeated_pair(spark):
+    import pytest
+
+    docs = spark.createDataFrame([Row(doc_id=1, text="a b")])
+    with pytest.raises(ValueError, match="repeated items"):
+        ix.proximity_cooccurrence(docs, [("a", "b"), ("a", "b")], 2)
+
+
+def test_proximity_zero_match_pair_answers_zero(spark):
+    """A pair with no occurrence in the band — or no posting at all —
+    still answers (pair, 0, 0), next to pairs that match."""
+    docs = spark.createDataFrame(
+        [Row(doc_id=1, text="a x b a"), Row(doc_id=2, text="c y y y d")]
+    )
+    got = {
+        r["pair"]: (r["n_docs"], r["n_pairs"])
+        for r in ix.proximity_cooccurrence(
+            docs, [("a", "b"), ("c", "d"), ("a", "zz")], 2
+        ).collect()
+    }
+    assert got == {"a b": (1, 2), "c d": (0, 0), "a zz": (0, 0)}
+
+
+def test_bm25_rejects_queries_without_terms(spark):
+    import pytest
+
+    docs = spark.createDataFrame([Row(doc_id=1, text="a b c")])
+    with pytest.raises(ValueError, match="no query terms"):
+        ix.bm25_topk(docs, ["   "], 3)

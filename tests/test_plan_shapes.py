@@ -411,16 +411,38 @@ def test_stored_index_directory_is_bucket_local(spark, sf_dir):
 
 
 def test_stored_index_phrase_probe_prunes_buckets(spark, sf_dir):
-    """Every term-equality filter in a phrase probe prunes the postings
-    scan to that term's bucket — the probe reads the phrase words'
-    buckets, never the whole index."""
+    """A phrase probe reads the stored postings ONCE for its whole
+    phrase list, and that scan's term filter prunes it to the phrase
+    words' buckets — the probe never reads the whole index."""
     from hadoop_project_spark.operators import invindex as ix
 
     p = _built_index(spark, sf_dir)
-    plan = _plan(ix.phrase_search_stats_over(p, ["table scan"]))
-    pruned = re.findall(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-    assert pruned, plan
-    assert all(int(sel) < int(total) for sel, total in pruned), pruned
+    for phrases in (["table scan"], ["table scan", "query big part"]):
+        df = ix.phrase_search_stats_over(p, phrases)
+        scans = [
+            n for n in _physical_nodes(df)
+            if "Scan parquet" in n and "gate_idx_postings" in n
+        ]
+        assert len(scans) == 1, scans
+        plan = _plan(df)
+        pruned = re.findall(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
+        assert len(pruned) == 1, plan
+        assert all(int(sel) < int(total) for sel, total in pruned), pruned
+
+
+def test_stored_bm25_scans_prune_to_query_term_buckets(spark, sf_dir):
+    """bm25_topk_stored filters the postings to the query terms before
+    its tf/df aggregates, so every postings scan is bucket-pruned."""
+    from hadoop_project_spark.operators import invindex as ix
+    from hadoop_project_spark.plans.invindex_queries import BM25_K, BM25_QUERIES
+
+    _built_index(spark, sf_dir)
+    plan = _plan(ix.bm25_topk_stored(spark, "gate_idx", BM25_QUERIES, BM25_K))
+    scans = [l for l in plan.splitlines() if "gate_idx_postings" in l]
+    assert scans, plan
+    for ln in scans:
+        m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", ln)
+        assert m and int(m.group(1)) < int(m.group(2)), ln
 
 
 def test_stored_index_tf_df_join_no_shuffle(spark, sf_dir):
@@ -522,16 +544,16 @@ def test_bm25_eval_truth_side_reuses_pinned_inputs(spark, sf_dir):
 def test_pq_adc_scan_broadcasts_luts_single_shuffle(spark, sf_dir):
     """Flat ADC (ann_topk_pq_adc): the corpus is scanned ONCE, the
     query LUTs arrive by broadcast (never a shuffled join), and the
-    only shuffle exchanges are the two-stage top-k's bounded ranking —
-    the scored pair set itself must not shuffle."""
+    only shuffle exchange is the top-k window's ranking exchange, fed
+    by its Partial WindowGroupLimit — the scored pair set itself must
+    not shuffle."""
     plan = _plan(all_queries()["ann_topk_pq_adc"].build(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     # one scan of the embeddings table on the corpus side + the tiny
     # broadcast query side — no more
     assert plan.count("Scan parquet") <= 2, plan
-    # ranking shuffles only: local_topk's (pid, query) agg + the
-    # survivor window; the ADC scoring stage itself is exchange-free
-    assert _shuffle_exchanges(plan) <= 2, plan
+    # one ranking shuffle; the ADC scoring stage itself is exchange-free
+    assert _shuffle_exchanges(plan) <= 1, plan
 
 
 def test_ivfpq_joins_are_broadcasts(spark, sf_dir):

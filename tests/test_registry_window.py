@@ -24,9 +24,10 @@ from hadoop_project_spark.plans import all_queries
 WINDOW = 50
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Regression anchors for round 14: the headline set, the LR trio (kept
-# in-window one more round), a hash anchor for every query whose code
-# round 14 touched — must be proven green THIS round.
+# Regression anchors for round 15: the headline set, the LR trio, every
+# rider of the one-scan index probes and the group-limited top-k window
+# (all 27), and one or more riders of each round-14 change not yet
+# hash-verified in a window — must be proven green THIS round.
 MUST_VERIFY = {
     # headline (every round)
     "word_count",
@@ -39,14 +40,15 @@ MUST_VERIFY = {
     "quality_lr_train",
     "quality_lr_corpus_filter",
     "quality_lr_eval",
-    # governance_queries.py: one _copurchase_pairs builder for all five
-    # co-purchase/PageRank riders incl. the served twin
-    "part_pagerank_iterated",
-    "part_pagerank_bucketed",
-    "part_pagerank_served",
-    "part_copurchase_rank_step",
-    "part_copurchase_triangles",
-    # invindex.py: BM25 two-pass branch removed, pass-through inlined
+    # invindex.py: one-scan phrase and proximity probes
+    "phrase_search_hits",
+    "proximity_search_pairs",
+    "inverted_index_build_roundtrip",
+    "phrase_search_served",
+    "index_segment_compaction_roundtrip",
+    "index_base_plus_segments_probe",
+    # invindex.py: query-term-pruned stored BM25 and the BM25 top-k
+    # window, with every consumer of the ranking
     "bm25_mrr_eval",
     "bm25_topk",
     "bm25_topk_stored",
@@ -54,30 +56,43 @@ MUST_VERIFY = {
     "bm25_prf_dense_rerank",
     "hybrid_topk_rrf",
     "mmr_diversified_topk",
-    # similarity.py / similarity_queries.py: one ANN rerank tail, one
-    # SemDeDup decision table
+    # similarity.py: global_topk / ADC ranking as one group-limited
+    # window, every caller
     "ann_recall_at_k",
     "ann_topk_prefiltered",
+    "ann_topk_bruteforce",
+    "ann_topk_ivf",
+    "ann_topk_lsh_verified",
+    "ann_truncated_dim_recall",
+    "ann_topk_pq_adc",
+    "ann_pq_recall",
+    "ann_topk_ivfpq",
+    "ann_topk_ivfpq_served",
+    "ann_ivfpq_segment_compaction",
+    "ann_ivfpq_base_plus_segments",
+    "contrastive_dense_negatives",
+    "contrastive_pairs",
+    # round 14, governance_queries.py: one _copurchase_pairs builder
+    "part_pagerank_iterated",
+    "part_pagerank_served",
+    "part_copurchase_rank_step",
+    "part_copurchase_triangles",
+    # round 14, similarity_queries.py: one SemDeDup decision table
     "semantic_dedup_decisions",
-    "semantic_dedup_bucketed",
-    # packing_queries.py/shardexport.py: production-only rewrite protocol
+    # round 14, packing_queries.py/shardexport.py: production-only
+    # rewrite protocol
     "incremental_shard_rewrite",
     "training_shard_assignment",
-    "incremental_shard_export",
-    # dedup.py: set-based minhash_lsh_pairs and every consumer
+    # round 14, dedup.py + ssjoin.py: set-based minhash_lsh_pairs, shared
+    # set builder / verify tail, one-parse signature and band-key text
     "dedup_minhash_lsh",
     "dedup_clusters",
-    "dedup_canonical_by_quality",
-    "leakage_free_split",
     "split_leakage_report",
-    # dedup.py + ssjoin.py: shared set builder / verify tail, one-parse
-    # signature and band-key text (the streaming gates build band keys)
     "dedup_lsh_recall_eval",
     "lsh_band_sweep",
     "ssjoin_prefix_pairs",
     "neardup_gate_lsm_admissions",
     "neardup_gate_served_probe",
-    "neardup_gate_admissions",
 }
 
 

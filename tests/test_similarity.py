@@ -74,17 +74,68 @@ def test_lsh_bucket_determinism(spark, sf_dir):
     assert [r["b"] for r in b1] == [r["b"] for r in b2]
 
 
-def test_local_topk_bounds_ranking_input(spark, sf_dir):
-    """The two-stage ranking's window input must be bounded by
-    num_scan_partitions × n_queries × k, not the full scored set, and
-    the final result must equal a naive single-window ranking."""
-    from pyspark.sql.window import Window
+def _plan_str(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _partial_group_limit_feeds_exchange(df, key: str) -> bool:
+    """True when the physical plan's `key`-partitioned ranking exchange
+    reads a Partial WindowGroupLimit: each scan partition ships at most
+    k rows per key, and a Final limit sits above the exchange."""
+    lines = _plan_str(df).splitlines()
+    for i, ln in enumerate(lines[:-1]):
+        if f"Exchange hashpartitioning({key}#" in ln:
+            child = lines[i + 1]
+            if "WindowGroupLimit" in child and "Partial" in child:
+                return any(
+                    "WindowGroupLimit" in l and "Final" in l for l in lines[:i]
+                )
+    return False
+
+
+def _without_group_limit(spark, build):
+    """Collect `build()` with Spark's WindowGroupLimit inference off —
+    the plain full-window ranking the group limit must reproduce."""
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = build()
+        assert "WindowGroupLimit" not in _plan_str(df)
+        return df.collect()
+    finally:
+        spark.conf.set(key, saved)
+
+
+def _added_shuffles(ranked, scored) -> int:
+    """Shuffle exchanges the ranking adds on top of its scored input."""
+    import re
+
+    def count(df):
+        return len(
+            re.findall(
+                r"Exchange (?:hashpartitioning|rangepartitioning|"
+                r"SinglePartition|RoundRobinPartitioning)",
+                _plan_str(df),
+            )
+        )
+
+    return count(ranked) - count(scored)
+
+
+def test_topk_window_group_limit_bounds_ranking_input(spark, sf_dir):
+    """global_topk and the BM25 top-k are one row_number <= k window:
+    Spark must plan a Partial WindowGroupLimit below the query-keyed
+    ranking exchange, the ONE shuffle the ranking adds (so the scored
+    set never shuffles whole), and the result must equal the same
+    window ranked without the limit."""
+    from hadoop_project_spark.functions.vector import dot, l2_norm
+    from hadoop_project_spark.operators import invindex as ix
+    from hadoop_project_spark.plans.invindex_queries import BM25_QUERIES
 
     emb = load_table(spark, sf_dir, "embeddings").repartition(6)
     queries = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 8)
     k = 5
-    from hadoop_project_spark.functions.vector import dot, l2_norm
-
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_vec"),
@@ -104,30 +155,37 @@ def test_local_topk_bounds_ranking_input(spark, sf_dir):
             (dot("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))).alias("cosine"),
         )
     )
-    survivors = sim.local_topk(scored, k)
-    n_parts = scored.rdd.getNumPartitions()
-    n_queries = queries.count()
-    assert survivors.count() <= n_parts * n_queries * k
-    assert survivors.count() < scored.count()
+    ranked = sim.global_topk(scored, k)
+    assert _partial_group_limit_feeds_exchange(ranked, "query_id"), _plan_str(ranked)
+    assert _added_shuffles(ranked, scored) == 1, _plan_str(ranked)
+    got = ranked.collect()
+    assert len(got) == queries.count() * k
+    assert sorted(got) == sorted(
+        _without_group_limit(spark, lambda: sim.global_topk(scored, k))
+    )
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
+    docs = load_table(spark, sf_dir, "documents").repartition(6)
+    bm25 = ix.bm25_topk(docs, BM25_QUERIES, k)
+    assert _partial_group_limit_feeds_exchange(bm25, "query"), _plan_str(bm25)
+    agg = ix._bm25_scored_agg(
+        *ix._bm25_inputs(docs), ix._bm25_qt(spark, BM25_QUERIES)
     )
-    naive = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    assert _added_shuffles(bm25, agg) == 1, _plan_str(bm25)
+    got = bm25.collect()
+    assert len(got) == len(BM25_QUERIES) * k
+    assert sorted(got) == sorted(
+        _without_group_limit(
+            spark, lambda: ix.bm25_topk(docs, BM25_QUERIES, k)
+        )
     )
-    two_stage = sim.global_topk(scored, k)
-    nv = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in naive.collect()}
-    ts = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in two_stage.collect()}
-    assert nv == ts
 
 
 def test_local_topk_nan_null_parity_with_window(spark):
     """NaN cosines rank FIRST under the window's cosine DESC (Spark
     orders NaN above all doubles) and NULLs rank LAST (DESC NULLS
-    LAST); the partition-local pre-filter must preserve exactly that
-    order or the two-stage result diverges from the naive window."""
+    LAST); the group-limited global_topk must keep exactly that order,
+    per partition and after the exchange, or it diverges from the
+    naive window."""
     import math
 
     from pyspark.sql.window import Window
@@ -143,20 +201,21 @@ def test_local_topk_nan_null_parity_with_window(spark):
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
-    naive = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 4)
+    naive = _without_group_limit(
+        spark,
+        lambda: scored.withColumn("rank", F.row_number().over(w)).filter(
+            F.col("rank") <= 4
+        ),
     )
-    two_stage = sim.global_topk(scored, 4)
+    ranked = sim.global_topk(scored, 4)
+    assert "WindowGroupLimit" in _plan_str(ranked)
 
     def key(r):
         c = r["cosine"]
         c = "nan" if (c is not None and math.isnan(c)) else c
         return (r["query_id"], r["rank"], r["neighbor_id"], c)
 
-    assert sorted(map(key, naive.collect())) == sorted(
-        map(key, two_stage.collect())
-    )
+    assert sorted(map(key, naive)) == sorted(map(key, ranked.collect()))
 
 
 def test_pandas_topk_matches_jvm_topk(spark, sf_dir):
