@@ -27,8 +27,13 @@ VERDICT r6 nit 3):
   operators calls ``release_pins()`` after consuming a result (every
   shim persist routes through the tracked ``pin()``) — documented here
   once instead of on every operator.
+* Driver-held rows enter a plan only through ``literal``: one parsed
+  ``VALUES`` text planned as a JVM-side ``LocalTableScan``. A
+  ``spark.createDataFrame`` over a Python list plans ``Scan
+  ExistingRDD`` instead, which starts a Python worker in every task
+  that reads it — a fixed cost per job that dwarfs a k-row relation.
 
-Both helpers decide from CATALYST PLAN STATISTICS (propagated from the
+Both shims decide from CATALYST PLAN STATISTICS (propagated from the
 file-scan size), not from ``df.rdd`` — the round-6 form's
 ``rdd.getNumPartitions()`` probe forced a full physical-plan + RDD-DAG
 build per operator construction and a per-query fixed cost the sf0.1
@@ -39,8 +44,10 @@ a driver-side plan fold with no job and no RDD conversion.
 from __future__ import annotations
 
 import logging
+import math
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 _log = logging.getLogger(__name__)
 _stats_probe_warned = False
@@ -255,3 +262,95 @@ def widen_for_compute(df: DataFrame, work_factor: int = 1) -> DataFrame:
             pass
         return df.repartition(target)
     return df
+
+
+# Non-nullable spellings of the IEEE specials: a double literal cannot
+# spell them, and CAST('NaN' AS DOUBLE) is a nullable expression, which
+# would leave a NOT NULL column nullable. The product overflows to
+# +Infinity (fractional arithmetic never raises, ANSI or not).
+_INF_SQL = "(1.0E308D * 10.0D)"
+_INT_SQL = {T.IntegerType: ("", 31), T.LongType: ("L", 63)}
+
+
+def _value_sql(v, dt: T.DataType) -> str:
+    """The SQL text of one non-null value of type ``dt`` — a
+    non-nullable expression, so VALUES infers nullability from the NULLs
+    alone."""
+    if isinstance(dt, T.StringType):
+        s = str(v).replace("\\", "\\\\").replace("'", "\\'")
+        # "${" would trigger spark.sql's variable substitution
+        return "'" + s.replace("$", "\\u0024") + "'"
+    if isinstance(dt, T.DoubleType):
+        x = float(v)
+        if math.isnan(x):
+            return f"({_INF_SQL} * 0.0D)"
+        if math.isinf(x):
+            return _INF_SQL if x > 0 else f"(-{_INF_SQL})"
+        return f"{x!r}D"  # repr round-trips every double exactly
+    if isinstance(dt, T.BooleanType):
+        return "true" if v else "false"
+    if type(dt) in _INT_SQL:
+        suffix, bits = _INT_SQL[type(dt)]
+        n = int(v)
+        if not -(1 << bits) <= n < (1 << bits):
+            raise ValueError(f"literal: {n} out of range for {dt.simpleString()}")
+        return f"{n}{suffix}"
+    if isinstance(dt, T.ArrayType):
+        return "array(" + ", ".join(
+            _field_sql(x, dt.elementType, dt.containsNull) for x in v
+        ) + ")"
+    raise TypeError(f"literal: unsupported type {dt.simpleString()}")
+
+
+def _field_sql(v, dt: T.DataType, nullable: bool) -> str:
+    if v is not None:
+        return _value_sql(v, dt)
+    if not nullable:
+        raise ValueError(f"literal: NULL in a NOT NULL {dt.simpleString()}")
+    return f"CAST(NULL AS {dt.simpleString()})"
+
+
+def _template_sql(dt: T.DataType, nullable: bool) -> str:
+    """A value that carries the declared nullability into VALUES's
+    inference: a typed NULL for a nullable field, else a non-null
+    default (an array default holds one NULL element when the type
+    allows NULL elements, as every DDL array does)."""
+    if nullable:
+        return f"CAST(NULL AS {dt.simpleString()})"
+    if isinstance(dt, T.ArrayType):
+        return "array(" + _template_sql(dt.elementType, dt.containsNull) + ")"
+    return _value_sql("" if isinstance(dt, T.StringType) else 0, dt)
+
+
+def literal(spark, schema, rows) -> DataFrame:
+    """Driver-held ``rows`` as a relation of ``schema`` (a DDL string or
+    a StructType), built JVM-side: ONE parsed ``VALUES`` text, planned
+    as a ``LocalTableScan`` — no Python RDD, no per-value py4j call (the
+    one-parse idea of functions.vector.long_array_sql). Doubles are
+    bit-exact, NULLs typed and strings escaped.
+
+    VALUES infers a column NOT NULL when it holds no NULL, so the text
+    ends with one template row that carries the declared nullability
+    (``_template_sql``); ``LIMIT len(rows)`` drops it, and the optimizer
+    folds the limit into the local relation. The schema is therefore
+    exactly ``schema`` — the one ``spark.createDataFrame(rows, schema)``
+    reports — for every row count, zero included."""
+    st = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    fields = st.fields
+    tuples = []
+    for r in rows:
+        if len(r) != len(fields):
+            raise ValueError(f"literal: row {r!r} does not match {st.simpleString()}")
+        tuples.append(
+            "(" + ", ".join(
+                _field_sql(v, f.dataType, f.nullable) for v, f in zip(r, fields)
+            ) + ")"
+        )
+    tuples.append(
+        "(" + ", ".join(_template_sql(f.dataType, f.nullable) for f in fields) + ")"
+    )
+    names = ", ".join("`" + f.name.replace("`", "``") + "`" for f in fields)
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join(tuples)} AS t({names}) "
+        f"LIMIT {len(tuples) - 1}"
+    )

@@ -40,19 +40,15 @@ def double_array_sql(values) -> str:
     return f"{float(values)!r}D"
 
 
-def long_array_lit(values) -> Column:
-    """Literal ``array<bigint>`` (arbitrarily nested) — the integer twin
-    of double_array_lit, same one-parse construction. Used for the
-    fixed-point K-Means centroids (operators/kmeans.py pinned fit),
-    where exact integer literals are what make the iterative oracle
-    replay bit-exact."""
-
-    def render(v) -> str:
-        if isinstance(v, (list, tuple)):
-            return "array(" + ", ".join(render(x) for x in v) + ")"
-        return f"{int(v)}L"
-
-    return F.expr(render(values))
+def long_array_sql(values) -> str:
+    """The SQL text of a (possibly nested) ``array<bigint>`` literal —
+    the integer twin of double_array_sql, same one-parse construction.
+    Used for the fixed-point K-Means centroids (operators/kmeans.py
+    pinned fit), where exact integer literals are what make the
+    iterative oracle replay bit-exact."""
+    if isinstance(values, (list, tuple)):
+        return "array(" + ", ".join(long_array_sql(x) for x in values) + ")"
+    return f"{int(values)}L"
 
 
 def dot(a: str | Column, b: str | Column) -> Column:

@@ -44,7 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from hadoop_project_spark.execution import eager_pin, widen_for_compute
+from hadoop_project_spark.execution import eager_pin, literal, widen_for_compute
 from hadoop_project_spark.functions.text import normalize_text
 
 
@@ -191,16 +191,6 @@ def phrase_occurrences(
     return phrase_occurrences_over(eager_pin(postings(docs)), phrases)
 
 
-def _literal(spark, names: list[str], rows: list[tuple]) -> DataFrame:
-    """A small query-literal relation, built JVM-side as ``inline`` over
-    one row: spark.createDataFrame over a Python list would start a
-    Python worker in every task that scans it."""
-    structs = [
-        F.struct(*[F.lit(v).alias(n) for n, v in zip(names, r)]) for r in rows
-    ]
-    return spark.sql("SELECT 1").select(F.inline(F.array(*structs)))
-
-
 def _reject_repeats(what: str, items: list) -> None:
     """Each item becomes rows of a literal relation the probe joins on,
     so a repeated item would double its matches: raise instead."""
@@ -225,9 +215,10 @@ def phrase_occurrences_over(p: DataFrame, phrases: list[str]) -> DataFrame:
             f"phrase_occurrences: blank/whitespace-only phrases: {blank!r}"
         )
     _reject_repeats("phrase_occurrences", phrases)
-    words = _literal(
+    words = literal(
         p.sparkSession,
-        ["phrase", "term", "off", "nw"],
+        "phrase STRING NOT NULL, term STRING NOT NULL, off INT NOT NULL, "
+        "nw INT NOT NULL",
         [
             (ph, w, i, len(ph.split()))
             for ph in phrases
@@ -294,7 +285,11 @@ def proximity_cooccurrence_over(
         )
     _reject_repeats("proximity_cooccurrence", [tuple(ab) for ab in pairs])
     pair_rows = [(f"{a} {b}", a, b) for a, b in pairs]
-    lit = _literal(p.sparkSession, ["pair", "a", "b"], pair_rows)
+    lit = literal(
+        p.sparkSession,
+        "pair STRING NOT NULL, a STRING NOT NULL, b STRING NOT NULL",
+        pair_rows,
+    )
     terms = sorted({t for ab in pairs for t in ab})
     hits = p.filter(F.col("term").isin(terms))
 
@@ -435,7 +430,7 @@ def _bm25_qt(spark, queries: list[str]) -> DataFrame:
     rows = [(q, t) for q in queries for t in q.split()]
     if not rows:
         raise ValueError(f"bm25: no query terms in {queries!r}")
-    return _literal(spark, ["query", "term"], rows)
+    return literal(spark, "query STRING NOT NULL, term STRING NOT NULL", rows)
 
 
 def bm25_relevance_eval(
@@ -467,8 +462,10 @@ def bm25_relevance_eval(
     spark = docs.sparkSession
     tf, dfr, dl, scal = _bm25_inputs(docs)
     qt = _bm25_qt(spark, queries)
-    nqdf = _literal(
-        spark, ["query", "nq"], [(q, len(q.split())) for q in queries]
+    nqdf = literal(
+        spark,
+        "query STRING NOT NULL, nq INT NOT NULL",
+        [(q, len(q.split())) for q in queries],
     )
     # the relevance set derives from the SAME pinned aggregate the top-k
     # ranks: with dup-free queries its matched-row count IS the
@@ -489,7 +486,7 @@ def bm25_relevance_eval(
     nrel = rel.groupBy("query").agg(
         F.count("*").cast("long").alias("n_relevant")
     )
-    qdf = _literal(spark, ["query"], [(q,) for q in queries])
+    qdf = literal(spark, "query STRING NOT NULL", [(q,) for q in queries])
     return (
         qdf.join(nrel, "query", "left")
         .join(hit, "query", "left")

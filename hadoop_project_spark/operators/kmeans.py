@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from hadoop_project_spark.functions.vector import (
     double_array_lit,
-    long_array_lit,
+    long_array_sql,
     squared_l2_distance,
 )
 
@@ -209,21 +209,27 @@ def quantized_vec(vec_col: str | Column = "embedding") -> Column:
     )
 
 
-def pinned_distances(qcents: list[list[int]], q_col: str = "qv") -> Column:
-    """array<bigint> of exact integer squared-L2 distances from the
-    quantized vector column to each literal centroid — pure integer
-    arithmetic, so argmin/top-2 decisions are identical in any engine
-    (no rounding discipline needed, unlike the float single-step
-    queries' 9-dp trick)."""
-    carr = long_array_lit(qcents)
-    return F.transform(
-        carr,
-        lambda cvec: F.aggregate(
-            F.zip_with(F.col(q_col), cvec, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ),
+def pinned_distances_sql(qcents: list[list[int]], q_col: str = "qv") -> str:
+    """The SQL text of an array<bigint> of exact integer squared-L2
+    distances from the quantized vector column to each literal centroid
+    — pure integer arithmetic, so argmin/top-2 decisions are identical
+    in any engine (no rounding discipline needed, unlike the float
+    single-step queries' 9-dp trick). One expr string, so the k × dim
+    literal is parsed once per plan."""
+    return (
+        f"transform({long_array_sql(qcents)}, c -> aggregate("
+        f"zip_with(`{q_col}`, c, (a, b) -> (a - b) * (a - b)), "
+        "0L, (acc, v) -> acc + v))"
     )
+
+
+def pinned_distances(qcents: list[list[int]], q_col: str = "qv") -> Column:
+    """pinned_distances_sql as a Column."""
+    return F.expr(pinned_distances_sql(qcents, q_col))
+
+
+# argmin over the `_ds` distance array, ties to the lowest index
+_ARGMIN_SQL = "CAST(array_position(_ds, array_min(_ds)) - 1 AS INT)"
 
 
 def assign_clusters_pinned(
@@ -231,15 +237,10 @@ def assign_clusters_pinned(
 ) -> DataFrame:
     """Add integer `cluster` (argmin, ties to the lowest index — exact,
     both engines) and bigint `dist` (micro-unit² squared L2)."""
-    ds = pinned_distances(qcents, q_col)
-    scored = qpts.withColumn("_ds", ds)
-    best = F.array_min(F.col("_ds"))
-    cluster = (F.array_position(F.col("_ds"), best) - 1).cast("int")
-    return (
-        scored.withColumn("cluster", cluster)
-        .withColumn("dist", best)
-        .drop("_ds")
-    )
+    cols = [f"`{c}`" for c in qpts.columns]
+    return qpts.selectExpr(
+        *cols, f"{pinned_distances_sql(qcents, q_col)} AS _ds"
+    ).selectExpr(*cols, f"{_ARGMIN_SQL} AS cluster", "array_min(_ds) AS dist")
 
 
 def quantize_points(
@@ -320,9 +321,12 @@ def kmeans_fit_pinned(
         converged = False
         it = 0
         for it in range(1, max_iter + 1):
-            assigned = assign_clusters_pinned(qpts, cents)
+            # assign -> posexplode as one selectExpr chain: each
+            # DataFrame step re-analyses a plan holding the k × dim
+            # literal, so the step count is the plan-build cost
             per_dim = (
-                assigned.select("cluster", F.posexplode("qv").alias("pos", "val"))
+                qpts.selectExpr("qv", f"{pinned_distances_sql(cents)} AS _ds")
+                .selectExpr(f"{_ARGMIN_SQL} AS cluster", "posexplode(qv) AS (pos, val)")
                 .groupBy("cluster", "pos")
                 .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
                 .collect()

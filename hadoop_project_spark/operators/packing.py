@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
+from hadoop_project_spark.execution import literal
 from hadoop_project_spark.functions.text import normalize_text
 from hadoop_project_spark.operators.bounds import (
     bucket_id,
@@ -163,7 +164,7 @@ def with_global_offset(
     for pid in sorted(totals):
         offsets.append((pid, acc))
         acc += int(totals[pid])
-    off_df = df.sparkSession.createDataFrame(offsets, "_pid int, _offset long")
+    off_df = literal(df.sparkSession, "_pid int, _offset long", offsets)
     return (
         local.join(F.broadcast(off_df), "_pid")
         .withColumn(out_col, (F.col("_offset") + F.col("_local_before")).cast("long"))

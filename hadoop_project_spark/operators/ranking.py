@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
+from hadoop_project_spark.execution import literal
 from hadoop_project_spark.operators.bounds import (
     bucket_id,
     collect_split_points,
@@ -122,8 +123,7 @@ def global_distribution_ranks(
     for pid_val in sorted(counts):
         offsets.append((pid_val, acc))
         acc += counts[pid_val]
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(offsets, "_pid int, _offset long")
+    off_df = literal(df.sparkSession, "_pid int, _offset long", offsets)
     ranked = _with_local_ranks(assigned, order_cols)
     rank = F.col("_local_rank") + F.col("_offset")
     return (

@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from hadoop_project_spark.execution import literal
 from hadoop_project_spark.operators.bounds import (
     bucket_id,
     collect_split_points,
@@ -90,7 +91,6 @@ def weighted_quantiles(
                     targets.append((g, qn, qd, pid_val, acc, total))
                     break
                 acc += ws
-    spark = df.sparkSession
     from pyspark.sql import types as T
 
     tgt_schema = T.StructType(
@@ -103,7 +103,7 @@ def weighted_quantiles(
             T.StructField("wtot", T.LongType()),
         ]
     )
-    tgt = spark.createDataFrame(targets, tgt_schema)
+    tgt = literal(df.sparkSession, tgt_schema, targets)
     cand = assigned.join(F.broadcast(tgt), ["g", "_pid"])
     w_cum = Window.partitionBy("g", "qn", "qd").orderBy("v", *tiebreak)
     cum = F.col("below") + F.sum("w").over(w_cum)

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from hadoop_project_spark.catalog import load_table
+from hadoop_project_spark.execution import literal
 from hadoop_project_spark.operators import bpe
 from hadoop_project_spark.plans.registry import register
 from hadoop_project_spark.plans.text_pipeline import SQL_NORM
@@ -177,7 +178,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         "merge_idx BIGINT, lhs STRING, rhs STRING, "
         "merged STRING, pair_count BIGINT"
     )
-    return spark.createDataFrame(rows, schema)
+    return literal(spark, schema, rows)
 
 
 @register(

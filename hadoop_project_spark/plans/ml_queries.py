@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hadoop_project_spark.catalog import load_table
+from hadoop_project_spark.execution import literal
 from hadoop_project_spark.functions.vector import (
     double_array_lit,
     squared_l2_distance,
@@ -251,7 +252,9 @@ def kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers. The oracle replays the full iterative loop (C2) in SQL,
     so the driver's hash-match certifies init, every assignment (O3),
     and every weighted-mean update (A11) across all KM_PIN_ITERS
-    iterations — the pattern plans/bpe_queries.py established."""
+    iterations — the pattern plans/bpe_queries.py established. The
+    k × dim fitted values leave the driver through execution.literal
+    (a LocalTableScan), so reading them starts no Python worker."""
     emb = load_table(spark, sf_dir, "embeddings")
     qpts = quantize_points(emb).cache()
     try:
@@ -263,7 +266,7 @@ def kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         for ci, c in enumerate(res.centroids_q)
         for pos, q in enumerate(c)
     ]
-    return spark.createDataFrame(rows, "cluster int, pos int, val double")
+    return literal(spark, "cluster int, pos int, val double", rows)
 
 
 @register(
@@ -311,7 +314,8 @@ def kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-point silhouettes are identical doubles on both engines
     (integer d1/d2); the mean runs over DECIMAL(18,15) casts so the
     sum is exact and partition-order-independent before the one final
-    double division."""
+    double division. The per-k rows are scored on the driver and
+    returned through execution.literal (a LocalTableScan)."""
     emb = load_table(spark, sf_dir, "embeddings")
     qpts = quantize_points(emb).cache()
     try:
@@ -330,8 +334,8 @@ def kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append((k, float(row["sil"]), res.n_iters, res.converged))
     finally:
         qpts.unpersist()
-    return spark.createDataFrame(
-        rows, "k int, silhouette double, n_iters int, converged boolean"
+    return literal(
+        spark, "k int, silhouette double, n_iters int, converged boolean", rows
     )
 
 

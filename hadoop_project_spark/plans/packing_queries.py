@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from hadoop_project_spark.catalog import load_table
+from hadoop_project_spark.execution import literal
 from hadoop_project_spark.operators import packing as pk
 from hadoop_project_spark.operators import textstats as ts
 from hadoop_project_spark.operators.tfidf import TOP_TERMS, tfidf_top_terms
@@ -506,9 +507,10 @@ def incremental_shard_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.expr("bit_xor(h)").cast("long").alias("content_hash"),
     )
-    flags = spark.createDataFrame(
-        [(int(s), bool(b)) for s, b in sorted(reused.items())],
+    flags = literal(
+        spark,
         "shard_id long, reused boolean",
+        [(int(s), bool(b)) for s, b in sorted(reused.items())],
     )
     return man.join(F.broadcast(flags), "shard_id").select(
         "shard_id", "n_docs", "content_hash", "reused"

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hadoop_project_spark.catalog import load_table
-from hadoop_project_spark.execution import eager_pin, widen_for_compute
+from hadoop_project_spark.execution import eager_pin, literal, widen_for_compute
 from hadoop_project_spark.operators.lrquality import (
     FQ,
     LR_DEN,
@@ -222,9 +222,10 @@ def quality_lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen-logit deploy shape."""
     feats = _feats(spark, sf_dir)
     wq = _fitted(spark, sf_dir, feats)
-    return spark.createDataFrame(
-        [(name, int(w)) for name, w in zip(LR_FEATURES, wq)],
+    return literal(
+        spark,
         "feature string, wq bigint",
+        [(name, int(w)) for name, w in zip(LR_FEATURES, wq)],
     )
 
 

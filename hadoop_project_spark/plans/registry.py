@@ -55,16 +55,18 @@ _ORDER: dict[str, int] = {}
 # anchors are demoted to 500, still oracle-tested every CI run by
 # tests/test_oracle_parity.py.
 PRIORITY_OVERRIDES: dict[str, int] = {
-    # --- round-15 regression anchors: keep in-window (prio 20) ---
-    # Round 15: the window is the headline set, the LR trio (at its
-    # prio-10 registration), every rider of the one-scan index probes
-    # and the group-limited top-k window (operators/invindex.py phrase,
-    # proximity and stored-BM25 probes, the BM25 top-k; similarity.py
-    # global_topk and the ADC ranking — 27 riders, those not listed here
-    # sit in-window at their prio-10 registration), and the round-14
-    # anchors still carrying a round-14 change (co-purchase pair
-    # builder, SemDeDup decision table, shard-rewrite protocol,
-    # set-based MinHash-LSH), one or more riders per change.
+    # --- round-16 regression anchors: keep in-window (prio 20) ---
+    # Round 16: the window is the headline set, every rider of
+    # execution.literal (the driver-built relations that replaced
+    # spark.createDataFrame and invindex._literal: K-Means, rank
+    # offsets, packing offsets, weighted-quantile targets, LR weights,
+    # BPE merges, roundtrip dims, served/trained artifact builds, empty
+    # segment relations, the invindex probes — 33 riders, found by
+    # wrapping the helper and building all 204 queries at sf0.001) and
+    # one or more riders of each round-14/15 change not yet in a
+    # CORRECTNESS row (co-purchase pair builder, set-based MinHash-LSH,
+    # the group-limited top-k window). Listed explicitly, so the 50
+    # names below are the window.
     **{
         name: 20
         for name in (
@@ -74,47 +76,55 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             "regional_revenue",
             "two_leg_conversion",
             "priority_month_matrix",
-            # invindex.py: one-scan phrase and proximity probes
-            "phrase_search_hits",
-            "proximity_search_pairs",
-            "inverted_index_build_roundtrip",
-            "phrase_search_served",
-            "index_segment_compaction_roundtrip",
-            "index_base_plus_segments_probe",
-            # invindex.py: query-term-pruned stored BM25, top-k window
-            "bm25_mrr_eval",
-            "bm25_topk",
-            "bm25_topk_stored",
-            # similarity.py: global_topk / ADC ranking as one window
-            "ann_recall_at_k",
-            "ann_topk_bruteforce",
-            "ann_topk_ivf",
-            "ann_topk_lsh_verified",
-            "ann_truncated_dim_recall",
-            "ann_topk_pq_adc",
-            "ann_pq_recall",
+            # execution.literal riders
+            "kmeans_centroids",
+            "kmeans_cluster_sizes",
+            "kmeans_silhouette",
+            "customer_value_deciles",
+            "incremental_shard_export",
+            "incremental_shard_rewrite",
+            "training_shard_assignment",
+            "training_shard_manifest",
+            "sequence_packing",
+            "weighted_price_quantiles",
+            "quality_lr_train",
+            "quality_lr_corpus_filter",
+            "quality_lr_eval",
+            "bpe_train_merges",
+            "dpp_partitioned_join_roundtrip",
+            "semantic_dedup_bucketed",
+            "semantic_dedup_decisions",
             "ann_topk_ivfpq",
-            "ann_topk_ivfpq_served",
             "ann_ivfpq_segment_compaction",
             "ann_ivfpq_base_plus_segments",
-            "contrastive_dense_negatives",
+            "neardup_gate_lsm_admissions",
+            "neardup_gate_served_probe",
+            "phrase_search_hits",
+            "phrase_search_served",
+            "proximity_search_pairs",
+            "inverted_index_build_roundtrip",
+            "index_segment_compaction_roundtrip",
+            "index_base_plus_segments_probe",
+            "bm25_topk",
+            "bm25_topk_stored",
+            "bm25_topk_served",
+            "bm25_mrr_eval",
+            "bm25_prf_dense_rerank",
+            # round 15, similarity.py: global_topk / ADC ranking window
+            "ann_topk_bruteforce",
+            "ann_topk_ivf",
+            "ann_topk_pq_adc",
+            "hybrid_topk_rrf",
             "contrastive_pairs",
-            # round 14, governance_queries.py: one _copurchase_pairs
-            # builder (served twin in-window at its prio-10 registration)
-            "part_pagerank_iterated",
-            "part_copurchase_rank_step",
-            "part_copurchase_triangles",
-            # round 14, dedup.py + ssjoin.py: set-based minhash_lsh_pairs,
-            # shared set builder / verify tail, one-parse signature and
-            # band-key text
+            # round 14, dedup.py + ssjoin.py: set-based minhash_lsh_pairs
             "dedup_minhash_lsh",
             "dedup_clusters",
             "split_leakage_report",
-            "dedup_lsh_recall_eval",
-            "lsh_band_sweep",
             "ssjoin_prefix_pairs",
-            "neardup_gate_lsm_admissions",
-            "neardup_gate_served_probe",
+            # round 14, governance_queries.py: one _copurchase_pairs
+            "part_copurchase_rank_step",
+            "part_copurchase_triangles",
+            "part_pagerank_served",
         )
     },
     # --- green in r1-r8, still CI-oracle-tested: demote (prio 500) ---
@@ -126,11 +136,23 @@ PRIORITY_OVERRIDES: dict[str, int] = {
     **{
         name: 500
         for name in (
+            # r15 anchors released in r16 (code untouched in r16; a
+            # sibling rider of the same round-14/15 change stays
+            # in-window; all green in their last CORRECTNESS row)
+            "ann_recall_at_k",
+            "ann_topk_prefiltered",
+            "ann_topk_lsh_verified",
+            "ann_truncated_dim_recall",
+            "ann_pq_recall",
+            "ann_topk_ivfpq_served",
+            "contrastive_dense_negatives",
+            "mmr_diversified_topk",
+            "dedup_lsh_recall_eval",
+            "lsh_band_sweep",
+            "part_pagerank_iterated",
             # r14 anchors released in r15 (code untouched in r15; a
             # sibling rider of the same round-14 change stays in-window;
             # all green in their last CORRECTNESS row)
-            "semantic_dedup_bucketed",
-            "incremental_shard_export",
             "part_pagerank_bucketed",
             "dedup_canonical_by_quality",
             "leakage_free_split",
@@ -138,9 +160,6 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             # r13 prio-20 anchors released in r14 (code untouched in
             # r14; all green in CORRECTNESS_r13)
             "heavy_hitter_bigrams",
-            "kmeans_centroids",
-            "kmeans_cluster_sizes",
-            "kmeans_silhouette",
             "kmeans_assign_step",
             "nearest_two_centroids",
             # r12 prio-10/20 anchors released this round (code
@@ -159,7 +178,6 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             "exact_substring_dedup_corpus",
             "corpus_version_diff",
             "image_dhash_neardup",
-            "training_shard_manifest",
             # r10 anchors released in r11 (code untouched;
             # all green in CORRECTNESS_r10)
             "avro_roundtrip_segment_stats",
@@ -167,7 +185,6 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             # r9 anchors released in r10 (code untouched in r10;
             # the two writer-roundtrip movers were adjudicated as host
             # drift by the round-10 within-session A/B — SCALING.md)
-            "dpp_partitioned_join_roundtrip",
             "inverted_index_directory",
             # r8 anchors (released in r9; ssjoin-pin family deltas were
             # re-adjudicated by the round-9 within-session A/B)
@@ -178,7 +195,6 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             "dedup_exact",
             "dedup_ngram_jaccard",
             "doc_quality_model_filter",
-            "bpe_train_merges",
             "bpe_encode_token_counts",
             "tfidf_top_terms",
             "bigram_pmi_collocations",
@@ -221,7 +237,6 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             "lineitem_winsorized_stats",
             "training_mix_temperature",
             "ab_test_value_zscore",
-            "weighted_price_quantiles",
             "national_market_share",
             "promo_revenue_share",
             "orders_expectations",

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from hadoop_project_spark.catalog import load_table
+from hadoop_project_spark.execution import literal
 from hadoop_project_spark.functions.text import tokenize
 from hadoop_project_spark.plans.registry import register
 from hadoop_project_spark.sources.csv import write_csv
@@ -340,8 +341,8 @@ def dpp_partitioned_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     fact_path = _roundtrip_dir(sf_dir, "lineitem_by_flag")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(fact_path)
     dim_path = _roundtrip_dir(sf_dir, "flag_dim")
-    spark.createDataFrame(
-        [("A", "keep"), ("N", "x"), ("R", "x")], "flag string, label string"
+    literal(
+        spark, "flag string, label string", [("A", "keep"), ("N", "x"), ("R", "x")]
     ).write.mode("overwrite").parquet(dim_path)
     back = spark.read.parquet(fact_path)
     dim = spark.read.parquet(dim_path).where(F.col("label") == "keep")

@@ -52,7 +52,7 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 
 from hadoop_project_spark.catalog import load_table
-from hadoop_project_spark.execution import eager_pin
+from hadoop_project_spark.execution import eager_pin, literal
 from hadoop_project_spark.operators.invindex import (
     DOCLEN_BUCKETS,
     POSTINGS_BUCKETS,
@@ -658,7 +658,7 @@ def ensure_served_artifact(
 
     def build(staging: str) -> None:
         (
-            spark.createDataFrame(rows, schema_ddl)
+            literal(spark, schema_ddl, rows)
             .coalesce(1)
             .write.mode("overwrite")
             .parquet(tables[0].location(staging))
@@ -752,7 +752,7 @@ def ensure_trained_artifact(
         rows = fit_rows()
         fitted.append(rows)
         (
-            spark.createDataFrame(rows, schema_ddl)
+            literal(spark, schema_ddl, rows)
             .coalesce(1)
             .write.mode("overwrite")
             .parquet(tables[0].location(staging))

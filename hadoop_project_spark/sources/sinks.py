@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hadoop_project_spark.execution import literal
+
 
 def warehouse_path(spark: SparkSession) -> str:
     """Filesystem path of the session's warehouse dir — the one place
@@ -205,5 +207,5 @@ def write_text_report(spark: SparkSession, lines: list[str], path: str) -> None:
     Summary.txt writer, final/src/main/java/calc/Summarizer.java:65-121):
     tiny driver-held content written as ONE ordered text file via
     coalesce(1)."""
-    df = spark.createDataFrame([(l,) for l in lines], "value string")
+    df = literal(spark, "value string", [(l,) for l in lines])
     df.coalesce(1).write.mode("overwrite").text(path)

@@ -74,6 +74,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hadoop_project_spark.execution import literal
 from hadoop_project_spark.operators.invindex import (
     POSTINGS_BUCKETS,
     index_table_names,
@@ -286,7 +287,7 @@ def _read_paths(
     if not paths:
         # every live segment is empty (an empty micro-batch publishes a
         # zero-file manifest) — an empty relation, not a read error
-        return spark.createDataFrame([], schema)
+        return literal(spark, schema, [])
     return spark.read.schema(schema).parquet(*paths)
 
 
@@ -310,7 +311,7 @@ def read_segments(
         else _live_segments(seg_root)
     )
     if not segs:
-        return spark.createDataFrame([], schema)
+        return literal(spark, schema, [])
     return _read_paths(spark, segs, schema)
 
 

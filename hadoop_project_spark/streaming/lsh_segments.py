@@ -55,7 +55,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from hadoop_project_spark.execution import eager_pin
+from hadoop_project_spark.execution import eager_pin, literal
 from hadoop_project_spark.streaming.dedup_gate import batch_band_keys
 from hadoop_project_spark.streaming.index_segments import (
     compact_segments_into,
@@ -162,7 +162,7 @@ def gate_state(
         # tests/test_plan_shapes.py holds because of this branch)
         return spark.table(table)
     seg = (
-        spark.createDataFrame([], BANDKEYS_SCHEMA)
+        literal(spark, BANDKEYS_SCHEMA, [])
         if no_segs
         else read_bandkeys_segments(spark, seg_root)
     )

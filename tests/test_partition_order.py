@@ -1,16 +1,18 @@
 """Partition-order independence: the riders of the one-scan index
-probes and of the group-limited top-k window must hash-match their
-DuckDB oracles whatever the shuffle width. Each runs at 1 and at 7
-shuffle partitions, with AQE partition coalescing off so the width is
-the one the plan really runs at: one partition makes every aggregate
-and window see a single input order, seven split the partial group
-limits, partial aggregates and decimal sums across tasks."""
+probes, of the group-limited top-k window and of the driver-built
+literal relations (K-Means fit, rank offsets, weighted-quantile
+targets) must hash-match their DuckDB oracles whatever the shuffle
+width. Each runs at 1 and at 7 shuffle partitions, with AQE partition
+coalescing off so the width is the one the plan really runs at: one
+partition makes every aggregate and window see a single input order,
+seven split the partial group limits, partial aggregates and decimal
+sums across tasks."""
 
 from __future__ import annotations
 
 import pytest
 
-from hadoop_project_spark.plans import all_queries
+from hadoop_project_spark.plans import all_queries, ml_queries
 from hadoop_project_spark.quality import compare_to_oracle
 
 SPECS = all_queries()
@@ -30,6 +32,12 @@ RIDERS = [
     # tests/test_oracle_parity.py)
     "ann_topk_bruteforce",
     "ann_topk_pq_adc",
+    # execution.literal relations built from driver-side aggregates:
+    # the pinned K-Means fit's centroids, ranking.py's per-bucket rank
+    # offsets, wquantile.py's per-group target buckets
+    "kmeans_centroids",
+    "customer_value_deciles",
+    "weighted_price_quantiles",
 ]
 
 _CONF = {
@@ -44,6 +52,8 @@ def test_rider_matches_oracle_at_shuffle_width(spark, sf_dir, name, parts):
     saved = {k: spark.conf.get(k) for k in _CONF}
     for k, v in _CONF.items():
         spark.conf.set(k, str(parts) if v is None else v)
+    # a memoized fit from the other width would skip the fit under test
+    ml_queries._FIT_CACHE.clear()
     try:
         spec = SPECS[name]
         df = spec.build(spark, sf_dir)

@@ -534,7 +534,7 @@ def test_bm25_eval_truth_side_reuses_pinned_inputs(spark, sf_dir):
     postings for the truth set would surface as a real file scan, the
     exact cost that made this the family's most expensive probe at
     sf1). The only non-cache leaves allowed are the query-literal
-    ExistingRDD relations."""
+    LocalTableScan relations (execution.literal)."""
     nodes = _physical_nodes(SPECS["bm25_mrr_eval"].build(spark, sf_dir))
     file_scans = [n for n in nodes if "Scan parquet" in n]
     assert file_scans == [], file_scans

@@ -24,10 +24,10 @@ from hadoop_project_spark.plans import all_queries
 WINDOW = 50
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Regression anchors for round 15: the headline set, the LR trio, every
-# rider of the one-scan index probes and the group-limited top-k window
-# (all 27), and one or more riders of each round-14 change not yet
-# hash-verified in a window — must be proven green THIS round.
+# Regression anchors for round 16: the headline set, every rider of
+# execution.literal (all 33), and one or more riders of each round-14/15
+# change not yet hash-verified in a window — must be proven green THIS
+# round.
 MUST_VERIFY = {
     # headline (every round)
     "word_count",
@@ -35,64 +35,60 @@ MUST_VERIFY = {
     "regional_revenue",
     "two_leg_conversion",
     "priority_month_matrix",
-    # the LR trio after the oracle BIGINT casts (DuckDB HUGEINT output
-    # columns canonicalizing differently from int64)
+    # execution.literal: K-Means results and the pinned Lloyd step
+    "kmeans_centroids",
+    "kmeans_cluster_sizes",
+    "kmeans_silhouette",
+    # execution.literal: rank / packing offsets, wquantile targets
+    "customer_value_deciles",
+    "incremental_shard_export",
+    "incremental_shard_rewrite",
+    "training_shard_assignment",
+    "training_shard_manifest",
+    "sequence_packing",
+    "weighted_price_quantiles",
+    # execution.literal: fitted values, BPE merges, roundtrip dim
     "quality_lr_train",
     "quality_lr_corpus_filter",
     "quality_lr_eval",
-    # invindex.py: one-scan phrase and proximity probes
+    "bpe_train_merges",
+    "dpp_partitioned_join_roundtrip",
+    # execution.literal: served artifact builds
+    "semantic_dedup_bucketed",
+    "semantic_dedup_decisions",
+    "ann_topk_ivfpq",
+    # execution.literal: empty segment relations
+    "ann_ivfpq_segment_compaction",
+    "ann_ivfpq_base_plus_segments",
+    "neardup_gate_lsm_admissions",
+    "neardup_gate_served_probe",
+    # execution.literal: the invindex probe literals
     "phrase_search_hits",
+    "phrase_search_served",
     "proximity_search_pairs",
     "inverted_index_build_roundtrip",
-    "phrase_search_served",
     "index_segment_compaction_roundtrip",
     "index_base_plus_segments_probe",
-    # invindex.py: query-term-pruned stored BM25 and the BM25 top-k
-    # window, with every consumer of the ranking
-    "bm25_mrr_eval",
     "bm25_topk",
     "bm25_topk_stored",
     "bm25_topk_served",
+    "bm25_mrr_eval",
     "bm25_prf_dense_rerank",
-    "hybrid_topk_rrf",
-    "mmr_diversified_topk",
-    # similarity.py: global_topk / ADC ranking as one group-limited
-    # window, every caller
-    "ann_recall_at_k",
-    "ann_topk_prefiltered",
+    # round 15, similarity.py: global_topk / ADC ranking window
     "ann_topk_bruteforce",
     "ann_topk_ivf",
-    "ann_topk_lsh_verified",
-    "ann_truncated_dim_recall",
     "ann_topk_pq_adc",
-    "ann_pq_recall",
-    "ann_topk_ivfpq",
-    "ann_topk_ivfpq_served",
-    "ann_ivfpq_segment_compaction",
-    "ann_ivfpq_base_plus_segments",
-    "contrastive_dense_negatives",
+    "hybrid_topk_rrf",
     "contrastive_pairs",
-    # round 14, governance_queries.py: one _copurchase_pairs builder
-    "part_pagerank_iterated",
-    "part_pagerank_served",
-    "part_copurchase_rank_step",
-    "part_copurchase_triangles",
-    # round 14, similarity_queries.py: one SemDeDup decision table
-    "semantic_dedup_decisions",
-    # round 14, packing_queries.py/shardexport.py: production-only
-    # rewrite protocol
-    "incremental_shard_rewrite",
-    "training_shard_assignment",
-    # round 14, dedup.py + ssjoin.py: set-based minhash_lsh_pairs, shared
-    # set builder / verify tail, one-parse signature and band-key text
+    # round 14, dedup.py + ssjoin.py: set-based minhash_lsh_pairs
     "dedup_minhash_lsh",
     "dedup_clusters",
     "split_leakage_report",
-    "dedup_lsh_recall_eval",
-    "lsh_band_sweep",
     "ssjoin_prefix_pairs",
-    "neardup_gate_lsm_admissions",
-    "neardup_gate_served_probe",
+    # round 14, governance_queries.py: one _copurchase_pairs builder
+    "part_copurchase_rank_step",
+    "part_copurchase_triangles",
+    "part_pagerank_served",
 }
 
 
