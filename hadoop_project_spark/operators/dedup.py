@@ -14,8 +14,7 @@ O(n) + O(candidate pairs) — never an n² cross join:
 
 Hashing is md5-based (functions/text.md5_i64) so the DuckDB oracle
 reproduces every signature exactly — engine-internal hashes (xxhash64)
-would be faster but unverifiable; at production scale swap HASH_EXPR for
-xxhash64 via the `portable_hash` flag.
+would be faster but unverifiable.
 
 At 100 TB: every stage is explode → hash-partition shuffle on a
 synthetic key (band key / chunk value / rare gram) whose cardinality
@@ -59,60 +58,22 @@ def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
     )
 
 
-def doc_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3) -> DataFrame:
-    """Distinct (id, shingle) pairs, deduped by a global distinct() —
-    the exploded set form the sketch, corpus and retrieval operators
-    and the streaming gate consume. minhash_lsh_pairs uses
-    doc_shingle_sets instead (deduped per row, no exchange).
-
-    Tokenization is materialized in its own projection before the
-    shingle transform: expressions referenced inside a transform lambda
-    re-evaluate per element, so inlining split(normalize(...)) would run
-    the regex once per shingle (6× measured slowdown at sf0.1).
-
-    (Round 6 measured SIGNATURES as 16 transform + array_min passes over
-    per-doc set arrays markedly SLOWER than the min-hash aggregate over
-    an exploded stream — 5.1 s vs 3.1 s at sf0.1 — so minhash_lsh_pairs
-    keeps the aggregate and feeds it by exploding doc_shingle_sets.)"""
-    # widen on the RAW (id, text) projection: the normalize regex and
-    # the split then run AFTER the exchange, so a split-starved scan
-    # (single-row-group parquet) only pays serial decompression, not
-    # serial regex work. work_factor 32: this is the package's
-    # heaviest per-byte transform (shingles + 16 hash aggregates over
-    # ~30x-decompressing text), and compressed-byte stats leave a
-    # quarter-corpus micro-batch single-tasked at bench scale —
-    # measured 2.67 -> 1.73 s warm for one gate batch at sf0.1
-    # (round 12, guide §2.5 input-skew/§1.2).
-    toks = widen_for_compute(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
-        work_factor=32,
-    ).select(
-        "doc_id",
-        F.split(normalize_text(text_col), " ").alias("toks"),
-    )
-    return (
-        toks.select(
-            "doc_id", F.explode(shingles_from_tokens(F.col("toks"), k)).alias("sh")
-        )
-        .distinct()
-    )
-
-
 def doc_shingle_sets(docs: DataFrame, k: int = 3) -> DataFrame:
     """(doc_id, shs, n): each document's DISTINCT k-word shingles as a
     sorted array plus its size — deduped per row with array_distinct
     BEFORE any explode, so "distinct (doc, sh)" costs no shuffle
     (measured 3x cheaper than explode-then-global-distinct at sf0.1).
-    Equal to doc_shingles as a set because doc_id is unique per row.
     Shingling runs on a MATERIALIZED token array (see
     functions/text.py:shingles_from_tokens for the 6x re-evaluation
-    pitfall this avoids). The one set builder of the MinHash and
-    prefix-filter (operators/ssjoin.py) pipelines."""
+    pitfall this avoids). The one shingle builder of the package: the
+    MinHash, prefix-filter (operators/ssjoin.py), sketch, corpus and
+    retrieval pipelines all start here (doc_shingles is its explode)."""
     # widen on raw text so the normalize/split regex runs post-exchange.
     # work_factor 32: shingle + sort_array over ~30x-decompressing text
     # — compressed-byte stats left this whole build on ONE task at
     # bench scale (profiled as an 8.7 s single-task pin job inside
-    # lsh_band_sweep, round 12; same class as doc_shingles)
+    # lsh_band_sweep, round 12; the same held for a quarter-corpus
+    # gate micro-batch: 2.67 -> 1.73 s warm at sf0.1)
     toks = widen_for_compute(
         docs.select("doc_id", "text"), work_factor=32
     ).select("doc_id", F.split(normalize_text("text"), " ").alias("t"))
@@ -122,6 +83,28 @@ def doc_shingle_sets(docs: DataFrame, k: int = 3) -> DataFrame:
             F.array_distinct(shingles_from_tokens(F.col("t"), k))
         ).alias("shs"),
     ).withColumn("n", F.size("shs"))
+
+
+def _shingle_stream(sets: DataFrame) -> DataFrame:
+    """(doc_id, sh): one row per element of doc_shingle_sets' arrays.
+
+    explode_outer, not explode: over a plain array column Spark infers
+    a size(shs) > 0 filter for an inner explode and pushes it through
+    the projections to the scan, where it re-runs the whole shingle
+    expression (the regex once per element) on the un-widened split —
+    5.5 s against 0.3 s warm for the sf0.1 stream on local[4], and
+    6.5 s against 1.9 s for its band keys. Every set holds at least
+    one shingle (shingles_from_tokens never returns an empty array),
+    so both forms emit the same rows."""
+    return sets.select("doc_id", F.explode_outer("shs").alias("sh"))
+
+
+def doc_shingles(docs: DataFrame, k: int = 3) -> DataFrame:
+    """(doc_id, sh): the explode of doc_shingle_sets — one row per
+    distinct (doc, shingle) with no exchange, since each set is already
+    distinct and doc_id is unique per row. The stream form the sketch,
+    corpus and retrieval operators consume."""
+    return _shingle_stream(doc_shingle_sets(docs, k))
 
 
 def set_overlap(cand: DataFrame, sets: DataFrame) -> DataFrame:
@@ -145,9 +128,15 @@ def set_overlap(cand: DataFrame, sets: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(shingles: DataFrame) -> DataFrame:
-    """K min-hashes per doc, as 60-bit INTEGER hashes (functions/text.
-    md5_i64, engine-portable like every hash here).
+def minhash_signatures(sets: DataFrame) -> DataFrame:
+    """K min-hashes per doc from doc_shingle_sets' (doc_id, shs)
+    arrays, as 60-bit INTEGER hashes (functions/text.md5_i64,
+    engine-portable like every hash here).
+
+    The sets are exploded into a (doc_id, sh) stream for the min-hash
+    aggregate: round 6 measured the signatures as 16 transform +
+    array_min passes over the per-doc arrays markedly SLOWER than the
+    aggregate over the exploded stream (5.1 s vs 3.1 s at sf0.1).
 
     Integer min-hashes are a round-6 rewrite driven by sf1 shuffle
     telemetry: min over md5 hex STRINGS forced Spark into SortAggregate
@@ -167,7 +156,7 @@ def minhash_signatures(shingles: DataFrame) -> DataFrame:
         F.expr(f"min({md5_i64_sql('sh', i)})").alias(f"h{i}")
         for i in range(NUM_HASHES)
     ]
-    return shingles.groupBy("doc_id").agg(*aggs)
+    return _shingle_stream(sets).groupBy("doc_id").agg(*aggs)
 
 
 def lsh_band_keys(signatures: DataFrame) -> DataFrame:
@@ -216,20 +205,12 @@ def lsh_candidate_pairs(band_keys: DataFrame) -> DataFrame:
     )
 
 
-def lsh_band_relation(docs: DataFrame) -> DataFrame:
-    """Eager-pinned (doc_id, band, key) LSH index — the full
-    shingle → signature → band-key pipeline materialized once.
-
-    Factored here (round 8, VERDICT r7 item 4) because its consumer,
-    the streaming gate's batch twin, SELF-JOINS this relation (as
-    minhash_lsh_pairs self-joins its own pinned band keys): without the
-    pin, both join sides recompute the 16-hash signature aggregate from
-    raw text inside one job — the gate twin was paying exactly that
-    (the surface's slowest sf0.1 query; measured 5.1 → 0.6 s at sf0.1
-    and 7.1 → 1.5 s at sf1 after the pin, shuffle 1.3 → 0.03 MB). The relation is
-    O(docs × NUM_BANDS) short rows — the LSH table a real feature
-    store would persist."""
-    return eager_pin(lsh_band_keys(minhash_signatures(doc_shingles(docs))))
+def doc_band_keys(docs: DataFrame) -> DataFrame:
+    """(doc_id, band, key) for a document relation: doc_shingle_sets →
+    minhash_signatures → lsh_band_keys, the one band-key pipeline of
+    the streaming gate, its batch twin, the LSM segments and the served
+    probe. Lazy; callers that self-join or reuse it eager-pin it."""
+    return lsh_band_keys(minhash_signatures(doc_shingle_sets(docs)))
 
 
 def minhash_lsh_pairs(docs: DataFrame, k_shingle: int = 3) -> DataFrame:
@@ -237,11 +218,11 @@ def minhash_lsh_pairs(docs: DataFrame, k_shingle: int = 3) -> DataFrame:
 
     Plan: (1) per-doc distinct shingle sets (doc_shingle_sets — deduped
     inside the map task, no exchange), pinned lazily: the signature
-    stage and both verify sides read them; (2) the sets re-explode into
-    the (doc_id, sh) stream the 16-hash min aggregate wants; (3) band
-    keys, eager-pinned before the candidate self-join; (4) exact
-    Jaccard of each candidate pair from its two sets (set_overlap), the
-    same integer operands as the oracle's count form. A band collision
+    stage and both verify sides read them; (2) the 16-hash min
+    aggregate over the sets' exploded stream; (3) band keys,
+    eager-pinned before the candidate self-join; (4) exact Jaccard of
+    each candidate pair from its two sets (set_overlap), the same
+    integer operands as the oracle's count form. A band collision
     implies a shared shingle (equal 60-bit min-hashes), so every
     candidate has |A∩B| ≥ 1 and the oracle's inner intersection join
     drops none of them.
@@ -254,12 +235,11 @@ def minhash_lsh_pairs(docs: DataFrame, k_shingle: int = 3) -> DataFrame:
     query_p90_s 0.59x; sf0.1 fresh process, median of 6 interleaved
     pairs, cold 18.3 → 13.6 s, warm 5.5 → 3.3 s."""
     sets = pin(doc_shingle_sets(docs, k_shingle))
-    sh = sets.select("doc_id", F.explode("shs").alias("sh"))
     # band keys materialize BEFORE the candidate self-join: AQE does
     # not reuse the two join sides' exchanges, so both would re-run the
     # signature aggregate + 16-hash md5 pass inside one job (observed
     # as twin 560 MB/50-100 s stages in the sf1 stage telemetry).
-    bk = eager_pin(lsh_band_keys(minhash_signatures(sh)))
+    bk = eager_pin(lsh_band_keys(minhash_signatures(sets)))
     return set_overlap(lsh_candidate_pairs(bk), sets).select(
         "doc_a",
         "doc_b",

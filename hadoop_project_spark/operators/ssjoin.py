@@ -360,7 +360,8 @@ def duplicate_spans(
     byte-splits with 30 cores idle.
     """
     # work_factor 32: gram explode + per-gram hash (same per-byte class
-    # as doc_shingles; compressed stats under-fire the widen locally)
+    # as dedup.doc_shingle_sets; compressed stats under-fire the
+    # widen locally)
     toks = widen_for_compute(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
         work_factor=32,

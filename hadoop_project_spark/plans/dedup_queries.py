@@ -210,13 +210,11 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round 8 (VERDICT r7 item 2): both pipelines derive from ONE
     pinned materialization of the per-doc shingle arrays — the truth
-    side consumes it directly, the candidate side re-explodes it into
-    the same stream dd.minhash_lsh_pairs feeds its signatures (the
-    arrays are distinct per doc, so the exploded stream equals
-    dd.doc_shingles as a set) — and the band-key relation is pinned
-    before its self-join exactly as dedup_minhash_lsh pins it
-    (un-pinned, each join side recomputed the 16-hash signature
-    aggregate). Together with the truth side's ranked-relation pin
+    side consumes it directly, the candidate side feeds it to
+    dd.minhash_signatures exactly as dd.minhash_lsh_pairs does — and
+    the band-key relation is pinned before its self-join exactly as
+    dedup_minhash_lsh pins it (un-pinned, each join side recomputed
+    the 16-hash signature aggregate). Together with the truth side's ranked-relation pin
     (operators/ssjoin.prefix_candidates — the same self-join
     recompute, found by this round's stage profile): sf1 9.6 → 4.0 s
     and shuffle 465 → 217 MB (VERDICT r7 item 2 asked ≤ ~6 s /
@@ -226,9 +224,8 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = sj.prefix_filtered_jaccard_pairs_from_sets(sets).select(
         "doc_a", "doc_b", F.lit(1).alias("t")
     )
-    sh = sets.select("doc_id", F.explode("shs").alias("sh"))
     cand = dd.lsh_candidate_pairs(
-        eager_pin(dd.lsh_band_keys(dd.minhash_signatures(sh)))
+        eager_pin(dd.lsh_band_keys(dd.minhash_signatures(sets)))
     ).select("doc_a", "doc_b", F.lit(1).alias("c"))
     j = truth.join(cand, ["doc_a", "doc_b"], "full_outer")
     row = j.agg(
@@ -358,7 +355,6 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     r×b before committing a corpus-scale dedup run."""
     docs = load_table(spark, sf_dir, "documents")
     sets = eager_pin(sj._doc_shingle_sets(docs, sj.SPAN_K))
-    sh = sets.select("doc_id", F.explode("shs").alias("sh"))
 
     # Once `sets` is pinned the truth pipeline and the signature →
     # band-key pipeline are independent, and the four per-config band
@@ -374,7 +370,7 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def _pin_bands() -> list[DataFrame]:
-        sig = eager_pin(dd.minhash_signatures(sh))
+        sig = eager_pin(dd.minhash_signatures(sets))
         return run_overlapped(
             [
                 (lambda nb=nb: eager_pin(dd.lsh_band_keys_config(sig, nb)))
@@ -1286,7 +1282,6 @@ def neardup_gate_served_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from hadoop_project_spark.streaming.dedup_gate import batch_band_keys
     from hadoop_project_spark.streaming.lsh_segments import (
         compact_bandkeys_segments,
         gate_state,
@@ -1334,7 +1329,7 @@ def neardup_gate_served_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cross-session gate answers; admission_flags' within-batch leg is
     # certified by neardup_gate_lsm_admissions
     state = gate_state(spark, seg_root, table)
-    keys = batch_band_keys(probe)
+    keys = dd.doc_band_keys(probe)
     hits = (
         keys.join(state.select("band", "key"), ["band", "key"], "left_semi")
         .select("doc_id")

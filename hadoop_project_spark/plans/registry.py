@@ -55,18 +55,13 @@ _ORDER: dict[str, int] = {}
 # anchors are demoted to 500, still oracle-tested every CI run by
 # tests/test_oracle_parity.py.
 PRIORITY_OVERRIDES: dict[str, int] = {
-    # --- round-16 regression anchors: keep in-window (prio 20) ---
-    # Round 16: the window is the headline set, every rider of
-    # execution.literal (the driver-built relations that replaced
-    # spark.createDataFrame and invindex._literal: K-Means, rank
-    # offsets, packing offsets, weighted-quantile targets, LR weights,
-    # BPE merges, roundtrip dims, served/trained artifact builds, empty
-    # segment relations, the invindex probes — 33 riders, found by
-    # wrapping the helper and building all 204 queries at sf0.001) and
-    # one or more riders of each round-14/15 change not yet in a
-    # CORRECTNESS row (co-purchase pair builder, set-based MinHash-LSH,
-    # the group-limited top-k window). Listed explicitly, so the 50
-    # names below are the window.
+    # --- round-17 regression anchors: keep in-window (prio 20) ---
+    # Round 17: the window is the headline set, every rider of the one
+    # shingle path (dedup.doc_shingle_sets, minhash_signatures and
+    # doc_band_keys — 18 riders, found by wrapping the three and
+    # building all 204 queries at sf0.001), and the round-14/15/16
+    # anchors still in their first driver windows, one or more per
+    # change. Listed explicitly, so the 50 names below are the window.
     **{
         name: 20
         for name in (
@@ -76,35 +71,48 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             "regional_revenue",
             "two_leg_conversion",
             "priority_month_matrix",
-            # execution.literal riders
+            # round 17, dedup.py: doc_shingle_sets stream consumers
+            "bloom_decontaminate_fpr",
+            "hll_source_distinct_shingles",
+            "hll_source_overlap",
+            "decontaminate_ngram",
+            "contrastive_pairs",
+            "contrastive_dense_negatives",
+            # round 17, dedup.py: minhash_signatures / doc_band_keys
+            "dedup_minhash_lsh",
+            "dedup_clusters",
+            "dedup_canonical_by_quality",
+            "split_leakage_report",
+            "leakage_free_split",
+            "dedup_lsh_recall_eval",
+            "lsh_band_sweep",
+            "neardup_gate_admissions",
+            "neardup_gate_lsm_admissions",
+            "neardup_gate_served_probe",
+            # round 17, ssjoin.py readers of doc_shingle_sets
+            "ssjoin_prefix_pairs",
+            "doc_duplicate_span_ratio",
+            # round 16, execution.literal riders
             "kmeans_centroids",
-            "kmeans_cluster_sizes",
             "kmeans_silhouette",
             "customer_value_deciles",
             "incremental_shard_export",
             "incremental_shard_rewrite",
             "training_shard_assignment",
-            "training_shard_manifest",
             "sequence_packing",
             "weighted_price_quantiles",
             "quality_lr_train",
             "quality_lr_corpus_filter",
-            "quality_lr_eval",
             "bpe_train_merges",
             "dpp_partitioned_join_roundtrip",
-            "semantic_dedup_bucketed",
             "semantic_dedup_decisions",
             "ann_topk_ivfpq",
             "ann_ivfpq_segment_compaction",
-            "ann_ivfpq_base_plus_segments",
-            "neardup_gate_lsm_admissions",
-            "neardup_gate_served_probe",
             "phrase_search_hits",
             "phrase_search_served",
             "proximity_search_pairs",
             "inverted_index_build_roundtrip",
             "index_segment_compaction_roundtrip",
-            "index_base_plus_segments_probe",
             "bm25_topk",
             "bm25_topk_stored",
             "bm25_topk_served",
@@ -112,19 +120,8 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             "bm25_prf_dense_rerank",
             # round 15, similarity.py: global_topk / ADC ranking window
             "ann_topk_bruteforce",
-            "ann_topk_ivf",
-            "ann_topk_pq_adc",
-            "hybrid_topk_rrf",
-            "contrastive_pairs",
-            # round 14, dedup.py + ssjoin.py: set-based minhash_lsh_pairs
-            "dedup_minhash_lsh",
-            "dedup_clusters",
-            "split_leakage_report",
-            "ssjoin_prefix_pairs",
             # round 14, governance_queries.py: one _copurchase_pairs
             "part_copurchase_rank_step",
-            "part_copurchase_triangles",
-            "part_pagerank_served",
         )
     },
     # --- green in r1-r8, still CI-oracle-tested: demote (prio 500) ---
@@ -136,6 +133,20 @@ PRIORITY_OVERRIDES: dict[str, int] = {
     **{
         name: 500
         for name in (
+            # r16 anchors released in r17 (code untouched in r17; a
+            # sibling rider of the same round-14/15/16 change stays
+            # in-window; all green in their last CORRECTNESS row)
+            "kmeans_cluster_sizes",
+            "training_shard_manifest",
+            "quality_lr_eval",
+            "semantic_dedup_bucketed",
+            "ann_ivfpq_base_plus_segments",
+            "index_base_plus_segments_probe",
+            "ann_topk_ivf",
+            "ann_topk_pq_adc",
+            "hybrid_topk_rrf",
+            "part_copurchase_triangles",
+            "part_pagerank_served",
             # r15 anchors released in r16 (code untouched in r16; a
             # sibling rider of the same round-14/15 change stays
             # in-window; all green in their last CORRECTNESS row)
@@ -145,18 +156,12 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             "ann_truncated_dim_recall",
             "ann_pq_recall",
             "ann_topk_ivfpq_served",
-            "contrastive_dense_negatives",
             "mmr_diversified_topk",
-            "dedup_lsh_recall_eval",
-            "lsh_band_sweep",
             "part_pagerank_iterated",
             # r14 anchors released in r15 (code untouched in r15; a
             # sibling rider of the same round-14 change stays in-window;
             # all green in their last CORRECTNESS row)
             "part_pagerank_bucketed",
-            "dedup_canonical_by_quality",
-            "leakage_free_split",
-            "neardup_gate_admissions",
             # r13 prio-20 anchors released in r14 (code untouched in
             # r14; all green in CORRECTNESS_r13)
             "heavy_hitter_bigrams",
@@ -189,7 +194,6 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             # r8 anchors (released in r9; ssjoin-pin family deltas were
             # re-adjudicated by the round-9 within-session A/B)
             "doc_duplicate_spans",
-            "doc_duplicate_span_ratio",
             "doc_winnowing_fingerprints",
             "winnowing_dup_candidates",
             "dedup_exact",
@@ -211,10 +215,6 @@ PRIORITY_OVERRIDES: dict[str, int] = {
             "part_name_fuzzy_pairs",
             "part_entity_clusters",
             "source_overlap_matrix",
-            "decontaminate_ngram",
-            "bloom_decontaminate_fpr",
-            "hll_source_distinct_shingles",
-            "hll_source_overlap",
             "dedup_simhash_signatures",
             "dedup_simhash_pairs",
             "price_quantile_histogram",

@@ -8,9 +8,10 @@ ingested?" — and must answer it per micro-batch without rescanning the
 corpus. The state that makes that cheap is exactly the LSH index: the
 ingested documents' (band, key) rows. Each micro-batch
 
-  1. computes its docs' band keys (same minhash_signatures /
-     lsh_band_keys as the batch path, so the collision semantics are
-     identical to dedup_minhash_lsh's candidate stage);
+  1. computes its docs' band keys (operators/dedup.doc_band_keys: the
+     same shingle sets, minhash_signatures and lsh_band_keys as the
+     batch path, so the collision semantics are identical to
+     dedup_minhash_lsh's candidate stage);
   2. flags docs colliding with the state, or with a lower-doc_id doc
      inside the same batch (deterministic tie-break, mirroring the
      batch path's doc_a < doc_b orientation);
@@ -42,9 +43,9 @@ Round 11: for LONG-LIVED ingest, streaming/lsh_segments.py supersedes
 this state layout — the same band keys kept as LSM segments with
 compaction into a (band, key)-bucketed served layout (bounded file
 counts, cross-session attach, bucket-local probes). This module stays
-as the minimal batch_id-partitioned form and the home of the shared
-batch_band_keys / gate_flags_for_ordered_corpus pipeline both gates
-certify against.
+as the minimal batch_id-partitioned form and the home of
+gate_flags_for_ordered_corpus, the batch twin both gates certify
+against.
 """
 
 from __future__ import annotations
@@ -54,17 +55,8 @@ from collections.abc import Callable
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
-from hadoop_project_spark.operators.dedup import (
-    doc_shingles,
-    lsh_band_keys,
-    minhash_signatures,
-)
-
-
-def batch_band_keys(docs: DataFrame) -> DataFrame:
-    """(doc_id, band, key) for a batch of documents — the exact batch
-    pipeline, factored for the gate and its equivalence test."""
-    return lsh_band_keys(minhash_signatures(doc_shingles(docs)))
+from hadoop_project_spark.execution import eager_pin, run_overlapped
+from hadoop_project_spark.operators.dedup import doc_band_keys
 
 
 def gate_flags_for_ordered_corpus(docs: DataFrame) -> DataFrame:
@@ -79,14 +71,12 @@ def gate_flags_for_ordered_corpus(docs: DataFrame) -> DataFrame:
     it against a DuckDB oracle (plans/dedup_queries.py,
     neardup_gate_admissions).
 
-    The band-key relation is eager-pinned (operators/dedup.
-    lsh_band_relation): the self-join below would otherwise recompute
-    the shingle → 16-hash signature pipeline once per join side inside
-    one job — measured 5.1 → 0.6 s at sf0.1, 7.1 → 1.5 s at sf1
-    (VERDICT r7 item 4)."""
-    from hadoop_project_spark.operators.dedup import lsh_band_relation
-
-    keys = lsh_band_relation(docs)
+    The band-key relation (operators/dedup.doc_band_keys) is
+    eager-pinned: the self-join below would otherwise recompute the
+    shingle → 16-hash signature pipeline once per join side inside one
+    job — measured 5.1 → 0.6 s at sf0.1, 7.1 → 1.5 s at sf1 (VERDICT
+    r7 item 4)."""
+    keys = eager_pin(doc_band_keys(docs))
     a, b = keys.alias("a"), keys.alias("b")
     flagged = (
         a.join(
@@ -130,8 +120,6 @@ def make_neardup_gate_sink(
     equivalence can be recomputed post-hoc."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from hadoop_project_spark.execution import eager_pin
-
         spark = batch_df.sparkSession
         # eager_pin: the flags and state writes below run CONCURRENTLY
         # (guide §2.6), and a lazy persist would let both jobs race-
@@ -140,7 +128,7 @@ def make_neardup_gate_sink(
         # (ADVICE r12) so tiny batches below PIN_MIN_WORK_BYTES keep
         # the lazy persist — there the extra count job costs more than
         # the duplicate recompute it prevents.
-        keys = eager_pin(batch_band_keys(batch_df))
+        keys = eager_pin(doc_band_keys(batch_df))
         if roster_dir is not None:
             _write_batch_partition(
                 batch_df.select("doc_id").distinct(), roster_dir, batch_id
@@ -194,8 +182,6 @@ def make_neardup_gate_sink(
         # ordering the gate's semantics need is between BATCHES, and the
         # flags leg reads only state partitions < batch_id), so the two
         # write jobs overlap (guide §2.6)
-        from hadoop_project_spark.execution import run_overlapped
-
         run_overlapped(
             [
                 lambda: _write_batch_partition(flagged, flags_dir, batch_id),

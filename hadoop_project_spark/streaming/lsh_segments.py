@@ -18,7 +18,7 @@ log-structured life as the other two stored indexes:
   contracts inherited from make_segment_sink);
 * the probe between compactions runs against base ∪ LIVE segments —
   identical collision semantics to the batch path because the keys
-  come from the same batch_band_keys pipeline;
+  come from the same operators/dedup.doc_band_keys pipeline;
 * a periodic COMPACTION folds base + live segments into a layout
   BUCKETED AND SORTED ON THE PROBE JOIN'S KEYS (band, key), published
   as a new immutable version of a serving.py root (fingerprint =
@@ -56,7 +56,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hadoop_project_spark.execution import eager_pin, literal
-from hadoop_project_spark.streaming.dedup_gate import batch_band_keys
+from hadoop_project_spark.operators.dedup import doc_band_keys
 from hadoop_project_spark.streaming.index_segments import (
     compact_segments_into,
     make_segment_sink,
@@ -75,10 +75,10 @@ LSH_STATE_BUCKETS = 8
 
 def _prepare_bandkeys(batch_df: DataFrame) -> DataFrame:
     """One document micro-batch → its (doc_id, band, key) segment
-    relation: the SAME batch_band_keys pipeline the one-shot gate twin
+    relation: the SAME doc_band_keys pipeline the one-shot gate twin
     uses, so segments, base and batch-path collision semantics are
     identical by construction."""
-    return batch_band_keys(batch_df).select(
+    return doc_band_keys(batch_df).select(
         F.col("doc_id").cast("long").alias("doc_id"), "band", "key"
     )
 
@@ -203,7 +203,7 @@ def admission_flags(
     still the roster source — docs too short to shingle have no key
     rows but still need their (flagged = false) decision."""
     if keys is None:
-        keys = eager_pin(batch_band_keys(batch_docs))
+        keys = eager_pin(doc_band_keys(batch_docs))
     # SELF-EXCLUSION is what makes the gated sink replay-idempotent: a
     # re-delivered batch probes a state that already contains its OWN
     # segment (published before the failed checkpoint commit — and

@@ -1,10 +1,12 @@
 """MinHash-LSH near-dup pairs (operators/dedup.minhash_lsh_pairs) on a
 hand-built corpus whose edge cases the documents fixture does not
-guarantee, and the rewritten path under both eager-pin branches and a
+guarantee, the one shingle-set and band-key path against a pure-Python
+reference, and the rewritten path under both eager-pin branches and a
 taken widen."""
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 import pytest
@@ -48,6 +50,44 @@ def _shingles(text: str, k: int = 3) -> set[str]:
 def _jaccard(a: str, b: str) -> float:
     sa, sb = _shingles(a), _shingles(b)
     return len(sa & sb) / len(sa | sb)
+
+
+def _md5_i64(seed: int, s: str) -> int:
+    """functions/text.md5_i64_sql: the top 60 bits of md5('seed|s')."""
+    return int(hashlib.md5(f"{seed}|{s}".encode()).hexdigest()[:15], 16)
+
+
+def _band_keys(text: str) -> set[tuple[int, str]]:
+    """(band, key) rows of one document: per-index min of the 60-bit
+    hash over its distinct 3-word shingles, then md5 of each band's
+    '|'-joined decimal row hashes."""
+    shs = _shingles(text)
+    sig = [min(_md5_i64(i, sh) for sh in shs) for i in range(dd.NUM_HASHES)]
+    r = dd.ROWS_PER_BAND
+    rows = ["|".join(map(str, sig[b * r : (b + 1) * r])) for b in range(dd.NUM_BANDS)]
+    return {(b, hashlib.md5(row.encode()).hexdigest()) for b, row in enumerate(rows)}
+
+
+@pytest.mark.parametrize("k", [2, 3, 5])
+def test_doc_shingle_sets_are_distinct_k_word_shingles(spark, k):
+    docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
+    got = {r.doc_id: r for r in dd.doc_shingle_sets(docs, k).collect()}
+    assert sorted(got) == [i for i, _ in CORPUS]
+    for i, text in CORPUS:
+        want = _shingles(text, k)
+        assert got[i].shs == sorted(want), (i, k)
+        assert got[i].n == len(want)
+    stream = dd.doc_shingles(docs, k).collect()
+    assert sorted((r.doc_id, r.sh) for r in stream) == sorted(
+        (i, sh) for i, text in CORPUS for sh in _shingles(text, k)
+    )
+
+
+def test_doc_band_keys_match_python_reference(spark):
+    docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
+    got = {(r.doc_id, r.band, r.key) for r in dd.doc_band_keys(docs).collect()}
+    want = {(i, b, key) for i, text in CORPUS for b, key in _band_keys(text)}
+    assert got == want
 
 
 @pytest.fixture(scope="module")

@@ -11,10 +11,8 @@ import os
 from pyspark.sql import functions as F
 
 from hadoop_project_spark.catalog import load_table
-from hadoop_project_spark.streaming.dedup_gate import (
-    batch_band_keys,
-    gate_flags_for_ordered_corpus,
-)
+from hadoop_project_spark.operators.dedup import doc_band_keys
+from hadoop_project_spark.streaming.dedup_gate import gate_flags_for_ordered_corpus
 from hadoop_project_spark.streaming.index_segments import compacted_through
 from hadoop_project_spark.streaming.lsh_segments import (
     admission_flags,
@@ -99,7 +97,7 @@ def test_compaction_equivalence_idle_noop_and_watermark(
         (r.doc_id, r.band, r.key) for r in spark.table(table).collect()
     }
     want = {
-        (r.doc_id, r.band, r.key) for r in batch_band_keys(docs).collect()
+        (r.doc_id, r.band, r.key) for r in doc_band_keys(docs).collect()
     }
     assert got == want
     assert read_bandkeys_segments(spark, seg_root).count() == 0
@@ -188,7 +186,7 @@ def test_gate_stream_ingest_matches_ordered_twin(spark, sf_dir, tmp_path):
     state = gate_state(spark, seg_root, table)
     got_state = {(r.doc_id, r.band, r.key) for r in state.collect()}
     want_state = {
-        (r.doc_id, r.band, r.key) for r in batch_band_keys(docs).collect()
+        (r.doc_id, r.band, r.key) for r in doc_band_keys(docs).collect()
     }
     assert got_state == want_state
 
@@ -287,7 +285,7 @@ def test_gate_state_heals_after_external_compaction(spark, sf_dir, tmp_path):
     got = {(r.doc_id, r.band, r.key) for r in state.collect()}
     want = {
         (r.doc_id, r.band, r.key)
-        for r in batch_band_keys(
+        for r in doc_band_keys(
             docs.filter(F.col("doc_id") < cuts[3])
         ).collect()
     }

@@ -1,7 +1,7 @@
 """Partition-order independence: the riders of the one-scan index
 probes, of the group-limited top-k window and of the driver-built
 literal relations (K-Means fit, rank offsets, weighted-quantile
-targets) must hash-match their DuckDB oracles whatever the shuffle
+targets) and the sketches over the shingle stream must hash-match their DuckDB oracles whatever the shuffle
 width. Each runs at 1 and at 7 shuffle partitions, with AQE partition
 coalescing off so the width is the one the plan really runs at: one
 partition makes every aggregate and window see a single input order,
@@ -38,6 +38,11 @@ RIDERS = [
     "kmeans_centroids",
     "customer_value_deciles",
     "weighted_price_quantiles",
+    # sketches over the (doc, shingle) stream, which arrives in its
+    # scan order (no distinct() exchange) since it became the explode
+    # of dedup.doc_shingle_sets
+    "hll_source_overlap",
+    "bloom_decontaminate_fpr",
 ]
 
 _CONF = {

@@ -24,10 +24,9 @@ from hadoop_project_spark.plans import all_queries
 WINDOW = 50
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Regression anchors for round 16: the headline set, every rider of
-# execution.literal (all 33), and one or more riders of each round-14/15
-# change not yet hash-verified in a window — must be proven green THIS
-# round.
+# Regression anchors for round 17: the headline set and every rider of
+# the one shingle path (dedup.doc_shingle_sets, minhash_signatures and
+# doc_band_keys) — must be proven green THIS round.
 MUST_VERIFY = {
     # headline (every round)
     "word_count",
@@ -35,60 +34,27 @@ MUST_VERIFY = {
     "regional_revenue",
     "two_leg_conversion",
     "priority_month_matrix",
-    # execution.literal: K-Means results and the pinned Lloyd step
-    "kmeans_centroids",
-    "kmeans_cluster_sizes",
-    "kmeans_silhouette",
-    # execution.literal: rank / packing offsets, wquantile targets
-    "customer_value_deciles",
-    "incremental_shard_export",
-    "incremental_shard_rewrite",
-    "training_shard_assignment",
-    "training_shard_manifest",
-    "sequence_packing",
-    "weighted_price_quantiles",
-    # execution.literal: fitted values, BPE merges, roundtrip dim
-    "quality_lr_train",
-    "quality_lr_corpus_filter",
-    "quality_lr_eval",
-    "bpe_train_merges",
-    "dpp_partitioned_join_roundtrip",
-    # execution.literal: served artifact builds
-    "semantic_dedup_bucketed",
-    "semantic_dedup_decisions",
-    "ann_topk_ivfpq",
-    # execution.literal: empty segment relations
-    "ann_ivfpq_segment_compaction",
-    "ann_ivfpq_base_plus_segments",
-    "neardup_gate_lsm_admissions",
-    "neardup_gate_served_probe",
-    # execution.literal: the invindex probe literals
-    "phrase_search_hits",
-    "phrase_search_served",
-    "proximity_search_pairs",
-    "inverted_index_build_roundtrip",
-    "index_segment_compaction_roundtrip",
-    "index_base_plus_segments_probe",
-    "bm25_topk",
-    "bm25_topk_stored",
-    "bm25_topk_served",
-    "bm25_mrr_eval",
-    "bm25_prf_dense_rerank",
-    # round 15, similarity.py: global_topk / ADC ranking window
-    "ann_topk_bruteforce",
-    "ann_topk_ivf",
-    "ann_topk_pq_adc",
-    "hybrid_topk_rrf",
+    # doc_shingle_sets stream consumers
+    "bloom_decontaminate_fpr",
+    "hll_source_distinct_shingles",
+    "hll_source_overlap",
+    "decontaminate_ngram",
     "contrastive_pairs",
-    # round 14, dedup.py + ssjoin.py: set-based minhash_lsh_pairs
+    "contrastive_dense_negatives",
+    # minhash_signatures / doc_band_keys
     "dedup_minhash_lsh",
     "dedup_clusters",
+    "dedup_canonical_by_quality",
     "split_leakage_report",
+    "leakage_free_split",
+    "dedup_lsh_recall_eval",
+    "lsh_band_sweep",
+    "neardup_gate_admissions",
+    "neardup_gate_lsm_admissions",
+    "neardup_gate_served_probe",
+    # ssjoin.py readers of doc_shingle_sets
     "ssjoin_prefix_pairs",
-    # round 14, governance_queries.py: one _copurchase_pairs builder
-    "part_copurchase_rank_step",
-    "part_copurchase_triangles",
-    "part_pagerank_served",
+    "doc_duplicate_span_ratio",
 }
 
 

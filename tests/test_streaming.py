@@ -388,10 +388,8 @@ def test_streaming_neardup_gate_equals_batch(spark, sf_dir, tmp_path):
     equals the batch band keys, and the flagged set equals a post-hoc
     recomputation (collides with an earlier batch, or with a lower
     doc_id in the same batch)."""
-    from hadoop_project_spark.streaming.dedup_gate import (
-        batch_band_keys,
-        make_neardup_gate_sink,
-    )
+    from hadoop_project_spark.operators.dedup import doc_band_keys
+    from hadoop_project_spark.streaming.dedup_gate import make_neardup_gate_sink
 
     src = str(tmp_path / "docs_gate_src")
     docs = load_table(spark, sf_dir, "documents")
@@ -423,7 +421,7 @@ def test_streaming_neardup_gate_equals_batch(spark, sf_dir, tmp_path):
         for r in spark.read.parquet(state_dir).collect()
     }
     exp_state = {
-        (r.doc_id, r.band, r.key) for r in batch_band_keys(docs).collect()
+        (r.doc_id, r.band, r.key) for r in doc_band_keys(docs).collect()
     }
     assert got_state == exp_state
 
