@@ -45,6 +45,11 @@ SIMHASH_CHUNKS = 4
 CHUNK_BITS = SIMHASH_BITS // SIMHASH_CHUNKS
 SIMHASH_MAX_HAMMING = 3
 
+# doc_shingle_sets' widen weights (its docstring has the measurements):
+# the set build alone, and the set build plus the MinHash signatures
+SHINGLE_WORK_FACTOR = 32
+MINHASH_WORK_FACTOR = 174
+
 
 def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact dedup via md5-of-normalized-text groupBy: one shuffle on the
@@ -58,7 +63,9 @@ def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
     )
 
 
-def doc_shingle_sets(docs: DataFrame, k: int = 3) -> DataFrame:
+def doc_shingle_sets(
+    docs: DataFrame, k: int = 3, work_factor: int = SHINGLE_WORK_FACTOR
+) -> DataFrame:
     """(doc_id, shs, n): each document's DISTINCT k-word shingles as a
     sorted array plus its size — deduped per row with array_distinct
     BEFORE any explode, so "distinct (doc, sh)" costs no shuffle
@@ -67,15 +74,32 @@ def doc_shingle_sets(docs: DataFrame, k: int = 3) -> DataFrame:
     functions/text.py:shingles_from_tokens for the 6x re-evaluation
     pitfall this avoids). The one shingle builder of the package: the
     MinHash, prefix-filter (operators/ssjoin.py), sketch, corpus and
-    retrieval pipelines all start here (doc_shingles is its explode)."""
-    # widen on raw text so the normalize/split regex runs post-exchange.
-    # work_factor 32: shingle + sort_array over ~30x-decompressing text
-    # — compressed-byte stats left this whole build on ONE task at
-    # bench scale (profiled as an 8.7 s single-task pin job inside
-    # lsh_band_sweep, round 12; the same held for a quarter-corpus
-    # gate micro-batch: 2.67 -> 1.73 s warm at sf0.1)
+    retrieval pipelines all start here (doc_shingles is its explode).
+
+    The raw text projection is widened (execution.widen_for_compute)
+    with ``work_factor``, the per-row work behind its compressed bytes
+    in the stages this widen feeds:
+    * SHINGLE_WORK_FACTOR = 32, the set build alone — shingle +
+      sort_array over text that decompresses ~30x; without it this
+      build ran as ONE task at bench scale (an 8.7 s single-task pin
+      job inside lsh_band_sweep, round 12; a quarter-corpus gate
+      micro-batch went 2.67 -> 1.73 s warm at sf0.1);
+    * MINHASH_WORK_FACTOR = 174 = 32 × 5.45, passed by the callers that
+      feed the sets to minhash_signatures, which hashes every shingle
+      NUM_HASHES times. On one core (local[1], no widen) at 500
+      documents, set build + signatures took 0.675 s against 0.124 s
+      for the set build alone (medians of 10 warm noop-sink runs), a
+      5.45x ratio.
+    At 500 documents the projection estimates 28,077 bytes: 32 (0.90
+    MB) stays under SHIM_MIN_WORK_BYTES, and 174 widens, so the 16-hash
+    signature stage, one 0.55-0.6 s task before, runs on every core.
+    The other consumers keep 32: widened at 500 documents they ran
+    1.08-1.13x slower in a fresh process (the first round-robin
+    exchange of the process) for no warm gain. At 5000 documents
+    (sf0.1) both weights widen."""
+    # widen on raw text so the normalize/split regex runs post-exchange
     toks = widen_for_compute(
-        docs.select("doc_id", "text"), work_factor=32
+        docs.select("doc_id", "text"), work_factor=work_factor
     ).select("doc_id", F.split(normalize_text("text"), " ").alias("t"))
     return toks.select(
         "doc_id",
@@ -210,7 +234,11 @@ def doc_band_keys(docs: DataFrame) -> DataFrame:
     minhash_signatures → lsh_band_keys, the one band-key pipeline of
     the streaming gate, its batch twin, the LSM segments and the served
     probe. Lazy; callers that self-join or reuse it eager-pin it."""
-    return lsh_band_keys(minhash_signatures(doc_shingle_sets(docs)))
+    return lsh_band_keys(
+        minhash_signatures(
+            doc_shingle_sets(docs, work_factor=MINHASH_WORK_FACTOR)
+        )
+    )
 
 
 def minhash_lsh_pairs(docs: DataFrame, k_shingle: int = 3) -> DataFrame:
@@ -234,7 +262,9 @@ def minhash_lsh_pairs(docs: DataFrame, k_shingle: int = 3) -> DataFrame:
     Spark jobs, shuffle 0.76 → 0.07 MB, blocking pins 2 → 1,
     query_p90_s 0.59x; sf0.1 fresh process, median of 6 interleaved
     pairs, cold 18.3 → 13.6 s, warm 5.5 → 3.3 s."""
-    sets = pin(doc_shingle_sets(docs, k_shingle))
+    sets = pin(
+        doc_shingle_sets(docs, k_shingle, work_factor=MINHASH_WORK_FACTOR)
+    )
     # band keys materialize BEFORE the candidate self-join: AQE does
     # not reuse the two join sides' exchanges, so both would re-run the
     # signature aggregate + 16-hash md5 pass inside one job (observed

@@ -59,12 +59,18 @@ def postings(
     empty string — yields a single '' token at pos 0; it is filtered so
     such documents contribute ZERO terms everywhere (postings, the
     directory, tf/df/dl/N/T in BM25 — the same convention
-    tfidf.doc_term_freqs uses, and the oracles mirror it; ADVICE r8)."""
+    tfidf.doc_term_freqs uses, and the oracles mirror it; ADVICE r8).
+
+    posexplode_outer, not posexplode: an inner explode of the bare
+    token array makes Spark infer size(toks) > 0 and push it to the
+    scan with the tokenizer inlined, so every document was normalized
+    twice, once before the widen. The outer form's extra row for a NULL
+    text is dropped by the term != '' filter."""
     toks = widen_for_compute(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
     ).select("doc_id", F.split(normalize_text(text_col), " ").alias("toks"))
     return (
-        toks.select("doc_id", F.posexplode("toks").alias("pos", "term"))
+        toks.select("doc_id", F.posexplode_outer("toks").alias("pos", "term"))
         .filter(F.col("term") != "")
         .select("term", "doc_id", "pos")
     )

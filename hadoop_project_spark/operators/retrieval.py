@@ -68,7 +68,11 @@ def topk_per_query(
 def distinct_token_postings(docs: DataFrame) -> DataFrame:
     """(doc_id, n_toks, term) — one row per DISTINCT whitespace token
     per document, with the token-set size carried on every row so the
-    Jaccard denominator needs no second corpus join."""
+    Jaccard denominator needs no second corpus join.
+
+    explode_outer + term IS NOT NULL, not explode: an inner explode of
+    the bare array makes Spark infer size(ts) > 0 and push it to the
+    scan with the tokenizer inlined, tokenizing every document twice."""
     sets = docs.select(
         "doc_id",
         F.array_distinct(ts.tokens_nonempty("text")).alias("ts"),
@@ -76,8 +80,8 @@ def distinct_token_postings(docs: DataFrame) -> DataFrame:
     return sets.select(
         "doc_id",
         F.size("ts").cast("long").alias("n_toks"),
-        F.explode("ts").alias("term"),
-    )
+        F.explode_outer("ts").alias("term"),
+    ).filter(F.col("term").isNotNull())
 
 
 def jaccard_topk(docs: DataFrame, n_queries: int, k: int) -> DataFrame:

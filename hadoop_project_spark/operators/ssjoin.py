@@ -101,11 +101,14 @@ def _doc_bitmap(shs: F.Column) -> F.Column:
     return F.aggregate(shs, zero, step)
 
 
-def _doc_shingle_sets(docs: DataFrame, k: int = SPAN_K) -> DataFrame:
+def _doc_shingle_sets(
+    docs: DataFrame, k: int = SPAN_K, work_factor: int = dd.SHINGLE_WORK_FACTOR
+) -> DataFrame:
     """(doc_id, shs, n, bm): dedup.doc_shingle_sets (each document's
-    DISTINCT k-word shingles as a sorted array plus its size) with the
-    256-bit presence bitmap the candidate prune reads."""
-    sets = dd.doc_shingle_sets(docs, k)
+    DISTINCT k-word shingles as a sorted array plus its size, widened
+    with ``work_factor``) with the 256-bit presence bitmap the
+    candidate prune reads."""
+    sets = dd.doc_shingle_sets(docs, k, work_factor)
     return sets.withColumn("bm", _doc_bitmap(F.col("shs")))
 
 

@@ -220,7 +220,9 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     and shuffle 465 → 217 MB (VERDICT r7 item 2 asked ≤ ~6 s /
     ~250 MB); sf0.1 5.5 → 2.3 s."""
     docs = load_table(spark, sf_dir, "documents")
-    sets = eager_pin(sj._doc_shingle_sets(docs, sj.SPAN_K))
+    sets = eager_pin(
+        sj._doc_shingle_sets(docs, sj.SPAN_K, dd.MINHASH_WORK_FACTOR)
+    )
     truth = sj.prefix_filtered_jaccard_pairs_from_sets(sets).select(
         "doc_a", "doc_b", F.lit(1).alias("t")
     )
@@ -354,7 +356,9 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~4 candidate joins, not 4 whole pipelines — the cheap way to tune
     r×b before committing a corpus-scale dedup run."""
     docs = load_table(spark, sf_dir, "documents")
-    sets = eager_pin(sj._doc_shingle_sets(docs, sj.SPAN_K))
+    sets = eager_pin(
+        sj._doc_shingle_sets(docs, sj.SPAN_K, dd.MINHASH_WORK_FACTOR)
+    )
 
     # Once `sets` is pinned the truth pipeline and the signature →
     # band-key pipeline are independent, and the four per-config band

@@ -138,14 +138,28 @@ def test_output_schema(pairs):
     ]
 
 
-@pytest.mark.parametrize("pin_floor", [0, 1 << 62], ids=["pin_blocks", "pin_lazy"])
+@pytest.mark.parametrize(
+    "pin_floor, widen_floor",
+    [(0, 0), (1 << 62, 0), (0, 1 << 62), (1 << 62, 1 << 62)],
+    ids=[
+        "pin_blocks",
+        "pin_lazy",
+        "pin_blocks-widen_untaken",
+        "pin_lazy-widen_untaken",
+    ],
+)
 @pytest.mark.parametrize("name", ["dedup_minhash_lsh", "split_leakage_report"])
-def test_shim_branches_match_oracle(spark, sf_dir, monkeypatch, pin_floor, name):
-    """At sf0.001 the byte floors keep every pin lazy and every widen
-    untaken; force the eager pin's blocking branch, then its lazy one,
-    each with the widen taken, and hash-check against the oracle."""
+def test_shim_branches_match_oracle(
+    spark, sf_dir, monkeypatch, pin_floor, widen_floor, name
+):
+    """At sf0.001 the byte floors keep every pin lazy, while the
+    MinHash callers' doc_shingle_sets widen is taken (MINHASH_WORK_FACTOR
+    lifts its 500-document projection over the floor) and the others
+    are not. Force each pin branch (blocking, lazy) with every widen
+    taken, then with every widen untaken, and hash-check against the
+    oracle."""
     monkeypatch.setattr(ex, "PIN_MIN_WORK_BYTES", pin_floor)
-    monkeypatch.setattr(ex, "SHIM_MIN_WORK_BYTES", 0)
+    monkeypatch.setattr(ex, "SHIM_MIN_WORK_BYTES", widen_floor)
     ex.clear_query_state(spark)
     spec = all_queries()[name]
     try:

@@ -216,3 +216,46 @@ def test_pinned_fit_guard_passes_on_unit_scale(spark):
     )
     res = kmeans_fit_pinned(pts, k=2, dim=2, max_iter=3)
     assert len(res.centroids_q) == 2
+
+
+# ---------------------------------------------------------------------------
+# The shared-fit memo (plans/ml_queries._shared_fit): keyed by the
+# embeddings file's fingerprint, so a rewritten file refits and a memo
+# hit runs no job.
+# ---------------------------------------------------------------------------
+def _centroid_rows(spark, sf):
+    from hadoop_project_spark.plans.ml_queries import kmeans_centroids
+
+    return sorted(tuple(r) for r in kmeans_centroids(spark, sf).collect())
+
+
+def test_fit_memo_refits_a_rewritten_embeddings_file(spark, sf_dir, tmp_path):
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from hadoop_project_spark.plans import ml_queries
+
+    src = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    path = tmp_path / "embeddings.parquet"
+    pq.write_table(src, path)
+    before = _centroid_rows(spark, str(tmp_path))
+    # drop the odd vec_ids: the k lowest ids that seed the fit change
+    pq.write_table(
+        src.filter(pc.equal(pc.bit_wise_and(src["vec_id"], 1), 0)), path
+    )
+    after = _centroid_rows(spark, str(tmp_path))
+    assert after != before
+    ml_queries._FIT_CACHE.clear()
+    assert _centroid_rows(spark, str(tmp_path)) == after
+
+
+def test_fit_memo_hit_launches_no_job(spark, sf_dir, tmp_path, jobs_run_by):
+    import shutil
+
+    from hadoop_project_spark.plans.ml_queries import kmeans_centroids
+
+    shutil.copy(f"{sf_dir}/embeddings.parquet", tmp_path)
+    fitted = kmeans_centroids(spark, str(tmp_path))
+    assert jobs_run_by(lambda: kmeans_centroids(spark, str(tmp_path))) == []
+    again = kmeans_centroids(spark, str(tmp_path))
+    assert sorted(again.collect()) == sorted(fitted.collect())

@@ -5,6 +5,7 @@ iterating — SURVEY.md §4)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hadoop_project_spark.catalog import load_table
@@ -161,6 +162,31 @@ def test_pii_redaction_stays_jvm_side(spark, sf_dir):
     plan = _plan(redact_documents(docs))
     for bad in ("BatchEvalPython", "ArrowEvalPython", "Exchange"):
         assert bad not in plan
+
+
+@pytest.mark.parametrize(
+    "stream",
+    [
+        ("invindex", "postings"),
+        ("retrieval", "distinct_token_postings"),
+        ("dedup", "doc_shingles"),
+    ],
+    ids=lambda s: s[1],
+)
+def test_token_streams_plan_no_inferred_size_filter(spark, sf_dir, stream):
+    """An inner explode of a bare array column makes Spark infer
+    size(arr) > 0 and push it to the scan with the tokenizer inlined,
+    so every document is tokenized twice. The token and shingle
+    streams explode outer; no Filter on size( may reach their plans."""
+    import importlib
+
+    mod, fn = stream
+    op = getattr(importlib.import_module(f"hadoop_project_spark.operators.{mod}"), fn)
+    df = op(load_table(spark, sf_dir, "documents"))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert not [
+        line for line in plan.splitlines() if "Filter" in line and "size(" in line
+    ], plan
 
 
 def test_no_scale_killers_anywhere(spark, sf_dir):

@@ -10,8 +10,8 @@ PROFILE_RUNS (default 3).
 
 Each query runs PROFILE_RUNS times (build + noop-sink exec timed
 separately, like bench.py); after the LAST run the job-level timeline
-since the query's start is printed (jobId, duration, description,
-stage shuffle bytes) — this is how build-side work (writes, fits,
+since the query's start is printed (jobId, duration, stage count,
+task count, call site) — this is how build-side work (writes, fits,
 collect barriers) inside end-to-end queries gets attributed, which
 bench.py's single build/exec split cannot see.
 """
@@ -135,10 +135,13 @@ def main() -> None:
         jobs.sort(key=lambda j: j["jobId"])
         for j in jobs:
             dur = _job_ms(j)
-            desc = (j.get("description") or j.get("name") or "")[:110]
+            # the call-site name: every job's description is the same
+            # profile:<query> label set above
+            site = (j.get("name") or "")[:110]
             print(
                 f"  job {j['jobId']:>4}  {dur/1000:7.2f}s "
-                f" tasks={j.get('numCompletedTasks', '?'):>4}  {desc}",
+                f" stages={len(j.get('stageIds', [])):>2}"
+                f" tasks={j.get('numCompletedTasks', '?'):>4}  {site}",
                 flush=True,
             )
     spark.stop()
