@@ -4,15 +4,13 @@ Everything here is a *Column expression builder* — JVM-side, codegen'd,
 no Python UDFs — so whole-stage codegen spans stay wide.
 """
 
-from hadoop_project_spark.functions.numeric import dec2, money_sum  # noqa: F401
+from hadoop_project_spark.functions.numeric import dec2  # noqa: F401
 from hadoop_project_spark.functions.text import (  # noqa: F401
     tokenize,
-    char_ngrams,
     word_shingles,
 )
 from hadoop_project_spark.functions.vector import (  # noqa: F401
     dot,
     l2_norm,
-    cosine_similarity,
     squared_l2_distance,
 )

@@ -25,15 +25,3 @@ def dec2(col: str | Column) -> Column:
     """Cast a 2-dp-exact double column to DECIMAL(18,2)."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("decimal(18,2)")
-
-
-def money_sum(col: str | Column, alias: str) -> Column:
-    """Exact sum of a 2-dp money column, emitted as DOUBLE."""
-    return F.sum(dec2(col)).cast("double").alias(alias)
-
-
-def exact_avg(col: str | Column, alias: str) -> Column:
-    """Order-independent average: exact decimal sum / exact count,
-    divided as doubles (bit-identical across engines)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(dec2(c)).cast("double") / F.count(c).cast("double")).alias(alias)

@@ -76,13 +76,6 @@ def word_shingles(col: str | Column, k: int = 3) -> Column:
     return shingles_from_tokens(F.split(normalize_text(col), " "), k)
 
 
-def char_ngrams(col: str | Column, n: int = 5) -> Column:
-    """Character n-grams of normalized text → array<string> (for n-gram
-    Jaccard dedup). Convenience form — in hot paths project
-    normalize_text to a column and use ngrams_from_normalized."""
-    return ngrams_from_normalized(normalize_text(col), n)
-
-
 def md5_i64(col: Column, seed: int = 0) -> Column:
     """Portable 60-bit integer hash: md5 hex → first 15 hex digits →
     bigint. Identical in DuckDB via

@@ -110,10 +110,6 @@ def l2_norm(a: str | Column) -> Column:
     return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v))
 
 
-def cosine_similarity(a: str | Column, b: str | Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 def squared_l2_distance(a: str | Column, b: str | Column) -> Column:
     """Σ (a_i - b_i)^2 — the reference's K-Means metric (KMeans.java:98)
     generalized to n dims."""

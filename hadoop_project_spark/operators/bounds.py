@@ -103,16 +103,6 @@ def bucket_id(key: Column, bounds: list, as_double: bool) -> Column:
     return expr.cast("int")
 
 
-def with_deterministic_pid(
-    df: DataFrame, key: Column, num_buckets: int, pid_col: str = "_pid"
-) -> DataFrame:
-    """Attach the literal-derived bucket id. The caller range-partitions
-    on ``pid_col`` for placement; correctness never depends on WHERE the
-    rows land, only on this column's value."""
-    bounds, as_double = collect_split_points(df, key, num_buckets)
-    return df.withColumn(pid_col, bucket_id(key, bounds, as_double))
-
-
 def default_buckets(df: DataFrame) -> int:
     """Bucket count = session shuffle parallelism (32 locally; a cluster
     submit sets it to ~2-3x total cores). Platforms with auto-optimized

@@ -161,13 +161,6 @@ def _merge_replace(s: Column, left: str, right: str) -> Column:
     )
 
 
-def apply_merge(state: DataFrame, left: str, right: str) -> DataFrame:
-    """Rewrite every symbol string under one learned merge rule."""
-    return state.select(
-        "word", "n", _merge_replace(F.col("s"), left, right).alias("s")
-    )
-
-
 def encode_token_counts(
     docs: DataFrame,
     merges: list[dict],

@@ -14,11 +14,13 @@ Reference → Spark mapping (SURVEY.md §3.3):
     after posexplode, partial-aggregated map-side;
   * convergence test via two HBase scans
     (KMeans.java:294-314)                  → pure-Python comparison of
-    two driver-held lists (tol on max coordinate shift).
+    two driver-held lists (exact fixed point).
 
-Assignment is argmin over an array of (dist, idx) structs — array_min
-orders lexicographically, so ties break to the lowest cluster index,
-deterministically. All math is JVM-side; no UDFs.
+The fit runs on fixed-point coordinates (kmeans_fit_pinned), so every
+distance and centroid update is integer-exact and the whole loop
+replays in a SQL oracle. Assignment is the argmin of an integer
+distance array; array_position finds the first minimum, so ties break
+to the lowest cluster index. All math is JVM-side; no UDFs.
 """
 
 from __future__ import annotations
@@ -28,11 +30,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from hadoop_project_spark.functions.vector import (
-    double_array_lit,
-    long_array_sql,
-    squared_l2_distance,
-)
+from hadoop_project_spark.functions.vector import long_array_sql
 
 # Fixed-point scale for the PINNED Lloyd fit: 4-dp micro-units. The
 # reference itself rounds centroids per iteration (HALF_UP 3 dp,
@@ -57,136 +55,8 @@ _MAX_EXACT_SUM = 1 << 53
 _MAX_BIGINT = 1 << 63
 
 
-@dataclass
-class KMeansResult:
-    centroids: list[list[float]]  # k × dim
-    n_iters: int
-    converged: bool
-    inertia_history: list[float]
-
-
-def _centroid_array(centroids: list[list[float]]):
-    """Single nested-array literal (array<array<double>>) of the current
-    centroids — the Spark analog of the reference's per-task centroid
-    cache (broadcast by value inside the serialized plan; tiny).
-
-    Built via one expr-string parse (functions/vector.double_array_lit):
-    per-element py4j F.lit conversion cost 450 ms per 8×64 literal —
-    dominating every Lloyd iteration's plan build — vs 0.8 ms for the
-    parse; Catalyst constant-folds the parsed CreateArray tree into the
-    same single ArrayData Literal, so analysis/codegen stay O(1) in
-    k×dim exactly as before (values verified bit-identical)."""
-    return double_array_lit(centroids)
-
-
-def assign_clusters(
-    points: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
-) -> DataFrame:
-    """Add `cluster` (argmin squared-L2 centroid index) and `dist`
-    columns. Pure projection — no shuffle. Ties break to the lowest
-    cluster index (array_position finds the first occurrence of the
-    minimum, which is bitwise-identical to the min it just computed)."""
-    vecs = _centroid_array(centroids)
-    scored = F.transform(vecs, lambda v: squared_l2_distance(vec_col, v))
-    best = F.array_min(scored)
-    cluster = (F.array_position(scored, best) - 1).cast("int")
-    return points.withColumn("cluster", cluster).withColumn("dist", best)
-
-
-def update_centroids(
-    assigned: DataFrame, k: int, dim: int, vec_col: str = "embedding",
-    weight_col: str | None = None,
-) -> tuple[list[list[float]], list[int], float]:
-    """New centroids = per-cluster per-dimension (weighted) mean —
-    A11's sum(x·w)/sum(w) (KMeans.java:178-205) via posexplode +
-    groupBy(cluster, dim): one shuffle of (k × dim) partial aggregates,
-    never the raw points.
-
-    Also returns the weighted inertia of the assignment that produced
-    ``assigned`` (sum of w·dist). After posexplode each point's dist
-    repeats once per dimension, so summing dist·w alongside the per-dim
-    sums and dividing by dim recovers it with zero extra actions.
-    """
-    w = F.col(weight_col) if weight_col else F.lit(1)
-    per_dim = (
-        assigned.select(
-            "cluster", w.alias("w"), "dist", F.posexplode(vec_col).alias("pos", "val")
-        )
-        .groupBy("cluster", "pos")
-        .agg(
-            F.sum(F.col("val").cast("double") * F.col("w")).alias("s"),
-            F.sum("w").alias("n"),
-            F.sum(F.col("dist") * F.col("w")).alias("d"),
-        )
-        .collect()
-    )
-    sums = [[0.0] * dim for _ in range(k)]
-    counts = [0] * k
-    for row in per_dim:
-        sums[row["cluster"]][row["pos"]] = row["s"] / row["n"]
-        counts[row["cluster"]] = row["n"]
-    inertia = sum(row["d"] for row in per_dim) / dim
-    return sums, counts, inertia
-
-
-def kmeans_fit(
-    points: DataFrame,
-    k: int,
-    dim: int,
-    max_iter: int = 20,
-    tol: float = 1e-3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    assume_cached: bool = False,
-) -> KMeansResult:
-    """Lloyd's algorithm with deterministic init (the k lowest-id points
-    — unlike the reference's unseeded Random, CGenerator.java:99, this
-    reproduces bit-for-bit across runs).
-
-    The points DataFrame is cached once; each iteration is one narrow
-    assignment projection + one (k×dim)-row aggregation action — the
-    entire per-iteration MR job + HBase round-trip of the reference
-    collapsed into a sub-second action. A model-selection sweep passes
-    ``assume_cached=True`` with an externally cached DataFrame so the
-    k fits share one materialization.
-    """
-    if not assume_cached:
-        points = points.select(id_col, vec_col).cache()
-    try:
-        init_rows = points.orderBy(id_col).limit(k).collect()
-        centroids = [[float(x) for x in r[vec_col]] for r in init_rows]
-
-        inertia_hist: list[float] = []
-        converged = False
-        it = 0
-        for it in range(1, max_iter + 1):
-            assigned = assign_clusters(points, centroids, vec_col)
-            new_centroids, counts, inertia = update_centroids(assigned, k, dim, vec_col)
-            inertia_hist.append(inertia)
-            # empty cluster: keep previous centroid (reference keeps the
-            # row absent; keeping the old centroid is the standard fix)
-            for i in range(k):
-                if counts[i] == 0:
-                    new_centroids[i] = centroids[i]
-            shift = max(
-                max(abs(a - b) for a, b in zip(ca, cb))
-                for ca, cb in zip(centroids, new_centroids)
-            )
-            centroids = new_centroids
-            if shift <= tol:
-                converged = True
-                break
-        return KMeansResult(centroids, it, converged, inertia_hist)
-    finally:
-        # every iteration's action has run; holding the cache past the
-        # fit only leaks executor memory across repeated fits (the
-        # model-selection sweep calls this once per k)
-        if not assume_cached:
-            points.unpersist()
-
-
 # ---------------------------------------------------------------------------
-# Pinned (fixed-point) Lloyd fit — the oracle-replayable variant.
+# Fixed-point Lloyd fit — every step integer-exact, oracle-replayable.
 # ---------------------------------------------------------------------------
 @dataclass
 class PinnedKMeansResult:
@@ -276,13 +146,12 @@ def kmeans_fit_pinned(
     """Lloyd's algorithm on KM_QUANT fixed-point coordinates — every
     step integer-exact, so the full iterative loop is replayable as a
     chained-CTE SQL oracle (plans/ml_queries.py) and hash-certifiable
-    by the driver, closing the last oracle-less registry entries
-    (VERDICT r7 item 1).
+    by the driver.
 
     Per iteration: one argmin assignment projection + one (k × dim)-row
-    aggregate collect (O(k·dim) driver state, the same shape as the
-    float fit). Centroid update is floor(sum/n + 0.5) per dimension —
-    sum and n exact integers, one correctly-rounded double division, so
+    aggregate collect (O(k·dim) driver state). Centroid update is
+    floor(sum/n + 0.5) per dimension — sum and n exact integers, one
+    correctly-rounded double division, so
     the new centroids are the same integers in any engine. Runs a FIXED
     max_iter iterations (the oracle replays exactly that many stages);
     the loop short-circuits only on an exact fixed point, after which
@@ -297,7 +166,7 @@ def kmeans_fit_pinned(
     """
     qpts = points if assume_quantized else quantize_points(points, vec_col, id_col).cache()
     try:
-        # Magnitude guard (VERDICT r8 item 7): one tiny aggregate over
+        # Magnitude guard: one tiny aggregate over
         # the (cached) quantized projection. If any coordinate is large
         # enough that a squared-distance sum could exceed int64, the
         # arithmetic below would wrap SILENTLY in Spark — fail loudly
@@ -331,8 +200,8 @@ def kmeans_fit_pinned(
                 .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
                 .collect()
             )
-            # empty cluster keeps its previous centroid (same policy as
-            # the float fit; the oracle's LEFT JOIN + COALESCE mirrors it)
+            # empty cluster keeps its previous centroid (the standard
+            # fix; the oracle's LEFT JOIN + COALESCE mirrors it)
             new = [list(c) for c in cents]
             for row in per_dim:
                 if abs(row["s"]) >= _MAX_EXACT_SUM:
@@ -354,21 +223,3 @@ def kmeans_fit_pinned(
     finally:
         if not assume_quantized:
             qpts.unpersist()
-
-
-def silhouette_score(
-    points: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
-) -> float:
-    """The reference's *simplified* silhouette (documented bug-compat,
-    SURVEY.md §7.3): per point, (d2 - d1) / d2 on SQUARED distances to
-    the nearest / second-nearest centroid (Silhouette.java:83-97), not
-    the textbook formula — then the global average."""
-    vecs = _centroid_array(centroids)
-    dists = F.array_sort(
-        F.transform(vecs, lambda v: squared_l2_distance(vec_col, v))
-    )
-    score = F.when(
-        dists[1] > 0, (dists[1] - dists[0]) / dists[1]
-    ).otherwise(F.lit(0.0))
-    row = points.select(F.avg(score).alias("s")).first()
-    return float(row["s"])

@@ -41,7 +41,6 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from hadoop_project_spark.functions.vector import dot, l2_norm
 from hadoop_project_spark.operators import similarity as sim
 from hadoop_project_spark.operators import textstats as ts
 
@@ -124,32 +123,11 @@ def jaccard_topk(docs: DataFrame, n_queries: int, k: int) -> DataFrame:
 def dense_topk(
     emb: DataFrame, n_queries: int, k: int, id_col: str = "vec_id"
 ) -> DataFrame:
-    """Dense leg: exact cosine top-k for the first ``n_queries`` vectors,
-    ROUNDED to 9 dp before ranking (the repo-wide cross-engine ordering
-    rule, matching ann_topk_bruteforce)."""
-    queries = emb.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"),
-        F.col("embedding").alias("q_vec"),
-        l2_norm("embedding").alias("q_norm"),
-    )
-    corpus = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("embedding").alias("c_vec"),
-        l2_norm("embedding").alias("c_norm"),
-    )
-    scored = (
-        corpus.crossJoin(F.broadcast(queries))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm")),
-                9,
-            ).alias("score"),
-        )
-    )
-    return topk_per_query(scored, k)
+    """Dense leg: sim.brute_force_topk for the first ``n_queries``
+    vectors, its 9-dp cosine renamed to ``score``."""
+    return sim.brute_force_topk(
+        emb, emb.filter(F.col(id_col) < n_queries), k, id_col=id_col
+    ).withColumnRenamed("cosine", "score")
 
 
 def _rrf_contrib(rank_col: str):
@@ -400,26 +378,10 @@ def prf_centroids(topk: DataFrame, emb: DataFrame, m: int) -> DataFrame:
 def dense_rerank(
     centroids: DataFrame, emb: DataFrame, k: int
 ) -> DataFrame:
-    """Cosine top-k of the corpus against each PRF centroid (rounded to
-    9 dp before ranking). ``centroids``: (query, q_vec double[])."""
-    q = centroids.select(
-        F.col("query").alias("query_id"),
-        "q_vec",
-        l2_norm("q_vec").alias("q_norm"),
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_vec"),
-        l2_norm("embedding").alias("c_norm"),
-    )
-    scored = corpus.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            dot("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm")), 9
-        ).alias("score"),
-    )
-    return topk_per_query(scored, k)
+    """Cosine top-k (9 dp) of the corpus against each PRF centroid
+    (sim.centroid_topk). ``centroids``: (query, q_vec double[])."""
+    q = centroids.select(F.col("query").alias("query_id"), "q_vec")
+    return sim.centroid_topk(emb, q, k).withColumnRenamed("cosine", "score")
 
 
 # ---------------------------------------------------------------------------

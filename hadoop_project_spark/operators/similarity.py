@@ -1,18 +1,23 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, per the standard ANN playbook:
+Exact cosine is scored in ONE place, brute_force_topk, and every ANN
+path re-ranks its candidates through the same norm/cosine projection:
 
 * brute_force_topk — exact cosine top-k: broadcast the (small) query
   set, scan the corpus once, then rank with one row_number ≤ k window
   per query (global_topk). Spark plans it as a Partial WindowGroupLimit
   inside the scan stage, so at most k rows per partition and query
   reach the query-keyed exchange, and a Final one above it; the raw
-  scores never shuffle.
-* lsh_topk — random-hyperplane LSH: bucket corpus and queries by the
-  sign-bit key of H fixed hyperplanes, search only matching buckets
-  (optionally multi-probe by also matching hamming-1 neighbor buckets).
-  This is the scale path: bucket key is a shuffle key, so the work per
-  query drops by ~2^H while recall stays tunable via H and probes.
+  scores never shuffle. centroid_topk is the same scan for query
+  vectors that are not corpus members.
+* lsh_topk / ivf_topk — random-hyperplane LSH and inverted-file
+  candidate generation: bucket or cell keys are shuffle keys, so the
+  work per query drops by ~2^H (LSH) or n_cells/n_probe (IVF) while
+  recall stays tunable; the candidates are re-ranked by exact cosine.
+
+Every cosine is rounded to 9 dp before ranking, so ordering decisions
+are made on the values an oracle re-derives even if two engines'
+floating-point folds differ in the last ulp.
 
 All vector math is JVM-side (functions/vector.py) — zip_with/aggregate
 inside whole-stage codegen; no Python per row. Hyperplanes are
@@ -24,13 +29,13 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from hadoop_project_spark.functions.vector import (
-    dot,
+    dot_cols_sql,
     dot_sql,
-    l2_norm,
+    l2_norm_sql,
 )
 
 
@@ -53,6 +58,47 @@ def global_topk(scored: DataFrame, k: int) -> DataFrame:
     return _window_topk(scored, "cosine", F.col("cosine").desc(), k)
 
 
+def with_norm(rel: DataFrame, side: str) -> DataFrame:
+    """Append ``{side}_norm``, the L2 norm of ``{side}_vec``, to a
+    scoring side (``side`` is ``q`` or ``c``). Norms are materialized
+    once per row BEFORE the pair join: cosine inside the join would
+    recompute both norms per candidate pair (O(pairs × dim) extra
+    work), and dot/(n_q·n_c) is arithmetically identical. One text
+    parse (functions/vector.l2_norm_sql, float-identical to the Column
+    form) instead of ~2 py4j lambda constructions per norm."""
+    return rel.withColumn(f"{side}_norm", F.expr(l2_norm_sql(f"{side}_vec")))
+
+
+def cosine_9dp() -> Column:
+    """round(q_vec·c_vec / (q_norm·c_norm), 9) over a joined pair of
+    with_norm sides — the one cosine every ranking here orders by."""
+    return F.round(
+        F.expr(dot_cols_sql("q_vec", "c_vec"))
+        / (F.col("q_norm") * F.col("c_norm")),
+        9,
+    )
+
+
+def _side(rel: DataFrame, id_col: str, vec_col: str, side: str) -> DataFrame:
+    """(query_id | neighbor_id, {side}_vec, {side}_norm) of corpus rows;
+    ``vec_col`` is a column name or SQL text."""
+    id_as = "query_id" if side == "q" else "neighbor_id"
+    vec = F.expr(vec_col).alias(f"{side}_vec")
+    return with_norm(rel.select(F.col(id_col).alias(id_as), vec), side)
+
+
+def _scan_topk(
+    c: DataFrame, q: DataFrame, k: int, exclude_self: bool
+) -> DataFrame:
+    """Broadcast the query side ``q`` over one scan of the corpus side
+    ``c`` and rank every pair by cosine_9dp."""
+    pairs = c.crossJoin(F.broadcast(q))
+    if exclude_self:
+        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+    scored = pairs.select("query_id", "neighbor_id", cosine_9dp().alias("cosine"))
+    return global_topk(scored, k)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -62,33 +108,29 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query (self-match excluded).
 
-    Returns (query_id, neighbor_id, cosine, rank) with deterministic
-    neighbor_id tie-break.
-    """
-    # Norms are materialized once per row on each side BEFORE the join:
-    # cosine inside the join would recompute both norms per candidate
-    # pair (O(pairs × dim) extra work); dot/(n_q·n_c) is arithmetically
-    # identical (same sqrt-of-sum expression, evaluated earlier).
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(vec_col).alias("q_norm"),
+    ``queries`` are corpus rows (same ``id_col``/``vec_col``);
+    ``vec_col`` is a column name or SQL text (e.g. ``slice(embedding,
+    1, 8)`` for truncated-prefix scoring). Returns (query_id,
+    neighbor_id, cosine, rank), cosine rounded to 9 dp, neighbor_id
+    tie-break."""
+    return _scan_topk(
+        _side(corpus, id_col, vec_col, "c"),
+        _side(queries, id_col, vec_col, "q"),
+        k,
+        exclude_self=True,
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(vec_col).alias("c_norm"),
+
+
+def centroid_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """brute_force_topk for query vectors that are not corpus members
+    (e.g. pseudo-relevance-feedback centroids): ``queries`` is
+    (query_id, q_vec), and no pair is excluded."""
+    return _scan_topk(
+        _side(corpus, "vec_id", "embedding", "c"),
+        with_norm(queries, "q"),
+        k,
+        exclude_self=False,
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))).alias("cosine"),
-        )
-    )
-    return global_topk(scored, k)
 
 
 def make_hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
@@ -106,7 +148,7 @@ def lsh_bucket(vec_col: str, planes: list[list[float]]):
     """Bucket id = integer of sign bits of <vec, plane_i>.
 
     The dot is rounded to 9 dp BEFORE the sign decision (the same
-    strategy as cosine_round): a vector lying within an ulp of a
+    strategy as cosine_9dp): a vector lying within an ulp of a
     hyperplane would otherwise flip its bucket between two engines'
     summation orders, changing the candidate set an oracle re-derives.
 
@@ -129,30 +171,16 @@ def _rerank_candidates(
     k: int,
     id_col: str,
     vec_col: str,
-    cosine_round: int | None,
 ) -> DataFrame:
     """Exact-cosine top-k over ANN candidate id pairs (query_id,
     neighbor_id): the shared tail of lsh_topk and ivf_topk. A hot
     bucket or cell can still concentrate one query's candidates — the
     global_topk window's partial group limit keeps what shuffles to the
     ranking at partitions × k regardless."""
-    q_full = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(vec_col).alias("q_norm"),
-    )
-    c_full = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(vec_col).alias("c_norm"),
-    )
-    cos = dot("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))
-    if cosine_round is not None:
-        cos = F.round(cos, cosine_round)
     scored = (
-        cand.join(F.broadcast(q_full), "query_id")
-        .join(c_full, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
+        cand.join(F.broadcast(_side(queries, id_col, vec_col, "q")), "query_id")
+        .join(_side(corpus, id_col, vec_col, "c"), "neighbor_id")
+        .select("query_id", "neighbor_id", cosine_9dp().alias("cosine"))
     )
     return global_topk(scored, k)
 
@@ -168,12 +196,9 @@ def lsh_topk(
     multiprobe: bool = True,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cosine_round: int | None = None,
 ) -> DataFrame:
-    """Approximate top-k via multi-table random-hyperplane LSH.
-    ``cosine_round`` rounds the cosine BEFORE ranking (oracle parity:
-    ordering decisions must be made on the same values both engines
-    compare).
+    """Approximate top-k via multi-table random-hyperplane LSH; the
+    candidates are ranked by the 9-dp cosine (_rerank_candidates).
 
     Single-table sign-bit LSH fails whenever a neighborhood straddles a
     hyperplane (the whole cluster splits across buckets), so — as in
@@ -229,9 +254,7 @@ def lsh_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _rerank_candidates(
-        cand, corpus, queries, k, id_col, vec_col, cosine_round
-    )
+    return _rerank_candidates(cand, corpus, queries, k, id_col, vec_col)
 
 
 def make_coarse_centroids(n_cells: int, dim: int, seed: int = 7) -> list[list[float]]:
@@ -309,7 +332,6 @@ def ivf_topk(
     centroids: list[list[float]] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cosine_round: int | None = None,
 ) -> DataFrame:
     """Approximate top-k via an inverted-file (IVF) index — the other
     standard ANN scale path next to LSH.
@@ -319,8 +341,9 @@ def ivf_topk(
     clustering key of the stored table, so the "inverted lists" are
     parquet partitions and probing prunes whole files); each query
     probes its n_probe nearest cells; the cell-key join carries ids
-    only; exact cosine runs on candidates; the global_topk window's
-    partial group limit bounds the ranking shuffle."""
+    only; the 9-dp cosine runs on candidates (_rerank_candidates); the
+    global_topk window's partial group limit bounds the ranking
+    shuffle."""
     cents = centroids if centroids is not None else make_coarse_centroids(
         n_cells, dim, seed
     )
@@ -336,9 +359,7 @@ def ivf_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
     )
-    return _rerank_candidates(
-        cand, corpus, queries, k, id_col, vec_col, cosine_round
-    )
+    return _rerank_candidates(cand, corpus, queries, k, id_col, vec_col)
 
 
 def blocked_pair_cosines(
@@ -440,65 +461,6 @@ def embedding_neardup_pairs(
     return blocked_pair_cosines(
         corpus, min_cosine, block_col, id_col, vec_col
     ).filter(F.col("cosine") >= min_cosine)
-
-
-def brute_force_topk_pandas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-vectorized twin of brute_force_topk: the query matrix rides
-    a closure into a scalar pandas_udf that scores each corpus batch
-    against ALL queries with one numpy matmul.
-
-    This is the documented "UDF surface" of the engine (SURVEY.md §2.8):
-    when per-row math gets wide enough (large k·dim), one BLAS matmul
-    per Arrow batch beats per-row JVM expression evaluation. Results are
-    float64 numpy, so ranks agree with the JVM path except at exact
-    cosine ties (tests compare against brute_force_topk with tolerance).
-
-    Scale shape: identical to brute_force_topk — corpus scan stays
-    partition-parallel, queries broadcast (here: serialized in the UDF
-    closure), only (n_corpus × n_queries) scores then per-query top-k.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-
-    # no type hints: `from __future__ import annotations` stringifies
-    # them and pyspark's hint resolution can't see the local pd import
-    @pandas_udf("array<struct<query_id: long, cosine: double>>")
-    def score_all(vecs):
-        c_mat = np.array(vecs.tolist(), dtype=np.float64)
-        c_norm = np.linalg.norm(c_mat, axis=1)
-        sims = (c_mat @ q_mat.T) / np.outer(c_norm, q_norm)
-        return pd.Series(
-            [
-                [
-                    {"query_id": int(qid), "cosine": float(s)}
-                    for qid, s in zip(q_ids, row)
-                ]
-                for row in sims
-            ]
-        )
-
-    scored = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.explode(score_all(F.col(vec_col))).alias("qs"),
-        )
-        .select("neighbor_id", F.col("qs.query_id").alias("query_id"),
-                F.col("qs.cosine").alias("cosine"))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    return global_topk(scored, k).select("query_id", "neighbor_id", "cosine", "rank")
 
 
 def quantize_profile(

@@ -115,14 +115,3 @@ def key_skew_profile(df: DataFrame, keys: list[str]) -> DataFrame:
             / F.sum("cnt").cast("double")
         ).alias("skew_ratio"),
     )
-
-
-def repartition_by(
-    df: DataFrame, cols: list[str], n: int | None = None
-) -> DataFrame:
-    """Explicit hash repartition (R1-R3 analog). Placement-only: results
-    are invariant; exposed so pipelines can pre-shuffle once and reuse
-    the partitioning across several keyed operations."""
-    return df.repartition(n, *[F.col(c) for c in cols]) if n else df.repartition(
-        *[F.col(c) for c in cols]
-    )

@@ -307,7 +307,7 @@ def _dedup_rewrite_over(
 
 # Whole-document drop threshold for the combined dedup pipeline: a
 # document whose REMOVED-SIDE merged-interval coverage (spans whose
-# canonical copy lives in a lower doc_id — doc_drop_coverage) reaches
+# canonical copy lives in a lower doc_id — removed_side_coverage) reaches
 # this fraction is a near-complete copy of earlier documents and is
 # DROPPED outright; documents below it survive into the span-cut pass.
 # 0.99 (not 0.5) because the fixture's duplicated docs are near-full
@@ -329,15 +329,15 @@ def exact_substring_dedup_corpus(
     composed in their production order:
 
     1. DROP documents whose REMOVED-SIDE duplication coverage
-       (doc_drop_coverage: spans whose canonical copy lives in a
-       lower doc_id, interval-merged) reaches ``drop_coverage`` —
+       (removed_side_coverage: spans whose canonical copy lives in
+       a lower doc_id, interval-merged) reaches ``drop_coverage`` —
        they are near-complete copies of earlier documents; rewriting
        them would ship fragments of boilerplate. Removed-side (not
        the both-sides report) is what preserves a canonical: under
        both-sides coverage a mutual full-copy pair scores 1.0 on BOTH
        members and the whole cluster — passage included — would
        vanish from the corpus; removed-side scores the cluster's
-       lowest doc_id 0 and keeps it (round-11 review finding);
+       lowest doc_id 0 and keeps it;
     2. re-detect spans among the SURVIVORS and CUT those
        (exact_substring_dedup_rewrite) — a span whose canonical
        partner was dropped in stage 1 is no longer duplicated text and
@@ -350,39 +350,20 @@ def exact_substring_dedup_corpus(
     surviving corpus would see it). Dropped documents emit no row: the
     output IS the training corpus.
 
-    Round-12 shape (guide §1.2 — remove redundant passes): one pinned
-    postings relation and one anchor window feed BOTH stages plus the
-    splice. Anchors and postings are per-document derivations, so the
-    survivor-side relations are doc-filters of the stage-1 ones; the
-    former shape re-tokenized the corpus three times (stage-1 anchors,
-    stage-2 anchors, splice) and ran the anchor window twice from
-    scratch. n_tokens for the drop criterion counts the pinned
-    postings rows — identical to the text-split count for every doc
-    that can appear in the coverage join (a doc with a span has >=
+    One pinned postings relation and one anchor window feed BOTH
+    stages plus the splice. Anchors and postings are per-document
+    derivations, so the survivor-side relations are doc-filters of the
+    stage-1 ones; re-deriving them per stage re-tokenized the corpus
+    three times (stage-1 anchors, stage-2 anchors, splice) and ran the
+    anchor window twice. n_tokens for the drop criterion counts the
+    pinned postings rows — identical to the text-split count for every
+    doc that can appear in the coverage join (a doc with a span has >=
     min_len nonempty tokens)."""
     p = eager_pin(postings(docs))
     kg = eager_pin(anchors_over(p, k))
-    spans1 = spans_from_anchors(kg, k, min_len, max_gram_occ)
-    sides = spans1.select(
-        F.col("doc_b").alias("doc_id"),
-        F.col("start_b").alias("s"),
-        (F.col("start_b") + F.col("len_tokens")).alias("e"),
-    ).distinct()
-    cov = merge_intervals(sides).groupBy("doc_id").agg(
-        F.sum(F.col("me") - F.col("ms")).cast("long").alias("dup_tokens")
-    )
-    ntok = p.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_tokens")
-    )
     dropped = eager_pin(
-        cov.join(ntok, "doc_id")
-        .filter(
-            (
-                F.col("dup_tokens").cast("double")
-                / F.col("n_tokens").cast("double")
-            )
-            >= F.lit(drop_coverage)
-        )
+        removed_side_coverage(p, kg, k, min_len, max_gram_occ)
+        .filter(F.col("dup_fraction") >= F.lit(drop_coverage))
         .select("doc_id")
     )  # O(dropped docs); three anti-join consumers below
     survivors = docs.join(dropped, "doc_id", "left_anti")
@@ -438,24 +419,25 @@ def doc_duplication_coverage(
     return _coverage_over(p, sides)
 
 
-def doc_drop_coverage(
-    docs: DataFrame,
+def removed_side_coverage(
+    p: DataFrame,
+    kg: DataFrame,
     k: int = K_GRAM,
     min_len: int = MIN_SPAN,
     max_gram_occ: int = MAX_GRAM_OCC,
 ) -> DataFrame:
-    """doc_duplication_coverage restricted to the REMOVED side: the
-    fraction of the document covered by spans whose canonical copy
-    lives in a LOWER doc_id. This — not the both-sides report — is the
+    """_coverage_over restricted to the REMOVED side, over postings
+    ``p`` and their anchors ``kg`` (anchors_over(p, k)): the fraction
+    of the document covered by spans whose canonical copy lives in a
+    LOWER doc_id. This — not the both-sides report — is the
     whole-document DROP criterion: under both-sides coverage a mutual
     full-copy pair scores 1.0 on BOTH members, so a drop-threshold
     pass deletes the entire cluster and the passage vanishes from the
-    corpus (round-11 review finding); under removed-side coverage the
-    cluster's lowest doc_id has no lower-id partner, scores 0, and
-    keeps the canonical occurrence — the same keep-lowest orientation
-    every cut in this module uses."""
-    p = eager_pin(postings(docs))  # anchors + n_tokens
-    spans = spans_from_anchors(anchors_over(p, k), k, min_len, max_gram_occ)
+    corpus; under removed-side coverage the cluster's lowest doc_id
+    has no lower-id partner, scores 0, and keeps the canonical
+    occurrence — the same keep-lowest orientation every cut in this
+    module uses."""
+    spans = spans_from_anchors(kg, k, min_len, max_gram_occ)
     sides = spans.select(
         F.col("doc_b").alias("doc_id"),
         F.col("start_b").alias("s"),

@@ -20,7 +20,6 @@ from hadoop_project_spark.functions.text import (
     normalize_text,
     shingles_from_tokens,
     tokenize,
-    word_shingles,
 )
 
 # Small deterministic stopword profiles. The language-ID operator is a
@@ -130,19 +129,11 @@ def fingerprint(col: str | Column) -> Column:
     return F.md5(normalize_text(col))
 
 
-def min_shingle_fingerprint(col: str | Column, k: int = 3) -> Column:
+def min_shingle_fingerprint_from_tokens(toks: Column, k: int = 3) -> Column:
     """Locality-sensitive fingerprint: minimum md5 over k-word shingles
     (a 1-permutation MinHash) — survives small edits that move text.
-
-    Convenience single-expression form; hot paths should project the
-    token array and use min_shingle_fingerprint_from_tokens."""
-    return F.array_min(F.transform(word_shingles(col, k), F.md5))
-
-
-def min_shingle_fingerprint_from_tokens(toks: Column, k: int = 3) -> Column:
-    """Same as min_shingle_fingerprint but over a MATERIALIZED token-array
-    column, avoiding per-shingle re-tokenization (see
-    functions.text.shingles_from_tokens)."""
+    Takes a MATERIALIZED token-array column, avoiding per-shingle
+    re-tokenization (see functions.text.shingles_from_tokens)."""
     return F.array_min(F.transform(shingles_from_tokens(toks, k), F.md5))
 
 

@@ -348,7 +348,7 @@ def _sql_mmr_rerank() -> str:
 
 @register(
     "mmr_diversified_topk",
-    priority=10,  # new in round 11 -> first driver window
+    priority=10,  # first driver window
     oracle=_sql_mmr_rerank(),
     tags=("retrieval", "similarity", "mmr", "diversity", "extension"),
 )
@@ -365,14 +365,14 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from hadoop_project_spark.execution import eager_pin
-    from hadoop_project_spark.functions.vector import dot, l2_norm
+    from hadoop_project_spark.operators import similarity as sim
 
     emb = load_table(spark, sf_dir, "embeddings")
     pool = rt.dense_topk(emb, N_QUERIES, MMR_POOL)
     # EAGER pin: the corpus-wide dense ranking feeds FIVE consumers
     # (pool_ids, both pair sides, the sim join, mmr_select); unpinned,
     # each broadcast-exchange subtree recomputes the whole top-k
-    # pipeline (review finding)
+    # pipeline
     cand = eager_pin(
         pool.select(
             "query_id", "neighbor_id",
@@ -396,22 +396,19 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a") != F.col("b"))
         .select(F.col("ca.query_id").alias("query_id"), "a", "b")
     )
-    ea = ev.select(
-        F.col("vec_id").alias("a"), F.col("embedding").alias("va"),
-        l2_norm("embedding").alias("na"),
+    ea = sim.with_norm(
+        ev.select(F.col("vec_id").alias("a"), F.col("embedding").alias("q_vec")),
+        "q",
     )
-    eb = ev.select(
-        F.col("vec_id").alias("b"), F.col("embedding").alias("vb"),
-        l2_norm("embedding").alias("nb"),
+    eb = sim.with_norm(
+        ev.select(F.col("vec_id").alias("b"), F.col("embedding").alias("c_vec")),
+        "c",
     )
     psim = (
         pairs.join(F.broadcast(ea), "a")
         .join(F.broadcast(eb), "b")
         .select(
-            "query_id", "a", "b",
-            rt.nano(
-                F.round(dot("va", "vb") / (F.col("na") * F.col("nb")), 9)
-            ).alias("sim_nano"),
+            "query_id", "a", "b", rt.nano(sim.cosine_9dp()).alias("sim_nano")
         )
     )
     return rt.mmr_select(cand, psim, MMR_K)

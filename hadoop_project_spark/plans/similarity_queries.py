@@ -11,8 +11,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hadoop_project_spark.catalog import load_table
 from hadoop_project_spark.execution import eager_pin, run_overlapped
-from hadoop_project_spark.functions.vector import dot_cols_sql, l2_norm_sql
-
 from hadoop_project_spark.operators import similarity as sim
 from hadoop_project_spark.plans.registry import register
 
@@ -20,23 +18,6 @@ DIM = 64
 K = 10
 N_QUERIES = 8
 NEARDUP_MIN_COSINE = 0.3
-
-
-# one-parse cosine text (float-identical to the Column form — the
-# builders' test pin): each Column-form dot/l2_norm costs ~2 py4j
-# lambda constructions at plan-build time, and the brute-force rankings
-# build several per query (ann_truncated_dim_recall: 9). Built lazily —
-# F.expr needs an active SparkContext, which import time has none of.
-
-
-def _norm_emb() -> F.Column:
-    return F.expr(l2_norm_sql("embedding"))
-
-
-def _cos_qc() -> F.Column:
-    return F.expr(dot_cols_sql("q_vec", "c_vec")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
 
 
 def _sql_dot(a: str, b: str, dim: int = DIM) -> str:
@@ -91,28 +72,7 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     single corpus scan, per-query window top-k (SURVEY §2 extension —
     the scale-safe exact baseline for ANN)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # norms precomputed per vector before the join (not per scored pair —
-    # same rationale and bit-identical values as embedding_neardup_pairs)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"),
-        _norm_emb().alias("q_norm"),
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"),
-        _norm_emb().alias("c_norm"),
-    )
-    scored = (
-        corpus.crossJoin(F.broadcast(queries))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_cos_qc(), 9).alias("cosine"),
-        )
-    )
-    # one row_number window, group-limited to K rows per partition
-    # before its query_id exchange — see operators.similarity
-    return sim.global_topk(scored, K)
+    return sim.brute_force_topk(emb, emb.filter(F.col("vec_id") < N_QUERIES), K)
 
 
 # (The former oracle-less `ann_topk_lsh` single-table query is retired:
@@ -363,7 +323,7 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     return sim.ivf_topk(
         emb, queries, k=K, n_cells=IVF_CELLS, n_probe=IVF_PROBE,
-        dim=DIM, seed=IVF_SEED, cosine_round=9,
+        dim=DIM, seed=IVF_SEED,
     )
 
 
@@ -380,11 +340,7 @@ def ann_topk_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     builder + recall property test)."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    # cosine_round=9 BEFORE ranking: ordering decisions are made on the
-    # same 9dp values the oracle ranks, so boundary ties agree
-    return sim.lsh_topk(
-        emb, queries, k=K, n_planes=8, dim=DIM, seed=42, cosine_round=9
-    )
+    return sim.lsh_topk(emb, queries, k=K, n_planes=8, dim=DIM, seed=42)
 
 
 @register(
@@ -461,7 +417,7 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     iv = sim.ivf_topk(
         emb, queries, k=K, n_cells=IVF_CELLS, n_probe=IVF_PROBE,
-        dim=DIM, seed=IVF_SEED, cosine_round=9,
+        dim=DIM, seed=IVF_SEED,
     ).select("query_id", "neighbor_id")
     hits = (
         bf.join(iv, ["query_id", "neighbor_id"])
@@ -495,7 +451,7 @@ _SQL_TRUNC_UNION = "\n      UNION ALL ".join(
 
 @register(
     "ann_truncated_dim_recall",
-    priority=10,  # new in round 7 -> first driver window
+    priority=10,  # first driver window
     oracle=f"""
     WITH bf AS ({_SQL_BRUTEFORCE}),
     {_SQL_TRUNC_CTES},
@@ -528,50 +484,26 @@ def ann_truncated_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     decides whether a cheap truncated-prefix prefilter (score on d dims,
     re-rank survivors at full width) is safe for a given corpus.
 
-    Shape for 100 TB: each truncated ranking is the same scale-safe
-    plan as ann_topk_bruteforce (broadcast queries, one corpus scan,
-    top-k window) over sliced arrays — slicing costs nothing at scan
-    time and cuts the per-pair fold by 64/d; the evaluation join is K
-    rows per query per d. The full-width truth relation feeds one join
-    per d, so it is eager-pinned rather than recomputed per branch."""
+    Shape for 100 TB: each truncated ranking is sim.brute_force_topk,
+    the same scale-safe plan as ann_topk_bruteforce (broadcast queries,
+    one corpus scan, top-k window), over a sliced vector — slicing
+    costs nothing at scan time and cuts the per-pair fold by 64/d; the
+    evaluation join is K rows per query per d. The full-width truth
+    relation feeds one join per d, so it is eager-pinned rather than
+    recomputed per branch."""
     from functools import reduce
 
     emb = load_table(spark, sf_dir, "embeddings")
     bf = eager_pin(
         ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     )
-    parts = []
-    for d in TRUNC_DIMS:
-        queries = (
-            emb.filter(F.col("vec_id") < N_QUERIES)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.slice("embedding", 1, d).alias("q_vec"),
-            )
-            .select(
-                "query_id", "q_vec", F.expr(l2_norm_sql("q_vec")).alias("q_norm")
-            )
-        )
-        corpus = emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.slice("embedding", 1, d).alias("c_vec"),
-        ).select(
-            "neighbor_id", "c_vec", F.expr(l2_norm_sql("c_vec")).alias("c_norm")
-        )
-        scored = (
-            corpus.crossJoin(F.broadcast(queries))
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(_cos_qc(), 9).alias("cosine"),
-            )
-        )
-        parts.append(
-            sim.global_topk(scored, K).select(
-                F.lit(d).alias("trunc_dim"), "query_id", "neighbor_id"
-            )
-        )
+    queries = emb.filter(F.col("vec_id") < N_QUERIES)
+    parts = [
+        sim.brute_force_topk(
+            emb, queries, K, vec_col=f"slice(embedding, 1, {d})"
+        ).select(F.lit(d).alias("trunc_dim"), "query_id", "neighbor_id")
+        for d in TRUNC_DIMS
+    ]
     u = reduce(lambda x, y: x.unionByName(y), parts)
     hits = (
         bf.join(u, ["query_id", "neighbor_id"])
@@ -1249,7 +1181,7 @@ def ann_ivfpq_base_plus_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_topk_prefiltered",
-    priority=10,  # new in round 11 -> first driver window
+    priority=10,  # first driver window
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS query_id, label, embedding AS qv
@@ -1287,17 +1219,21 @@ def ann_topk_prefiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition ann_topk_ivfpq_served proves for cell keys); no
     crossJoin appears anywhere. Two-stage top-k as always."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label"),
-        F.col("embedding").alias("q_vec"),
-        _norm_emb().alias("q_norm"),
+    queries = sim.with_norm(
+        emb.filter(F.col("vec_id") < N_QUERIES).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("label"),
+            F.col("embedding").alias("q_vec"),
+        ),
+        "q",
     )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label"),
-        F.col("embedding").alias("c_vec"),
-        _norm_emb().alias("c_norm"),
+    corpus = sim.with_norm(
+        emb.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("label"),
+            F.col("embedding").alias("c_vec"),
+        ),
+        "c",
     )
     scored = (
         corpus.join(F.broadcast(queries), "label")
@@ -1306,7 +1242,7 @@ def ann_topk_prefiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "neighbor_id",
             F.col("label").cast("long").alias("label"),
-            F.round(_cos_qc(), 9).alias("cosine"),
+            sim.cosine_9dp().alias("cosine"),
         )
     )
     ranked = sim.global_topk(scored.drop("label"), K)

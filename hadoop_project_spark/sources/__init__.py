@@ -8,4 +8,4 @@ from hadoop_project_spark.sources.csv import (  # noqa: F401
     read_flights_csv,
     read_pickups_csv,
 )
-from hadoop_project_spark.sources.text import read_text_lines, write_kv_text  # noqa: F401
+from hadoop_project_spark.sources.text import write_kv_text  # noqa: F401

@@ -2,13 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    """One row per line, column `value` — the engine's FileInputFormat
-    (WordCount1/src/main/java/WordCount.java:57)."""
-    return spark.read.text(path)
+from pyspark.sql import DataFrame, functions as F
 
 
 def write_kv_text(df: DataFrame, path: str, key_col: str, value_col, sep: str = "\t") -> None:

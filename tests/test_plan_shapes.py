@@ -18,6 +18,26 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+@pytest.fixture(scope="module")
+def built_plans(spark, sf_dir) -> dict[str, str | Exception]:
+    """Every registered query's executed-plan string, or the exception
+    its build raised, for the two all-registry sweeps below: each query
+    is built once, and the cache and pins are released after each.
+    Eager-write builders do their writes, which the parity suite
+    exercises anyway."""
+    from hadoop_project_spark.execution import clear_query_state
+
+    plans: dict[str, str | Exception] = {}
+    for name, spec in SPECS.items():
+        try:
+            plans[name] = _plan(spec.build(spark, sf_dir))
+        except Exception as exc:  # noqa: BLE001
+            plans[name] = exc
+        finally:
+            clear_query_state(spark)
+    return plans
+
+
 def _formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
@@ -189,7 +209,7 @@ def test_token_streams_plan_no_inferred_size_filter(spark, sf_dir, stream):
     ], plan
 
 
-def test_no_scale_killers_anywhere(spark, sf_dir):
+def test_no_scale_killers_anywhere(built_plans):
     """Global sweep over EVERY registered query's physical plan:
 
     * no CartesianProduct — candidate generation and joins must stay
@@ -200,19 +220,15 @@ def test_no_scale_killers_anywhere(spark, sf_dir):
       avoid. Single-partition FINAL aggregates (1-row global results
       after partial aggregation) are legitimate and not flagged.
 
-    Plans are built (not executed) for every query; eager-write
-    builders do their writes, which the parity suite exercises anyway.
+    Plans are built (not executed) for every query (built_plans).
     """
     bad: list[str] = []
-    for name, spec in SPECS.items():
+    for name, plan in built_plans.items():
         # A query that fails to BUILD is itself a finding — collect it
         # and keep sweeping, so one AnalysisException can't blind the
-        # sweep to every query ordered after it (the r3 failure mode).
-        try:
-            df = spec.build(spark, sf_dir)
-            plan = _plan(df)
-        except Exception as exc:  # noqa: BLE001
-            bad.append(f"{name}: build error: {type(exc).__name__}: {exc}")
+        # sweep to every query ordered after it.
+        if isinstance(plan, Exception):
+            bad.append(f"{name}: build error: {type(plan).__name__}: {plan}")
             continue
         if "CartesianProduct" in plan:
             bad.append(f"{name}: CartesianProduct")
@@ -355,25 +371,26 @@ BOUNDED_GLOBAL_WINDOWS = {
 }
 
 
-def test_no_cartesian_or_global_window_anywhere(spark, sf_dir):
-    """Full-registry plan gate (VERDICT r5 item 3): EVERY registered
-    query's physical plan must contain no CartesianProduct node and no
-    Window fed by an Exchange SinglePartition (a global window = one-
-    task bottleneck at 100×) unless its input is bounded by design
-    (BOUNDED_GLOBAL_WINDOWS above). Covers the roundtrip and iterative
-    shapes the headline PLANS.md list previously skipped — exactly
-    where a plan regression would hide. The exchange can sit a couple
-    of nodes below the Window (a Sort intervenes), so the check looks a
-    few lines down rather than only at the direct child. (Scalar
-    BroadcastNestedLoopJoins from 1-row crossJoins are fine and remain
-    allowed; ordered-output queries use rangepartitioning, not a single
-    partition.)"""
+def test_no_cartesian_or_global_window_anywhere(built_plans):
+    """Full-registry plan gate: EVERY registered query's physical plan
+    (built_plans) must contain no CartesianProduct node and no Window
+    fed by an Exchange SinglePartition (a global window = one-task
+    bottleneck at 100×) unless its input is bounded by design
+    (BOUNDED_GLOBAL_WINDOWS above); a build error fails it too. Covers
+    the roundtrip and iterative shapes the headline PLANS.md list
+    previously skipped — exactly where a plan regression would hide.
+    The exchange can sit a couple of nodes below the Window (a Sort
+    intervenes), so the check looks a few lines down rather than only
+    at the direct child. (Scalar BroadcastNestedLoopJoins from 1-row
+    crossJoins are fine and remain allowed; ordered-output queries use
+    rangepartitioning, not a single partition.)"""
     import re
 
     bad = []
-    for name, spec in SPECS.items():
-        df = spec.build(spark, sf_dir)
-        plan = _plan(df)
+    for name, plan in built_plans.items():
+        if isinstance(plan, Exception):
+            bad.append((name, f"build error: {type(plan).__name__}: {plan}"))
+            continue
         if "CartesianProduct" in plan:
             bad.append((name, "CartesianProduct"))
         if name not in BOUNDED_GLOBAL_WINDOWS:
@@ -391,7 +408,6 @@ def test_no_cartesian_or_global_window_anywhere(spark, sf_dir):
                 if hit:
                     bad.append((name, "window over SinglePartition"))
                     break
-        spark.catalog.clearCache()
     assert not bad, bad
 
 

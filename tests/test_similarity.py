@@ -129,31 +129,28 @@ def test_topk_window_group_limit_bounds_ranking_input(spark, sf_dir):
     ranking exchange, the ONE shuffle the ranking adds (so the scored
     set never shuffles whole), and the result must equal the same
     window ranked without the limit."""
-    from hadoop_project_spark.functions.vector import dot, l2_norm
     from hadoop_project_spark.operators import invindex as ix
     from hadoop_project_spark.plans.invindex_queries import BM25_QUERIES
 
     emb = load_table(spark, sf_dir, "embeddings").repartition(6)
     queries = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 8)
     k = 5
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_vec"),
-        l2_norm("embedding").alias("q_norm"),
+    q = sim.with_norm(
+        queries.select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
+        ),
+        "q",
     )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_vec"),
-        l2_norm("embedding").alias("c_norm"),
+    c = sim.with_norm(
+        emb.select(
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
+        ),
+        "c",
     )
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))).alias("cosine"),
-        )
+        .select("query_id", "neighbor_id", sim.cosine_9dp().alias("cosine"))
     )
     ranked = sim.global_topk(scored, k)
     assert _partial_group_limit_feeds_exchange(ranked, "query_id"), _plan_str(ranked)
@@ -216,32 +213,6 @@ def test_local_topk_nan_null_parity_with_window(spark):
         return (r["query_id"], r["rank"], r["neighbor_id"], c)
 
     assert sorted(map(key, naive)) == sorted(map(key, ranked.collect()))
-
-
-def test_pandas_topk_matches_jvm_topk(spark, sf_dir):
-    """The Arrow/numpy ANN path must produce the same neighbor sets as
-    the JVM expression path (modulo exact-tie ordering): compare ids
-    per query and cosines within 1e-9."""
-    from hadoop_project_spark.catalog import load_table
-    from hadoop_project_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_pandas,
-    )
-    from pyspark.sql import functions as F
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    jvm = brute_force_topk(emb, queries, k=5)
-    arrow = brute_force_topk_pandas(emb, queries, k=5)
-    j = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"]) for r in jvm.collect()}
-    a = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"]) for r in arrow.collect()}
-    assert j.keys() == a.keys()
-    for key, (jn, jc) in j.items():
-        an, ac = a[key]
-        assert abs(jc - ac) < 1e-9, (key, jc, ac)
-        # neighbor ids may differ only under exact cosine ties
-        if jn != an:
-            assert abs(jc - ac) < 1e-12
 
 
 def test_semantic_dedup_keep_rule(spark, sf_dir):

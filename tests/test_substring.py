@@ -222,17 +222,22 @@ def test_corpus_pipeline_keeps_one_canonical_of_full_copy_cluster(spark):
     lives in a lower doc_id), so the cluster's lowest doc_id scores 0
     and survives intact while every later copy is dropped — under the
     both-sides report all members score 1.0 and the passage would be
-    deleted entirely (round-11 review finding)."""
+    deleted entirely."""
+    from hadoop_project_spark.operators.invindex import postings
     from hadoop_project_spark.operators.substring import (
-        doc_drop_coverage,
+        anchors_over,
         exact_substring_dedup_corpus,
+        removed_side_coverage,
     )
 
     passage = _words("p", 12)
     docs = _docs(spark, [passage, passage, passage])  # ids 0, 1, 2
+    p = postings(docs)
     cov = {
         r.doc_id: r.dup_fraction
-        for r in doc_drop_coverage(docs, k=6, min_len=8).collect()
+        for r in removed_side_coverage(
+            p, anchors_over(p, 6), k=6, min_len=8
+        ).collect()
     }
     assert 0 not in cov  # the canonical has no lower-id partner
     assert cov[1] == 1.0 and cov[2] == 1.0
