@@ -32,8 +32,6 @@ TABLES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Session settings that change the schema Spark infers from a parquet
 # footer; each is part of the schema memo's key.
 _SCHEMA_CONFS = (

@@ -19,7 +19,6 @@ from hadoop_project_spark.plans.registry import register
 
 @register(
     "event_transition_matrix",
-    priority=15,
     oracle="""
     WITH t AS (
       SELECT event_type AS from_type,
@@ -85,7 +84,6 @@ _BT_SCALE = 1_000_000.0
 
 @register(
     "seasonal_baseline_wape",
-    priority=15,
     oracle=f"""
     WITH ev AS (
       SELECT event_type, value,
@@ -172,7 +170,6 @@ def seasonal_baseline_wape(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "nation_revenue_gini",
-    priority=15,
     oracle="""
     WITH rev AS (
       SELECT c.c_nationkey, o.o_custkey,
@@ -267,7 +264,6 @@ DECAY_SCALE_EXP = 30
 
 @register(
     "events_decayed_engagement",
-    priority=10,  # new in round 6 -> first driver window
     oracle=f"""
     SELECT user_id,
            CAST(COUNT(*) AS BIGINT) AS n_events,

@@ -157,7 +157,6 @@ def _sql_encode_token_counts(n_merges: int) -> str:
 
 @register(
     "bpe_train_merges",
-    priority=10,  # new in round 7 -> first driver window
     oracle=_sql_train_merges(bpe.N_MERGES),
     tags=("text", "tokenizer", "bpe", "iterative", "extension"),
 )
@@ -183,7 +182,6 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bpe_encode_token_counts",
-    priority=10,  # new in round 7 -> first driver window
     oracle=_sql_encode_token_counts(bpe.N_MERGES),
     tags=("text", "tokenizer", "bpe", "token-count", "extension"),
 )

@@ -3,10 +3,9 @@ oracle re-deriving grams, hash-uniforms, and ratio gates from the same
 constants as operators/corpus.py — a hash-match proves the sampling /
 contamination / repetition decisions themselves, not just row counts.
 
-All four register at priority=500: the driver's 50-query correctness
-window is full of unique operator-family representatives, so these are
-hash-verified by tests/test_oracle_parity.py in every CI run instead
-(see tests/test_registry_window.py's coverage map).
+tests/test_oracle_parity.py hash-verifies each of them in every CI
+run, inside the driver's 50-query window (plans/registry.py
+DRIVER_WINDOW) or not.
 """
 
 from __future__ import annotations
@@ -33,7 +32,6 @@ BENCH_MOD = 97
 
 @register(
     "decontaminate_ngram",
-    priority=500,
     oracle=f"""
     WITH {SQL_SHINGLES_CTE},
     bench AS (SELECT DISTINCT sh FROM sh WHERE doc_id % {BENCH_MOD} = 0),
@@ -62,7 +60,6 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_repetition_stats",
-    priority=500,
     oracle=f"""
     WITH norm AS (
       SELECT doc_id, string_split({SQL_NORM}, ' ') AS toks FROM documents
@@ -96,7 +93,6 @@ def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_hash_sample",
-    priority=500,
     oracle=f"""
     SELECT doc_id, source,
            CAST(u AS DOUBLE) / {float(cp.SAMPLE_MOD)} AS sample_u
@@ -122,7 +118,6 @@ def docs_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_overlap_matrix",
-    priority=500,
     oracle=f"""
     WITH norm AS (
       SELECT source, string_split({SQL_NORM}, ' ') AS toks FROM documents
@@ -160,7 +155,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_quality_cap",
-    priority=500,
     oracle=f"""
     WITH q AS (
       SELECT source, doc_id, round({SQL_QUALITY}, 9) AS quality_r
@@ -290,7 +284,6 @@ def _sql_contrastive_pairs() -> str:
 
 @register(
     "contrastive_pairs",
-    priority=10,  # new in round 11 -> first driver window
     oracle=_sql_contrastive_pairs(),
     tags=("corpus", "contrastive", "dedup", "retrieval", "extension"),
 )
@@ -424,7 +417,6 @@ def _sql_contrastive_dense_negatives() -> str:
 
 @register(
     "contrastive_dense_negatives",
-    priority=10,  # new in round 11 -> first driver window
     oracle=_sql_contrastive_dense_negatives(),
     tags=("corpus", "contrastive", "similarity", "extension"),
 )

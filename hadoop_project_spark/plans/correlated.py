@@ -99,7 +99,6 @@ def small_qty_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cheapest_supplier_per_part",
-    priority=500,
     oracle="""
     WITH up AS (
       SELECT l_partkey, l_suppkey,
@@ -211,7 +210,6 @@ def bulk_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sole_late_supplier_orders",
-    priority=500,
     oracle="""
     WITH late AS (
       SELECT DISTINCT l_orderkey, l_suppkey

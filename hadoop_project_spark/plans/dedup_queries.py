@@ -151,7 +151,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_lsh_recall_eval",
-    priority=10,  # new in round 7 -> first driver window
     oracle=f"""
     WITH {_sql_bands_ctes()},
     cand AS (
@@ -335,7 +334,6 @@ def _sql_band_sweep() -> str:
 
 @register(
     "lsh_band_sweep",
-    priority=10,  # new in round 9 -> first driver window
     oracle=_sql_band_sweep(),
     tags=("dedup", "minhash", "lsh", "evaluation", "calibration", "extension"),
 )
@@ -540,7 +538,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "neardup_gate_admissions",
-    priority=10,  # new in round 7 -> first driver window
     oracle=f"""
     WITH {_sql_bands_ctes()},
     flagged AS (
@@ -660,7 +657,6 @@ def _sql_canonical_by_quality(min_jaccard: float) -> str:
 
 @register(
     "dedup_canonical_by_quality",
-    priority=10,  # new in round 11 -> first driver window
     oracle=_sql_canonical_by_quality(0.5),
     tags=("dedup", "graph", "quality", "canonical", "extension"),
 )
@@ -791,7 +787,6 @@ def _sql_exact_substring_spans() -> str:
 
 @register(
     "exact_substring_spans",
-    priority=10,  # new in round 10 -> first driver window
     oracle=_sql_exact_substring_spans(),
     tags=("text", "dedup", "substring", "extension"),
 )
@@ -845,7 +840,6 @@ def _sql_doc_duplication_coverage() -> str:
 
 @register(
     "doc_duplication_coverage",
-    priority=10,  # new in round 10 -> first driver window
     oracle=_sql_doc_duplication_coverage(),
     tags=("text", "dedup", "substring", "extension"),
 )
@@ -914,7 +908,6 @@ def _sql_exact_substring_dedup_rewrite() -> str:
 
 @register(
     "exact_substring_dedup_rewrite",
-    priority=10,  # new in round 11 -> first driver window
     oracle=_sql_exact_substring_dedup_rewrite(),
     tags=("text", "dedup", "substring", "rewrite", "extension"),
 )
@@ -1012,7 +1005,6 @@ def _sql_exact_substring_dedup_corpus() -> str:
 
 @register(
     "exact_substring_dedup_corpus",
-    priority=10,  # new in round 11 -> first driver window
     oracle=_sql_exact_substring_dedup_corpus(),
     tags=("text", "dedup", "substring", "rewrite", "extension"),
 )
@@ -1065,7 +1057,6 @@ def _sql_corpus_version_diff() -> str:
 
 @register(
     "corpus_version_diff",
-    priority=10,  # new in round 11 -> first driver window
     oracle=_sql_corpus_version_diff(),
     tags=("dedup", "substring", "cdc", "governance", "extension"),
 )
@@ -1140,7 +1131,6 @@ def _sweep_dead_gate_roots(prefix: str) -> None:
 
 @register(
     "neardup_gate_lsm_admissions",
-    priority=10,  # new in round 11 -> first driver window
     oracle=f"""
     WITH {_sql_bands_ctes()},
     flagged AS (
@@ -1251,7 +1241,6 @@ def neardup_gate_lsm_admissions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "neardup_gate_served_probe",
-    priority=10,  # new in round 11 -> first driver window
     oracle=f"""
     WITH {_sql_bands_ctes()},
     cut AS (SELECT (3 * (MAX(doc_id) + 1)) // 4 AS c FROM documents),

@@ -1,8 +1,7 @@
 """Pipeline-diagnostic queries: key-skew profiling (the measurement
 that justifies the salting operators) and snapshot diffing (CDC-style
-run-over-run comparison). Both register at 500 — their machinery's
-in-window reps are the percentile and join families — and are
-hash-verified by tests/test_oracle_parity.py every CI run.
+run-over-run comparison). All are hash-verified by
+tests/test_oracle_parity.py every CI run.
 """
 
 from __future__ import annotations
@@ -33,7 +32,6 @@ _HASH = sql_row_hash(["o_totalprice", "o_orderpriority"])
 
 @register(
     "events_key_skew_profile",
-    priority=500,
     oracle="""
     WITH pk AS (SELECT user_id, COUNT(*) AS cnt FROM events GROUP BY user_id)
     SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
@@ -61,7 +59,6 @@ def events_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orders_snapshot_diff",
-    priority=500,
     oracle=f"""
     WITH old AS (
       SELECT o_orderkey, o_totalprice, o_orderpriority FROM orders
@@ -124,7 +121,6 @@ _PROF_STR = ["l_returnflag", "l_linestatus"]
 
 @register(
     "lineitem_column_profile",
-    priority=500,
     oracle=sql_column_profile("lineitem", _PROF_NUM, _PROF_STR),
     tags=("diagnostics", "analyze", "stats", "extension"),
 )
@@ -138,7 +134,6 @@ def lineitem_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "user_state_history_scd2",
-    priority=500,
     oracle="""
     WITH seq AS (
       SELECT user_id, event_id, ts, event_type,

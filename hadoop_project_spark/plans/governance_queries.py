@@ -72,7 +72,6 @@ _PR_BASE = 0.15
 
 @register(
     "docs_split_assignment",
-    priority=15,
     oracle=f"""
     WITH h AS (
       SELECT source, n_chars,
@@ -120,7 +119,6 @@ def docs_split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_survivors_by_source",
-    priority=15,
     oracle=f"""
     WITH g AS (
       SELECT md5({SQL_NORM}) AS fp,
@@ -174,7 +172,6 @@ def dedup_survivors_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lineitem_winsorized_stats",
-    priority=15,
     oracle="""
     WITH pct AS (
       SELECT l_returnflag,
@@ -265,7 +262,6 @@ def lineitem_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "part_copurchase_rank_step",
-    priority=15,
     oracle=f"""
     WITH e AS (
       SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
@@ -451,7 +447,6 @@ def _sql_pagerank_iterated(iters: int = _PR_ITERS) -> str:
 
 @register(
     "part_pagerank_iterated",
-    priority=10,  # new in round 8 -> first driver window
     oracle=_sql_pagerank_iterated(),
     tags=("graph", "pagerank", "iterative", "C2", "extension"),
 )
@@ -515,7 +510,6 @@ def part_pagerank_iterated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "part_pagerank_bucketed",
-    priority=10,  # new in round 9 -> first driver window
     oracle=_sql_pagerank_iterated(),
     tags=("graph", "pagerank", "iterative", "C2", "roundtrip", "extension"),
 )
@@ -610,7 +604,6 @@ def _pagerank_over_bucketed_graph(
 
 @register(
     "part_pagerank_served",
-    priority=10,  # new in round 10 -> first driver window
     oracle=_sql_pagerank_iterated(),
     tags=("graph", "pagerank", "iterative", "C2", "serving", "extension"),
 )
@@ -644,7 +637,6 @@ _MIX_WSCALE = 1_000_000.0
 
 @register(
     "doc_lm_avgprob",
-    priority=15,
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, string_split({SQL_NORM}, ' ') AS l FROM documents
@@ -731,7 +723,6 @@ def doc_lm_avgprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "training_mix_temperature",
-    priority=15,
     oracle=f"""
     WITH stats AS (
       SELECT source, COUNT(*) AS n_docs,
@@ -823,7 +814,6 @@ def training_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ab_test_value_zscore",
-    priority=15,
     oracle="""
     WITH assigned AS (
       SELECT CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
@@ -909,7 +899,6 @@ def ab_test_value_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "part_copurchase_triangles",
-    priority=15,
     oracle="""
     WITH p AS (
       SELECT LEAST(a.l_partkey, b.l_partkey) AS a,
@@ -968,7 +957,6 @@ def part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "weighted_price_quantiles",
-    priority=15,
     oracle="""
     WITH base AS (
       SELECT l_returnflag AS g, l_extendedprice AS v,
@@ -1060,7 +1048,6 @@ def _spark_split_of(col_expr):
 
 @register(
     "leakage_free_split",
-    priority=10,  # new in round 11 -> first driver window
     oracle=_sql_leakage_free_split(),
     tags=("governance", "split", "dedup", "leakage", "extension"),
 )
@@ -1116,7 +1103,6 @@ def _sql_split_leakage_report() -> str:
 
 @register(
     "split_leakage_report",
-    priority=10,  # new in round 11 -> first driver window
     oracle=_sql_split_leakage_report(),
     tags=("governance", "split", "dedup", "leakage", "evaluation",
           "extension"),

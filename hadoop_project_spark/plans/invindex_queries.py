@@ -75,7 +75,6 @@ def _sql_phrase_search_stats() -> str:
 
 @register(
     "inverted_index_directory",
-    priority=10,  # new in round 8 -> first driver window
     oracle=f"""
     WITH {_SQL_TOKS},
     p AS (
@@ -105,7 +104,6 @@ def inverted_index_directory(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "phrase_search_hits",
-    priority=10,  # new in round 8 -> first driver window
     oracle=_sql_phrase_search_stats(),
     tags=("text", "index", "phrase-search", "extension"),
 )
@@ -161,7 +159,6 @@ def _sql_proximity() -> str:
 
 @register(
     "proximity_search_pairs",
-    priority=10,  # new in round 9 -> first driver window
     oracle=_sql_proximity(),
     tags=("text", "index", "proximity", "extension"),
 )
@@ -256,7 +253,6 @@ def _build_index(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "inverted_index_build_roundtrip",
-    priority=10,  # new in round 9 -> first driver window
     oracle=_sql_phrase_search_stats(),
     tags=("text", "index", "phrase-search", "roundtrip", "S7", "extension"),
 )
@@ -277,7 +273,6 @@ def inverted_index_build_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "bm25_topk_stored",
-    priority=10,  # new in round 9 -> first driver window
     oracle=_sql_bm25_topk(),
     tags=("text", "index", "retrieval", "bm25", "roundtrip", "extension"),
 )
@@ -294,7 +289,6 @@ def bm25_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "index_segment_compaction_roundtrip",
-    priority=10,  # new in round 9 -> first driver window
     oracle=_sql_phrase_search_stats(),
     tags=("text", "index", "streaming", "roundtrip", "S7", "extension"),
 )
@@ -347,7 +341,6 @@ def index_segment_compaction_roundtrip(
 
 @register(
     "index_base_plus_segments_probe",
-    priority=10,  # new in round 9 -> first driver window
     oracle=_sql_phrase_search_stats(),
     tags=("text", "index", "streaming", "serving", "extension"),
 )
@@ -458,7 +451,6 @@ def _sql_bm25_mrr_eval() -> str:
 
 @register(
     "bm25_mrr_eval",
-    priority=10,  # new in round 9 -> first driver window
     oracle=_sql_bm25_mrr_eval(),
     tags=("text", "index", "retrieval", "evaluation", "extension"),
 )
@@ -476,7 +468,6 @@ def bm25_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "phrase_search_served",
-    priority=10,  # new in round 10 -> first driver window
     oracle=_sql_phrase_search_stats(),
     tags=("text", "index", "phrase-search", "serving", "extension"),
 )
@@ -498,7 +489,6 @@ def phrase_search_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bm25_topk_served",
-    priority=10,  # new in round 10 -> first driver window
     oracle=_sql_bm25_topk(),
     tags=("text", "index", "retrieval", "bm25", "serving", "extension"),
 )
@@ -517,7 +507,6 @@ def bm25_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bm25_topk",
-    priority=10,  # new in round 8 -> first driver window
     oracle=_sql_bm25_topk(),
     tags=("text", "index", "retrieval", "bm25", "extension"),
 )

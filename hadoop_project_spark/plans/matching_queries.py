@@ -44,7 +44,6 @@ MAD_K = 4.4478
 
 @register(
     "part_name_fuzzy_pairs",
-    priority=15,
     oracle=f"""
     SELECT a.p_brand, a.p_type,
            a.p_partkey AS part_a, b.p_partkey AS part_b,
@@ -107,7 +106,6 @@ def part_name_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_bigram_lm_top",
-    priority=15,
     oracle=f"""
     WITH toks AS (
       SELECT string_split({SQL_NORM}, ' ') AS l FROM documents
@@ -171,7 +169,6 @@ def doc_bigram_lm_top(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_value_outliers",
-    priority=15,
     oracle=f"""
     WITH med AS (
       SELECT event_type,
@@ -239,7 +236,6 @@ def events_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "part_entity_clusters",
-    priority=15,
     oracle=f"""
     WITH RECURSIVE fp AS (
       SELECT a.p_partkey AS pa, b.p_partkey AS pb
@@ -296,7 +292,6 @@ _PMI_MIN_COUNT = 5
 
 @register(
     "bigram_pmi_collocations",
-    priority=10,  # new in round 6 -> first driver window
     oracle=f"""
     WITH toks AS (
       SELECT string_split({SQL_NORM}, ' ') AS l FROM documents

@@ -236,7 +236,6 @@ def _sql_kmeans_silhouette() -> str:
 
 @register(
     "kmeans_centroids",
-    priority=10,  # new oracle in round 8 -> first driver window
     oracle=_sql_kmeans_centroids(),
     tags=("ml", "kmeans", "A11", "J3", "O3", "C2", "iterative"),
 )
@@ -266,7 +265,6 @@ def kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "kmeans_cluster_sizes",
-    priority=10,  # new oracle in round 8 -> first driver window
     oracle=_sql_kmeans_cluster_sizes(),
     tags=("ml", "kmeans", "A9", "O3", "iterative"),
 )
@@ -296,7 +294,6 @@ def kmeans_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "kmeans_silhouette",
-    priority=10,  # new oracle in round 8 -> first driver window
     oracle=_sql_kmeans_silhouette(),
     tags=("ml", "kmeans", "A12", "F13", "C1", "iterative"),
 )
@@ -375,7 +372,6 @@ def _sql_step_ds(cents: list[list[float]]) -> str:
 
 @register(
     "kmeans_assign_step",
-    priority=10,
     oracle=f"""
     WITH keyed AS (
       SELECT embedding, {_sql_step_ds(_step_cents())} AS ds FROM embeddings
@@ -418,7 +414,6 @@ def kmeans_assign_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "nearest_two_centroids",
-    priority=10,
     oracle=f"""
     WITH keyed AS (
       SELECT {_sql_step_ds(_step_cents())} AS ds FROM embeddings

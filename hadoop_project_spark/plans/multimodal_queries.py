@@ -33,7 +33,6 @@ _BYTE_COLS_SQL = ",\n           ".join(
 
 @register(
     "multimodal_frame_samples",
-    priority=500,
     oracle="""
     SELECT doc_id AS media_id,
            CAST(unnest(generate_series(0,
@@ -100,7 +99,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_wav_features",
-    priority=10,  # new in round 6 → first driver window
     oracle="""
     WITH base AS (
       SELECT doc_id, n_chars % 49 + 16 AS n FROM documents
@@ -197,7 +195,6 @@ def multimodal_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_bmp_features",
-    priority=10,  # new in round 7 → first driver window
     oracle="""
     WITH base AS (
       SELECT doc_id, n_chars % 13 + 5 AS w, n_chars % 7 + 4 AS h
@@ -309,7 +306,6 @@ def multimodal_bmp_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_audio_windows",
-    priority=500,
     oracle="""
     SELECT doc_id AS media_id,
            CAST(s AS BIGINT) AS window_start_ms,
@@ -433,7 +429,6 @@ def _sql_image_dhash_neardup() -> str:
 
 @register(
     "image_dhash_neardup",
-    priority=10,  # new in round 11 -> first driver window
     oracle=_sql_image_dhash_neardup(),
     tags=("multimodal", "image", "dedup", "dhash", "mapInPandas",
           "extension"),
@@ -580,7 +575,6 @@ def _sql_audio_fingerprint_neardup() -> str:
 
 @register(
     "audio_fingerprint_neardup",
-    priority=10,  # new in round 11 -> first driver window
     oracle=_sql_audio_fingerprint_neardup(),
     tags=("multimodal", "audio", "dedup", "fingerprint", "mapInPandas",
           "extension"),

@@ -2,12 +2,11 @@
 packing, TF-IDF keyword extraction — the stages between corpus
 governance (plans/corpus_queries.py) and the training run.
 
-`doc_chunks_overlap` and `sequence_packing` register in the driver's
-correctness window (priority 100): each is the unique representative of
-an operator family no other query exercises (per-doc window explode;
-distributed prefix-sum). TF-IDF registers at 500 — its explode/agg/join
-machinery is in-window via word_count and the dedup family — and is
-hash-verified by tests/test_oracle_parity.py every CI run.
+`doc_chunks_overlap` and `sequence_packing` are each the unique
+representative of an operator family no other query exercises (per-doc
+window explode; distributed prefix-sum). TF-IDF's explode/agg/join
+machinery is shared with word_count and the dedup family. Every query
+here is hash-verified by tests/test_oracle_parity.py every CI run.
 """
 
 from __future__ import annotations
@@ -112,7 +111,6 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tfidf_top_terms",
-    priority=500,
     oracle=f"""
     WITH tf AS (
       SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
@@ -168,7 +166,6 @@ _SQL_SHARD_RANKS = f"""
 
 @register(
     "training_shard_assignment",
-    priority=10,  # new in round 11 -> first driver window
     oracle=f"""
     WITH {_SQL_SHARD_RANKS}
     SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -218,7 +215,6 @@ def training_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "training_shard_manifest",
-    priority=10,  # new in round 11 -> first driver window
     oracle=f"""
     WITH {_SQL_SHARD_RANKS}
     SELECT CAST((rank - 1) // {SHARD_SIZE} AS BIGINT) AS shard_id,
@@ -282,7 +278,6 @@ def _sql_incremental_shard_export() -> str:
 
 @register(
     "incremental_shard_export",
-    priority=10,  # new in round 11 -> first driver window
     oracle=_sql_incremental_shard_export(),
     tags=("packing", "export", "cdc", "incremental", "extension"),
 )
@@ -376,7 +371,6 @@ def _sql_incremental_shard_rewrite() -> str:
 
 @register(
     "incremental_shard_rewrite",
-    priority=10,  # new in round 12 -> first driver window
     oracle=_sql_incremental_shard_rewrite(),
     tags=("packing", "export", "cdc", "incremental", "sink", "extension"),
 )

@@ -151,7 +151,6 @@ def _duck_oracle(text_sql: str | None = None, final: str | None = None) -> str:
 
 @register(
     "pii_redaction_counts",
-    priority=10,
     oracle=_duck_oracle(),
     tags=("pii", "redaction", "extension"),
 )
@@ -215,7 +214,6 @@ def _planted_final() -> str:
 
 @register(
     "pii_planted_redaction",
-    priority=10,  # new in round 12 -> first driver window
     oracle=_duck_oracle(
         text_sql=_planted_text_sql("duck"), final=_planted_final()
     ),

@@ -197,7 +197,6 @@ def _fitted(spark: SparkSession, sf_dir: str, feats: DataFrame) -> list[int]:
 
 @register(
     "quality_lr_train",
-    priority=10,  # new in round 11 -> first driver window
     oracle=f"""
     {_sql_prefix()}
     SELECT f.feature, CAST(f.wq AS BIGINT) AS wq FROM (
@@ -231,7 +230,6 @@ def quality_lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_lr_corpus_filter",
-    priority=10,  # new in round 11 -> first driver window
     oracle=f"""
     {_sql_prefix()}
     SELECT f.doc_id, f.y,
@@ -256,7 +254,6 @@ def quality_lr_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_lr_eval",
-    priority=10,  # new in round 11 -> first driver window
     oracle=f"""
     {_sql_prefix()},
     scored AS (

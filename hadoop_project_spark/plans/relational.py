@@ -128,9 +128,6 @@ def regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "top3_orders_per_customer",
-    # O2 secondary-sort window family's in-window rep is
-    # order_rank_stats; displaced for the chunking/packing family
-    priority=500,
     oracle="""
     SELECT o_custkey, o_orderkey, o_totalprice, CAST(rn AS INTEGER) AS rn
     FROM (
@@ -211,7 +208,6 @@ def priority_month_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "priority_month_matrix_formatted",
-    priority=10,
     oracle="""
     WITH per AS (
       SELECT o_orderpriority AS p, MONTH(o_orderdate) AS m,
@@ -310,7 +306,6 @@ def priority_month_dense_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "customers_without_orders",
-    priority=900,
     oracle="""
     SELECT c_custkey, c_name
     FROM customer c
@@ -416,7 +411,6 @@ def weighted_avg_price_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "most_valuable_order",
-    priority=900,
     oracle="""
     SELECT o_orderkey, o_custkey, o_totalprice
     FROM orders
@@ -438,7 +432,6 @@ def most_valuable_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "order_fanout_stats",
-    priority=900,
     oracle="""
     SELECT l_linestatus,
            COUNT(DISTINCT l_orderkey) AS n_orders,

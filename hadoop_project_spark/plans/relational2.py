@@ -37,7 +37,6 @@ def lineitem_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orders_cube",
-    priority=900,
     oracle="""
     SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders
     FROM orders
@@ -109,7 +108,6 @@ def events_sessionization_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_top_users",
-    priority=900,
     oracle="""
     SELECT user_id, total_value, n_events, CAST(rnk AS INTEGER) AS rnk
     FROM (
@@ -171,9 +169,6 @@ def events_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o.o_custkey
     """,
     tags=("join", "agg", "subquery"),
-    # join-back-to-aggregate shape; the in-window correlated reps are
-    # the Q4/Q17 queries (orders_with_late_items, small_qty_part_revenue)
-    priority=500,
 )
 def orders_above_customer_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-back-to-aggregate (correlated-subquery shape): orders above
@@ -193,7 +188,6 @@ def orders_above_customer_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "part_popularity",
-    priority=900,
     oracle="""
     SELECT p.p_brand, p.p_type,
            CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty,
@@ -247,7 +241,6 @@ def supplier_nation_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_timespine_gapfill",
-    priority=500,
     oracle="""
     WITH bucketed AS (
       SELECT time_bucket(INTERVAL 15 MINUTE, ts) AS bucket,
@@ -322,7 +315,6 @@ def events_timespine_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lineitem_measures_unpivot",
-    priority=500,
     oracle="""
     WITH wide AS (
       SELECT l_returnflag,
@@ -455,9 +447,6 @@ def approx_distinct_users_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY CAST(ts AS DATE)
     """,
     tags=("agg", "distinct"),
-    # distinct-count agg is also hash-exercised inside the in-window
-    # approx_distinct bounds oracle (exact twin embedded in the same agg)
-    priority=500,
 )
 def exact_distinct_users_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact daily distinct users (the verification twin of the HLL
@@ -470,7 +459,6 @@ def exact_distinct_users_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_user_rollup_salted",
-    priority=500,
     oracle="""
     SELECT user_id,
            COUNT(*) AS n_events,
@@ -506,7 +494,6 @@ def events_user_rollup_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_retention_cohorts",
-    priority=15,
     oracle="""
     WITH fa AS (
       SELECT user_id, CAST(MIN(ts) AS DATE) AS cohort_day
@@ -577,7 +564,6 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_dau_wau_stickiness",
-    priority=15,
     oracle="""
     WITH days AS (SELECT DISTINCT CAST(ts AS DATE) AS d FROM events),
     ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS ed FROM events),
@@ -632,7 +618,6 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_session_concurrency",
-    priority=15,
     oracle="""
     WITH flagged AS (
       SELECT user_id, ts, event_id,

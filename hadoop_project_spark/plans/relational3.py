@@ -183,7 +183,6 @@ def price_percentiles_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 @register(
     "daily_activity_full_outer",
-    priority=900,
     oracle="""
     WITH o AS (
       SELECT CAST(o_orderdate AS DATE) AS d, COUNT(*) AS n_orders
@@ -225,7 +224,6 @@ def daily_activity_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "user_event_gaps",
-    priority=900,
     oracle="""
     WITH g AS (
       SELECT user_id,
@@ -262,7 +260,6 @@ def user_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "repeat_buyers_intersect",
-    priority=900,
     oracle="""
     SELECT o_custkey FROM orders WHERE YEAR(o_orderdate) = 1995
     INTERSECT
@@ -659,7 +656,6 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "activity_feed_monthly",
-    priority=900,
     oracle="""
     WITH feed AS (
       SELECT 'order' AS kind, o_orderdate AS at,
@@ -715,7 +711,6 @@ def activity_feed_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "events_sliding_hourly",
-    priority=900,
     oracle="""
     SELECT CAST(time_bucket(INTERVAL '15 minutes', ts)
                 - k * INTERVAL '15 minutes' AS TIMESTAMP) AS w_start,
@@ -748,7 +743,6 @@ def events_sliding_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "price_histogram",
-    priority=900,
     oracle="""
     WITH stats AS (
       SELECT MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi FROM orders
@@ -794,7 +788,6 @@ def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "qty_price_correlation",
-    priority=900,
     oracle="""
     WITH m AS (
       SELECT l_returnflag,
@@ -850,7 +843,6 @@ def qty_price_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "customer_value_deciles",
-    priority=500,
     oracle="""
     WITH spend AS (
       SELECT o_custkey,

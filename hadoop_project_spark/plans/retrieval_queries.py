@@ -138,7 +138,6 @@ def _sql_hybrid_rrf() -> str:
 
 @register(
     "hybrid_topk_rrf",
-    priority=10,  # new in round 11 -> first driver window
     oracle=_sql_hybrid_rrf(),
     tags=("retrieval", "similarity", "fusion", "extension"),
 )
@@ -211,7 +210,6 @@ def _sql_prf_final_fixup(sql: str) -> str:
 
 @register(
     "bm25_prf_dense_rerank",
-    priority=10,  # new in round 11 -> first driver window
     oracle=_sql_prf_final_fixup(_sql_prf_rerank()),
     tags=("retrieval", "bm25", "prf", "fusion", "extension"),
 )
@@ -348,7 +346,6 @@ def _sql_mmr_rerank() -> str:
 
 @register(
     "mmr_diversified_topk",
-    priority=10,  # first driver window
     oracle=_sql_mmr_rerank(),
     tags=("retrieval", "similarity", "mmr", "diversity", "extension"),
 )

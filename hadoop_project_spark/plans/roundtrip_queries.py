@@ -162,7 +162,6 @@ def bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "zorder_roundtrip",
-    priority=500,
     oracle="""
     SELECT l_returnflag,
            COUNT(*) AS n_items,
@@ -214,7 +213,6 @@ def zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "incremental_rollup_roundtrip",
-    priority=500,
     oracle="""
     SELECT CAST(ts AS DATE) AS day, event_type,
            COUNT(*) AS n_events,
@@ -269,7 +267,6 @@ def incremental_rollup_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "schema_evolution_roundtrip",
-    priority=500,
     oracle="""
     SELECT o_orderpriority,
            COUNT(*) AS n_orders,
@@ -313,7 +310,6 @@ def schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dpp_partitioned_join_roundtrip",
-    priority=500,
     oracle="""
     WITH dim(flag, label) AS (VALUES ('A', 'keep'), ('N', 'x'), ('R', 'x'))
     SELECT l_returnflag,
@@ -360,7 +356,6 @@ def dpp_partitioned_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "orc_roundtrip_order_priorities",
-    priority=10,
     oracle="""
     SELECT o_orderpriority,
            COUNT(*) AS n_orders,
@@ -404,7 +399,6 @@ def orc_roundtrip_order_priorities(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "json_roundtrip_source_stats",
-    priority=10,
     oracle="""
     SELECT source,
            COUNT(*) AS n_docs,
@@ -438,7 +432,6 @@ def json_roundtrip_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "avro_roundtrip_segment_stats",
-    priority=10,  # new in round 10 -> first driver window
     oracle="""
     SELECT c_mktsegment,
            COUNT(*) AS n_customers,
@@ -495,7 +488,6 @@ def avro_roundtrip_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "merge_upsert_roundtrip",
-    priority=15,
     oracle="""
     WITH base AS (
       SELECT o_custkey,
@@ -591,7 +583,6 @@ _CORRUPT_MOD = 47
 
 @register(
     "json_corrupt_records_audit",
-    priority=15,
     oracle=f"""
     SELECT
       CAST(COUNT(*) FILTER (doc_id % {_CORRUPT_MOD} <> 0) AS BIGINT)

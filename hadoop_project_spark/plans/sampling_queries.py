@@ -36,7 +36,6 @@ _SQL_SEL = f"""
 
 @register(
     "pps_weighted_sample",
-    priority=15,
     oracle=f"""
     SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
            CAST(w AS BIGINT) AS weight, pi
@@ -65,7 +64,6 @@ def pps_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pps_ht_source_totals",
-    priority=15,
     oracle=f"""
     WITH sel AS ({_SQL_SEL}),
     per AS (

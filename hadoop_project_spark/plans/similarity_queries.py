@@ -126,7 +126,6 @@ def _register_neardup_bucketed() -> None:
 
     @register(
         "embedding_neardup_pairs_bucketed",
-        priority=10,  # new in round 6 -> first driver window
         oracle=f"""
         WITH k AS (
           SELECT vec_id, embedding, label,
@@ -308,7 +307,6 @@ def _sql_ivf_oracle() -> str:
 @register(
     "ann_topk_ivf",
     oracle=_sql_ivf_oracle(),
-    priority=500,
     tags=("similarity", "ann", "ivf", "extension"),
 )
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -316,9 +314,8 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse cells, the probe sets, and the ranked candidate cosines from
     the same literals, hash-verifying the whole inverted-file pipeline
     (cell assignment → multi-cell probe → candidate join → exact
-    re-rank). Registered past the driver window (the LSH pipeline is
-    the in-window ANN representative); tests/test_oracle_parity.py runs
-    this oracle every CI pass."""
+    re-rank); tests/test_oracle_parity.py runs this oracle every CI
+    pass."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     return sim.ivf_topk(
@@ -345,7 +342,6 @@ def ann_topk_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_quantize_profile",
-    priority=500,
     oracle=f"""
     WITH ex AS (
       SELECT u.i AS dim_idx, CAST(embedding[u.i + 1] AS DOUBLE) AS v
@@ -379,7 +375,6 @@ def embedding_quantize_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_recall_at_k",
-    priority=15,
     oracle=f"""
     WITH bf AS ({_SQL_BRUTEFORCE}),
     iv AS ({_sql_ivf_oracle()}),
@@ -451,7 +446,6 @@ _SQL_TRUNC_UNION = "\n      UNION ALL ".join(
 
 @register(
     "ann_truncated_dim_recall",
-    priority=10,  # first driver window
     oracle=f"""
     WITH bf AS ({_SQL_BRUTEFORCE}),
     {_SQL_TRUNC_CTES},
@@ -531,8 +525,6 @@ _register_neardup_bucketed()
 
 # --- semantic dedup (SemDeDup-style cluster-then-dedup) -------------
 
-SEMDEDUP_CELLS = 12
-SEMDEDUP_SEED = 31
 SEMDEDUP_TAU = 0.3
 
 
@@ -662,7 +654,6 @@ def _semdedup_decide(assigned: DataFrame, block_col: str) -> DataFrame:
 @register(
     "semantic_dedup_decisions",
     oracle=_sql_semdedup_oracle(),
-    priority=10,  # round-7 new: self-promote into the driver window
     tags=("similarity", "dedup", "extension"),
 )
 def semantic_dedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -727,7 +718,6 @@ def _semdedup_bucket_planes() -> list[list[float]]:
 @register(
     "semantic_dedup_bucketed",
     oracle=_sql_semdedup_oracle(_semdedup_bucket_planes()),
-    priority=10,  # round-7 new: self-promote into the driver window
     tags=("similarity", "dedup", "lsh", "extension"),
 )
 def semantic_dedup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -904,7 +894,6 @@ def _sql_ivfpq_oracle() -> str:
 
 @register(
     "ann_topk_pq_adc",
-    priority=10,  # new in round 10 -> first driver window
     oracle=_sql_pq_adc_oracle(),
     tags=("similarity", "ann", "pq", "extension"),
 )
@@ -926,7 +915,6 @@ def ann_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_topk_ivfpq",
-    priority=10,  # new in round 10 -> first driver window
     oracle=_sql_ivfpq_oracle(),
     tags=("similarity", "ann", "pq", "ivf", "extension"),
 )
@@ -952,7 +940,6 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_pq_recall",
-    priority=10,  # new in round 10 -> first driver window
     oracle=f"""
     WITH bf AS ({_SQL_BRUTEFORCE}),
     pq AS ({_sql_pq_adc_oracle()}),
@@ -1007,7 +994,6 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_topk_ivfpq_served",
-    priority=10,  # new in round 10 -> first driver window
     oracle=_sql_ivfpq_oracle(),
     tags=("similarity", "ann", "pq", "ivf", "serving", "extension"),
 )
@@ -1051,7 +1037,6 @@ def ann_topk_ivfpq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_ivfpq_segment_compaction",
-    priority=10,  # new in round 10 -> first driver window
     oracle=_sql_ivfpq_oracle(),
     tags=("similarity", "ann", "pq", "streaming", "roundtrip", "extension"),
 )
@@ -1115,7 +1100,6 @@ def ann_ivfpq_segment_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_ivfpq_base_plus_segments",
-    priority=10,  # new in round 10 -> first driver window
     oracle=_sql_ivfpq_oracle(),
     tags=("similarity", "ann", "pq", "streaming", "serving", "extension"),
 )
@@ -1181,7 +1165,6 @@ def ann_ivfpq_base_plus_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_topk_prefiltered",
-    priority=10,  # first driver window
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS query_id, label, embedding AS qv

@@ -27,7 +27,6 @@ HH_THRESH_DEN = 100
 
 @register(
     "heavy_hitter_bigrams",
-    priority=15,
     oracle=f"""
     WITH toks AS (
       SELECT string_split({SQL_NORM}, ' ') AS l FROM documents
@@ -115,7 +114,6 @@ _SQL_JS = "(VALUES ('0'), ('1'), ('2')) js(j)"
 
 @register(
     "bloom_decontaminate_fpr",
-    priority=15,
     oracle=f"""
     WITH {SQL_SHINGLES_CTE},
     bench AS (SELECT DISTINCT sh FROM sh WHERE doc_id % {BENCH_MOD} = 0),
@@ -234,7 +232,6 @@ _HLL_MAX_RANK = 32 - sk.HLL_P + 1
 
 @register(
     "hll_source_distinct_shingles",
-    priority=10,  # new in round 6 -> first driver window
     oracle=f"""
     WITH {SQL_SHINGLES_CTE},
     src AS (
@@ -333,7 +330,6 @@ def hll_source_distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "hll_source_overlap",
-    priority=10,  # new in round 6 -> first driver window
     oracle=f"""
     WITH {SQL_SHINGLES_CTE},
     src AS (
@@ -539,7 +535,6 @@ HIST_QS = (50, 90, 99)
 
 @register(
     "price_quantile_histogram",
-    priority=10,  # new in round 6 -> first driver window
     oracle=f"""
     WITH c AS (
       SELECT o_orderpriority AS prio,

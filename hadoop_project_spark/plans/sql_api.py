@@ -49,7 +49,6 @@ NATION_TRADE_SQL = """
 
 @register(
     "nation_trade_volume_sql",
-    priority=500,
     oracle=NATION_TRADE_SQL,
     tags=("sql-api", "join", "agg", "q7"),
 )

@@ -32,7 +32,6 @@ _SQL_SHINGLES3 = f"""
 
 @register(
     "ssjoin_prefix_pairs",
-    priority=15,
     oracle=f"""
     WITH sg AS (SELECT DISTINCT doc_id, sh FROM ({_SQL_SHINGLES3})),
     dfc AS (SELECT sh, COUNT(*) AS df FROM sg GROUP BY sh),
@@ -87,7 +86,6 @@ def ssjoin_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_duplicate_span_ratio",
-    priority=15,
     oracle=f"""
     WITH sg AS (SELECT DISTINCT doc_id, sh FROM ({_SQL_SHINGLES3})),
     dfc AS (SELECT sh, COUNT(*) AS df FROM sg GROUP BY sh),
@@ -117,7 +115,6 @@ def doc_duplicate_span_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_duplicate_spans",
-    priority=10,  # new in round 6 -> first driver window
     oracle=f"""
     WITH g AS (
       SELECT doc_id, i - 1 AS pos,

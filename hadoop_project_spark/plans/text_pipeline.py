@@ -69,9 +69,6 @@ SQL_QUALITY = (
     FROM documents
     """,
     tags=("text", "token-count", "extension"),
-    # per-doc scan-stage text stats; token counting's in-window reps are
-    # the quality rollup (sums n_tokens) and doc_quality_scores
-    priority=500,
 )
 def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token counting: whitespace tokens + BPE-ish fragment
@@ -120,7 +117,6 @@ def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_quality_model_filter",
-    priority=10,  # new in round 7 -> first driver window
     oracle=f"""
     SELECT doc_id, model_logit,
            model_logit >= {ts.QUALITY_MODEL_THRESHOLD} AS admitted
@@ -189,9 +185,6 @@ def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_fingerprints",
-    # fingerprint op's in-window rep is dedup_exact (same md5-of-
-    # normalized-text key); displaced for the chunking/packing family
-    priority=500,
     oracle=f"""
     SELECT doc_id,
            md5({SQL_NORM}) AS fp_exact,
@@ -279,7 +272,6 @@ TRAIN_MIX_TOKEN_CAP = 800
 
 @register(
     "training_data_mix",
-    priority=500,
     oracle=f"""
     WITH scored AS (
       SELECT doc_id, source,
@@ -434,7 +426,6 @@ _SQL_NDIST = f"len(list_distinct(list_transform({SQL_TOKENS}, t -> lower(t))))"
 
 @register(
     "quality_filter_funnel",
-    priority=10,  # new in round 6 -> first driver window
     oracle=f"""
     WITH s AS (
       SELECT CAST({SQL_NTOK} AS BIGINT) AS n_tok,
@@ -554,7 +545,6 @@ _SQL_WINNOW_FPS = f"""
 
 @register(
     "doc_winnowing_fingerprints",
-    priority=10,  # new in round 7 -> first driver window
     oracle=f"""
     {_SQL_WINNOW_FPS}
     """,
@@ -576,7 +566,6 @@ def doc_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "winnowing_dup_candidates",
-    priority=10,  # new in round 7 -> first driver window
     oracle=f"""
     WITH fps AS ({_SQL_WINNOW_FPS}),
     rare AS (
@@ -627,7 +616,6 @@ def winnowing_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tokenizer_fertility_by_source",
-    priority=10,  # new in round 11 -> first driver window
     oracle=f"""
     SELECT source,
            CAST(SUM({SQL_NTOK}) AS BIGINT) AS n_ws_tokens,

@@ -42,7 +42,6 @@ def _rev() -> F.Column:
 
 @register(
     "national_market_share",
-    priority=15,
     oracle=f"""
     SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
            CAST(SUM(CASE WHEN sn.n_name = '{_SHARE_NATION}'
@@ -133,7 +132,6 @@ def national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "promo_revenue_share",
-    priority=15,
     oracle=f"""
     SELECT CAST(year(l_shipdate) AS BIGINT) AS ship_year,
            CAST(month(l_shipdate) AS BIGINT) AS ship_month,

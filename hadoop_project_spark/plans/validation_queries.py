@@ -86,7 +86,6 @@ FK_EDGES = [
 
 @register(
     "orders_expectations",
-    priority=15,
     oracle=sql_expectations("orders", ORDERS_EXPECTATIONS),
     tags=("validation", "expectations", "governance", "extension"),
 )
@@ -101,7 +100,6 @@ def orders_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fk_integrity_report",
-    priority=15,
     oracle=sql_fk_orphan_report(FK_EDGES),
     tags=("validation", "integrity", "anti-join", "governance", "extension"),
 )

@@ -1,16 +1,14 @@
-"""The driver's correctness gate hash-checks exactly the first 50
-registered queries. This suite pins the window's composition so a
-refactor can't silently push an oracle-bearing query family out of
-driver verification again (round-1 lesson: the whole dedup/ANN family
-registered past the window and got no CORRECTNESS rows).
+"""The driver's correctness gate hash-checks exactly the first 50 of
+all_queries(), and plans/registry.py's DRIVER_WINDOW names those 50.
+This suite pins that window so a refactor can't silently push an
+oracle-bearing query family out of driver verification (the dedup/ANN
+family once registered past the window and got no CORRECTNESS rows).
 
-Round 4 changes the policy from a static window to a ROTATION: the
-window now holds every oracle-bearing query that has never had a green
-driver row (26 as of r3) plus regression anchors for this round's code
-changes. The invariant enforced here: every oracle-bearing query is
-either already driver-green in some committed CORRECTNESS_r*.json or
-inside the current window — i.e. nothing oracle-bearing can be parked
-forever.
+The rules enforced here: DRIVER_WINDOW holds exactly WINDOW registered
+names, so it is the window; the window holds no oracle-less query and
+every MUST_VERIFY anchor; and every oracle-bearing query is either
+already driver-green in some committed CORRECTNESS_r*.json or inside
+the current window, so nothing oracle-bearing can be parked forever.
 """
 
 from __future__ import annotations
@@ -20,6 +18,7 @@ import json
 import os
 
 from hadoop_project_spark.plans import all_queries
+from hadoop_project_spark.plans.registry import DRIVER_WINDOW
 
 WINDOW = 50
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -72,6 +71,17 @@ def _ever_green() -> set[str]:
             ):
                 green.add(name)
     return green
+
+
+def test_driver_window_set_is_the_window():
+    """DRIVER_WINDOW names only registered queries and exactly WINDOW of
+    them, so the first WINDOW of all_queries() are its names (a
+    misspelled name would let an outside query into the window)."""
+    qs = all_queries()
+    unknown = sorted(DRIVER_WINDOW - set(qs))
+    assert not unknown, f"DRIVER_WINDOW names no registered query: {unknown}"
+    assert len(DRIVER_WINDOW) == WINDOW
+    assert set(list(qs)[:WINDOW]) == DRIVER_WINDOW
 
 
 def test_window_has_no_oracle_less_queries():

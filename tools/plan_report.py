@@ -3,10 +3,7 @@
 For each query: scan pushdown (PushedFilters), column pruning
 (ReadSchema), join strategies, and exchange (shuffle) count — the
 properties §4 of SURVEY.md claims and tests/test_plan_shapes.py gates.
-Round 6 extends coverage from the 75-query headline list to the whole
-registry (the uncovered 60 were exactly the roundtrip/iterative shapes
-where a lost pushdown or surprise shuffle would hide); the old list is
-kept only to order the table with the headline queries first.
+Rows follow all_queries(), so the driver's window comes first.
 Run: python tools/plan_report.py [sf_dir]
 """
 
@@ -20,84 +17,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hadoop_project_spark.execution import clear_query_state
 
-QUERIES = [
-    "pricing_summary",
-    "regional_revenue",
-    "shipping_priority_topk",
-    "two_leg_conversion",
-    "top3_orders_per_customer",
-    "priority_month_matrix",
-    "events_asof_click_before_purchase",
-    "events_after_error_5min",
-    "daily_revenue_rolling_7d",
-    "word_count",
-    "doc_quality_scores",
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "multimodal_features",
-    "ann_topk_lsh_verified",
-    "events_sessionization_batch",
-    "order_rank_stats",
-    "ann_topk_bruteforce",
-    "ann_topk_ivf",
-    "orders_with_late_items",
-    "small_qty_part_revenue",
-    "bulk_share_suppliers",
-    "events_session_window_batch",
-    "training_data_mix",
-    "decontaminate_ngram",
-    "doc_repetition_stats",
-    "docs_hash_sample",
-    "source_overlap_matrix",
-    "customer_value_deciles",
-    "csv_roundtrip_word_count",
-    "partitioned_parquet_roundtrip",
-    "bucketed_join_roundtrip",
-    "zorder_roundtrip",
-    "doc_chunks_overlap",
-    "sequence_packing",
-    "tfidf_top_terms",
-    "source_quality_cap",
-    "sole_late_supplier_orders",
-    "nation_trade_volume_sql",
-    "incremental_rollup_roundtrip",
-    "events_key_skew_profile",
-    "orders_snapshot_diff",
-    "lineitem_column_profile",
-    "schema_evolution_roundtrip",
-    "embedding_quantize_profile",
-    "user_state_history_scd2",
-    "dpp_partitioned_join_roundtrip",
-    "national_market_share",
-    "promo_revenue_share",
-    "merge_upsert_roundtrip",
-    "fk_integrity_report",
-    "orders_expectations",
-    "part_copurchase_rank_step",
-    "lineitem_winsorized_stats",
-    "docs_split_assignment",
-    "dedup_survivors_by_source",
-    "events_top_users",
-    "events_retention_cohorts",
-    "json_corrupt_records_audit",
-    "doc_lm_avgprob",
-    "training_mix_temperature",
-    "ab_test_value_zscore",
-    "part_copurchase_triangles",
-    "ssjoin_prefix_pairs",
-    "doc_duplicate_span_ratio",
-    "heavy_hitter_bigrams",
-    "bloom_decontaminate_fpr",
-    "pps_weighted_sample",
-    "pps_ht_source_totals",
-    "part_entity_clusters",
-    "ann_recall_at_k",
-    "event_transition_matrix",
-    "seasonal_baseline_wape",
-    "nation_revenue_gini",
-    "weighted_price_quantiles",
-]
-
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -106,7 +25,6 @@ def main() -> None:
 
     spark = get_spark(app_name="plan-report", cpus="8")
     specs = all_queries()
-    names = QUERIES + [n for n in specs if n not in QUERIES]
     out = [
         "# PLANS — physical-plan evidence (auto-generated)",
         "",
@@ -117,7 +35,7 @@ def main() -> None:
         "|---|---|---|---|---|",
     ]
     details: list[str] = []
-    for name in names:
+    for name in specs:
         df = specs[name].build(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         formatted = df._sc._jvm.PythonSQLUtils.explainString(
@@ -149,7 +67,7 @@ def main() -> None:
     out += ["", "## Read schemas (column pruning)", ""] + details
     with open("PLANS.md", "w") as f:
         f.write("\n".join(out) + "\n")
-    print(f"wrote PLANS.md ({len(names)} queries)")
+    print(f"wrote PLANS.md ({len(specs)} queries)")
     spark.stop()
 
 
