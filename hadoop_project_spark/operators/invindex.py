@@ -18,7 +18,7 @@ Shape for 100 TB:
   ``*_stored`` probes run against it — exchange-free term aggregates
   and bucket-pruned term filters, gated in tests/test_plan_shapes.py
   and hash-certified by `inverted_index_build_roundtrip` /
-  `bm25_topk_stored` (VERDICT r8 next-round #1).
+  `bm25_topk_stored`.
 * ``index_directory`` is a single partial-aggregated groupBy(term):
   shuffle rows = one per (term, input partition), output rows = |vocab|
   — Heaps-law sublinear in the corpus.
@@ -104,8 +104,19 @@ def index_directory_over(p: DataFrame) -> DataFrame:
 # materialized — a postings table BUCKETED BY TERM (so every term-keyed
 # aggregate/join downstream is bucket-local, and term-equality probes
 # prune to one bucket at the scan: SelectedBucketsCount in the plan),
-# plus a doc-length table bucketed by doc_id. Round 9 converts the
-# family's asserted scale story into a measured one (VERDICT r8 next #1).
+# plus a doc-length table bucketed by doc_id.
+#
+# Encoding: both tables store doc_id as Parquet DELTA_BINARY_PACKED
+# pages (d-gaps, the posting-list compression every real inverted index
+# uses); term, pos and dl keep their dictionaries (delta on pos
+# measured 9% larger at sf0.1). Sorted by term first, the doc_ids
+# restart at every term and defeat dictionary + RLE: the doc_id chunk
+# was 46,108 B of an 81,436 B postings table at sf0.01, against 3,814 B
+# for the same rows in a doc-ordered LSM segment. With delta pages:
+#
+#   bytes      postings sf0.01   postings sf0.1    doclens sf0.1
+#   dict           81,436           841,172            33,918
+#   delta          45,575           334,116            17,299
 # ---------------------------------------------------------------------------
 
 POSTINGS_BUCKETS = 8
@@ -158,6 +169,7 @@ def write_index_tables(
         n_buckets,
         sort_cols=["term", "doc_id", "pos"],
         path=paths[0] if paths else None,
+        delta_cols=("doc_id",),
     )
     dl = p.groupBy("doc_id").agg(F.count("*").cast("long").alias("dl"))
     write_bucketed(
@@ -167,6 +179,7 @@ def write_index_tables(
         DOCLEN_BUCKETS,
         sort_cols=["doc_id"],
         path=paths[1] if paths else None,
+        delta_cols=("doc_id",),
     )
     return pt, dt
 

@@ -1113,22 +1113,6 @@ def corpus_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _sweep_dead_gate_roots(prefix: str) -> None:
-    """Remove pid-namespaced gate roots left by EXITED processes
-    (ADVICE r11 #3: repeated bench runs across processes accumulated
-    orphan rt_lsh_* dirs — each run's startup rmtree only clears its
-    own pid's path). The pid suffix stays (it is the round-10 defense
-    against CONCURRENT same-host drivers); what changes is that every
-    gate query now also retires siblings whose owning pid is gone, so
-    tmp usage is bounded by the number of LIVE processes. A root whose
-    pid is alive is never touched — no live run can lose its state."""
-    import tempfile
-
-    from hadoop_project_spark.storage import sweep_dead_pid_dirs
-
-    sweep_dead_pid_dirs(tempfile.gettempdir(), prefix)
-
-
 @register(
     "neardup_gate_lsm_admissions",
     oracle=f"""
@@ -1162,10 +1146,10 @@ def neardup_gate_lsm_admissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id in the same batch' telescopes to exactly that predicate,
     and the base/segment split at probe time is compaction-invariant."""
     import os
-    import shutil
     import tempfile
     from functools import reduce
 
+    from hadoop_project_spark.storage import fresh_pid_dir
     from hadoop_project_spark.streaming.lsh_segments import (
         _prepare_bandkeys,
         admission_flags,
@@ -1180,12 +1164,7 @@ def neardup_gate_lsm_admissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = docs.agg(F.max("doc_id")).collect()[0][0]
     cuts = [(int(n) + 1) * b // 4 for b in range(5)]
     sf = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    _sweep_dead_gate_roots("rt_lsh_segs")
-    seg_root = os.path.join(
-        # pid-namespaced against concurrent same-host drivers
-        tempfile.gettempdir(), f"rt_lsh_segs_{sf}_{os.getpid()}"
-    )
-    shutil.rmtree(seg_root, ignore_errors=True)
+    seg_root = fresh_pid_dir(tempfile.gettempdir(), "rt_lsh_segs", sf)
     table = f"rt_lsh_state_{sf}"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     from hadoop_project_spark.execution import run_overlapped
@@ -1272,9 +1251,9 @@ def neardup_gate_served_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the O(batch) probe keys shuffle (gated in
     tests/test_plan_shapes.py)."""
     import os
-    import shutil
     import tempfile
 
+    from hadoop_project_spark.storage import fresh_pid_dir
     from hadoop_project_spark.streaming.lsh_segments import (
         compact_bandkeys_segments,
         gate_state,
@@ -1285,11 +1264,7 @@ def neardup_gate_served_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = docs.agg(F.max("doc_id")).collect()[0][0]
     cut = 3 * (int(n) + 1) // 4
     sf = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    _sweep_dead_gate_roots("rt_lsh_srv_segs")
-    seg_root = os.path.join(
-        tempfile.gettempdir(), f"rt_lsh_srv_segs_{sf}_{os.getpid()}"
-    )
-    shutil.rmtree(seg_root, ignore_errors=True)
+    seg_root = fresh_pid_dir(tempfile.gettempdir(), "rt_lsh_srv_segs", sf)
     table = f"rt_lsh_srv_state_{sf}"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     sink = make_bandkeys_segment_sink(seg_root)

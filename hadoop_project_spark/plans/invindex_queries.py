@@ -305,9 +305,9 @@ def index_segment_compaction_roundtrip(
     proves segment ingest → replay-skip → compaction → bucketed probe
     loses nothing vs the one-shot build."""
     import os
-    import shutil
     import tempfile
 
+    from hadoop_project_spark.storage import fresh_pid_dir
     from hadoop_project_spark.streaming.index_segments import (
         compact_segments,
         make_postings_segment_sink,
@@ -315,11 +315,7 @@ def index_segment_compaction_roundtrip(
 
     docs = load_table(spark, sf_dir, "documents")
     sf = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    seg_root = os.path.join(
-        # pid-namespaced against concurrent same-host drivers (ADVICE r10 #3)
-        tempfile.gettempdir(), f"rt_idx_segs_{sf}_{os.getpid()}"
-    )
-    shutil.rmtree(seg_root, ignore_errors=True)
+    seg_root = fresh_pid_dir(tempfile.gettempdir(), "rt_idx_segs", sf)
     sink = make_postings_segment_sink(seg_root)
     # independent micro-batch ingests (distinct batch_id segments) —
     # overlap their tokenize+write jobs (guide §2.6); the replay stays
@@ -359,9 +355,9 @@ def index_base_plus_segments_probe(
     matching the whole-corpus oracle proves the union serving view
     loses nothing."""
     import os
-    import shutil
     import tempfile
 
+    from hadoop_project_spark.storage import fresh_pid_dir
     from hadoop_project_spark.streaming.index_segments import (
         make_postings_segment_sink,
         read_segments,
@@ -370,11 +366,7 @@ def index_base_plus_segments_probe(
     docs = load_table(spark, sf_dir, "documents")
     sf = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     prefix = f"rt_idx_mix_{sf}"
-    seg_root = os.path.join(
-        # pid-namespaced against concurrent same-host drivers (ADVICE r10 #3)
-        tempfile.gettempdir(), f"rt_idx_mix_segs_{sf}_{os.getpid()}"
-    )
-    shutil.rmtree(seg_root, ignore_errors=True)
+    seg_root = fresh_pid_dir(tempfile.gettempdir(), "rt_idx_mix_segs", sf)
     sink = make_postings_segment_sink(seg_root, publish="manifest")
     # the bucketed base build and the two fresh segments are fully
     # independent (separate outputs; the probe below reads all three)

@@ -410,7 +410,7 @@ def incremental_shard_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from hadoop_project_spark.serving import _sf_tag
     from hadoop_project_spark.sources.sinks import warehouse_path
-    from hadoop_project_spark.storage import sweep_dead_pid_dirs
+    from hadoop_project_spark.storage import fresh_pid_dir
 
     docs = load_table(spark, sf_dir, "documents")
 
@@ -442,14 +442,14 @@ def incremental_shard_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus.select("doc_id", F.col("clean_text").alias("text")), "doc_id"
     ).select("shard_id", "pos_in_shard", "doc_id", "text")
 
-    # pid-namespaced export root + dead-pid sibling sweep (round-12
-    # review finding: a shared fixed root is rmtree'd at query start,
-    # so concurrent same-host drivers sharing a warehouse would clobber
-    # each other's export mid-run — the same threat model the gate
-    # roots and the versioned serving publishes already defend)
-    base = os.path.join(warehouse_path(spark), "shard_export")
-    sweep_dead_pid_dirs(base, "shards")
-    root = os.path.join(base, f"shards_{_sf_tag(sf_dir)}_{os.getpid()}")
+    # pid-namespaced export root: a shared fixed root cleared at query
+    # start would let concurrent same-host drivers sharing a warehouse
+    # clobber each other's export mid-run
+    root = fresh_pid_dir(
+        os.path.join(warehouse_path(spark), "shard_export"),
+        "shards",
+        _sf_tag(sf_dir),
+    )
 
     # Per-shard dirty/surviving rollup in ONE aggregate over the two
     # pinned relations (dirty: any member dropped or cut; surviving:
@@ -464,12 +464,6 @@ def incremental_shard_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_cut_tokens").isNull() | (F.col("n_cut_tokens") > 0)
     ).cast("int")
 
-    def _write_v1():
-        import shutil
-
-        shutil.rmtree(root, ignore_errors=True)
-        se.write_shard_files(v1, root)
-
     roll, _ = run_overlapped(
         [
             lambda: marks.groupBy("shard_id")
@@ -480,7 +474,7 @@ def incremental_shard_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
             .collect(),
-            _write_v1,
+            lambda: se.write_shard_files(v1, root),
         ]
     )
     dirty_ids = [int(r["shard_id"]) for r in roll if r["dirty"] == 1]

@@ -1052,9 +1052,9 @@ def ann_ivfpq_segment_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     → compaction → partitioned probe loses nothing vs the one-shot
     encode."""
     import os
-    import shutil
     import tempfile
 
+    from hadoop_project_spark.storage import fresh_pid_dir
     from hadoop_project_spark.streaming.ann_segments import (
         compact_codes_segments,
         make_codes_segment_sink,
@@ -1062,12 +1062,7 @@ def ann_ivfpq_segment_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     sf = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    seg_root = os.path.join(
-        # pid-namespaced: two concurrent drivers on one host must not
-        # race on a shared segment root (ADVICE r10 #3)
-        tempfile.gettempdir(), f"rt_ann_segs_{sf}_{os.getpid()}"
-    )
-    shutil.rmtree(seg_root, ignore_errors=True)
+    seg_root = fresh_pid_dir(tempfile.gettempdir(), "rt_ann_segs", sf)
     sink = make_codes_segment_sink(
         seg_root, books=_PQ_BOOKS, n_cells=IVF_CELLS,
         cell_seed=IVF_SEED, dim=DIM,
@@ -1115,9 +1110,9 @@ def ann_ivfpq_base_plus_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard LSM read-amplification trade). Matching the
     whole-corpus oracle proves the union serving view loses nothing."""
     import os
-    import shutil
     import tempfile
 
+    from hadoop_project_spark.storage import fresh_pid_dir
     from hadoop_project_spark.streaming.ann_segments import (
         compact_codes_segments,
         make_codes_segment_sink,
@@ -1126,11 +1121,7 @@ def ann_ivfpq_base_plus_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     sf = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    seg_root = os.path.join(
-        # pid-namespaced against concurrent same-host drivers (ADVICE r10 #3)
-        tempfile.gettempdir(), f"rt_ann_mix_segs_{sf}_{os.getpid()}"
-    )
-    shutil.rmtree(seg_root, ignore_errors=True)
+    seg_root = fresh_pid_dir(tempfile.gettempdir(), "rt_ann_mix_segs", sf)
     sink = make_codes_segment_sink(
         seg_root, publish="manifest", books=_PQ_BOOKS, n_cells=IVF_CELLS,
         cell_seed=IVF_SEED, dim=DIM,

@@ -65,7 +65,7 @@ from hadoop_project_spark.storage import STORE
 
 # Bump when a physical layout changes (bucket spec, sort order,
 # schema): old on-disk layouts then fingerprint-mismatch and rebuild.
-LAYOUT_VERSION = 1
+LAYOUT_VERSION = 2
 
 _MARKER = "_SERVED_FINGERPRINT"
 

@@ -76,13 +76,25 @@ def write_bucketed(
     sort_cols: list[str] | None = None,
     mode: str = "overwrite",
     path: str | None = None,
+    delta_cols: tuple[str, ...] = (),
 ) -> None:
     """Bucketed table (bucketing requires saveAsTable — the bucket spec
     lives in the catalog, not the files). With ``path`` the table is
     EXTERNAL at that location: the files outlive the in-memory
     catalog, and a later session can re-register them with one DDL
     statement (serving.attach_served_table) instead of rebuilding —
-    the serve-vs-build split of VERDICT r9 #3.
+    the serve-vs-build split.
+
+    ``delta_cols`` names integer columns to store as Parquet
+    DELTA_BINARY_PACKED pages (d-gaps): the file is written with the
+    v2 page writer and those columns' dictionaries are switched off,
+    while every other column keeps its dictionary. It is for a sorted
+    integer column that sits under a leading sort key, e.g. the
+    inverted index's doc_id under term: there the values restart at
+    every term, which defeats dictionary + RLE, but their gaps are
+    small. At sf0.01 doc_id took 46,108 of the postings table's 81,436
+    bytes as dictionary pages; with delta pages the table takes 45,575
+    (sf0.1: 841,172 → 334,116, and the doclens table 33,918 → 17,299).
 
     Two tables bucketed identically on their join key join with NO
     Exchange on either side (asserted in tests/test_sinks.py); the same
@@ -105,6 +117,10 @@ def write_bucketed(
         writer = writer.sortBy(*sort_cols)
     if path is not None:
         writer = writer.option("path", path)
+    if delta_cols:
+        writer = writer.option("parquet.writer.version", "v2")
+        for c in delta_cols:
+            writer = writer.option(f"parquet.enable.dictionary#{c}", "false")
     writer.format("parquet").saveAsTable(table)
 
 
@@ -123,7 +139,7 @@ def _drop_with_stale_location(
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     if path is not None:
         if os.path.exists(path):
-            shutil.rmtree(path, ignore_errors=True)
+            shutil.rmtree(path)
     else:
         root = warehouse_path(spark)
         if os.path.isabs(root) or os.path.exists(root):

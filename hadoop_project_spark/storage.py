@@ -162,3 +162,16 @@ def sweep_dead_pid_dirs(base: str, prefix: str) -> None:
             shutil.rmtree(os.path.join(base, entry), ignore_errors=True)
         except PermissionError:
             pass  # pid exists under another uid: leave it alone
+
+
+def fresh_pid_dir(base: str, prefix: str, tag: str) -> str:
+    """``<base>/<prefix>_<tag>_<pid>``, emptied, after retiring the
+    dead-pid siblings sweep_dead_pid_dirs finds: the scratch root of
+    one query run. The pid suffix keeps concurrent same-host processes
+    apart, and the sweep keeps exited ones from leaving their roots
+    behind. A root that exists but cannot be removed raises here."""
+    sweep_dead_pid_dirs(base, prefix)
+    path = os.path.join(base, f"{prefix}_{tag}_{os.getpid()}")
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    return path

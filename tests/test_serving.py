@@ -572,3 +572,92 @@ def test_concurrent_publish_race_single_consistent_version(
     for p, out in zip(procs, outs):
         assert p.returncode == 0 and "RACER_OK" in out, out[-2000:]
     assert checked > 0, "prober never observed a published version"
+
+
+def _table_location(spark, table: str) -> str:
+    return spark.sql(f"DESCRIBE EXTENDED {table}").filter(
+        "col_name='Location'"
+    ).collect()[0]["data_type"].removeprefix("file:")
+
+
+def _footer_encodings(loc: str) -> tuple[int, int, dict[str, set[str]]]:
+    """(data files, data bytes, column → page encodings) of a parquet
+    directory, read from the pyarrow footers."""
+    import pyarrow.parquet as pq
+
+    files = [
+        os.path.join(loc, f) for f in os.listdir(loc) if f.endswith(".parquet")
+    ]
+    encs: dict[str, set[str]] = {}
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for rg in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                col = md.row_group(rg).column(c)
+                encs.setdefault(col.path_in_schema, set()).update(
+                    col.encodings
+                )
+    return len(files), sum(os.path.getsize(f) for f in files), encs
+
+
+def _assert_delta_doc_id(loc: str, n_buckets: int, dict_cols) -> int:
+    n_files, nbytes, encs = _footer_encodings(loc)
+    assert n_files == n_buckets, loc  # still one file per bucket
+    assert encs["doc_id"] == {"DELTA_BINARY_PACKED"}, encs
+    for c in dict_cols:
+        assert encs[c] & {"RLE_DICTIONARY", "PLAIN_DICTIONARY"}, (c, encs)
+    return nbytes
+
+
+def test_stored_index_doc_ids_are_delta_pages(spark, sf_dir, tmp_path):
+    """Both writers of the stored inverted index — the served build and
+    the LSM compaction — store doc_id as DELTA_BINARY_PACKED pages in
+    both tables while term, pos and dl keep their dictionaries, and the
+    postings come out at most 0.7x a dictionary-paged control written
+    from the same rows."""
+    from hadoop_project_spark.catalog import load_table
+    from hadoop_project_spark.sources.sinks import write_bucketed
+    from hadoop_project_spark.streaming.index_segments import (
+        compact_segments,
+        make_postings_segment_sink,
+    )
+
+    prefix = ensure_served_index(spark, sf_dir)
+    pt, dt = ix.index_table_names(prefix)
+    served = _assert_delta_doc_id(
+        _table_location(spark, pt), ix.POSTINGS_BUCKETS, ("term", "pos")
+    )
+    _assert_delta_doc_id(
+        _table_location(spark, dt), ix.DOCLEN_BUCKETS, ("dl",)
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    root = str(tmp_path / "enc_segs")
+    sink = make_postings_segment_sink(root)
+    sink(docs.filter(F.col("doc_id") % 2 == 0), 0)
+    sink(docs.filter(F.col("doc_id") % 2 == 1), 1)
+    cpt, cdt = compact_segments(spark, root, "enc_idx")
+    compacted = _assert_delta_doc_id(
+        _table_location(spark, cpt), ix.POSTINGS_BUCKETS, ("term", "pos")
+    )
+    _assert_delta_doc_id(
+        _table_location(spark, cdt), ix.DOCLEN_BUCKETS, ("dl",)
+    )
+
+    control = str(tmp_path / "dict_postings")
+    write_bucketed(
+        spark.table(pt).repartition(ix.POSTINGS_BUCKETS, F.col("term")),
+        "enc_dict_postings",
+        ["term"],
+        ix.POSTINGS_BUCKETS,
+        sort_cols=["term", "doc_id", "pos"],
+        path=control,
+    )
+    n_files, dict_bytes, encs = _footer_encodings(control)
+    assert n_files == ix.POSTINGS_BUCKETS
+    assert "DELTA_BINARY_PACKED" not in encs["doc_id"], encs
+    for nbytes in (served, compacted):
+        assert nbytes <= 0.7 * dict_bytes, (nbytes, dict_bytes)
+    spark.sql("DROP TABLE enc_dict_postings")
+    for t in (cpt, cdt):
+        spark.sql(f"DROP TABLE {t}")

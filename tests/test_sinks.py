@@ -167,3 +167,17 @@ def test_csv_sink_roundtrips_quoted_fields(spark, tmp_path):
     # Spark's CSV sink writes empty string as an empty (null) field
     exp = {(i, p if p else None) for i, p in rows}
     assert got == exp
+
+
+def test_bucketed_overwrite_raises_when_stale_path_cannot_go(spark, tmp_path):
+    """The stale external location is deleted where the overwrite
+    starts, and a failed delete raises there: a regular file in the
+    table's place cannot be removed as a directory tree."""
+    import pytest
+
+    path = tmp_path / "not_a_table"
+    path.write_text("x")
+    df = spark.range(4).withColumnRenamed("id", "k")
+    with pytest.raises(NotADirectoryError):
+        write_bucketed(df, "stale_path_bkt", ["k"], 2, path=str(path))
+    assert path.read_text() == "x"

@@ -56,3 +56,25 @@ def test_stat_sig_changes_with_content(tmp_path):
     os.utime(p, ns=(1, 1))  # force a distinct mtime_ns
     p2 = store.stat_sig(str(p))
     assert p2 != sig1  # mtime participates in the signature
+
+
+def test_fresh_pid_dir_sweeps_dead_siblings_and_empties_its_own(tmp_path):
+    import subprocess
+    import sys
+
+    from hadoop_project_spark.storage import fresh_pid_dir
+
+    child = subprocess.Popen([sys.executable, "-c", "pass"])
+    child.wait()  # an exited process: its pid no longer exists
+    dead = tmp_path / f"rt_x_sf_{child.pid}"
+    live = tmp_path / f"rt_x_sf_{os.getppid()}"
+    other = tmp_path / f"rt_y_sf_{child.pid}"  # another prefix: kept
+    mine = tmp_path / f"rt_x_sf_{os.getpid()}"
+    for d in (dead, live, other, mine):
+        d.mkdir()
+        (d / "part-0.parquet").write_text("x")
+
+    assert fresh_pid_dir(str(tmp_path), "rt_x", "sf") == str(mine)
+    assert not dead.exists() and not mine.exists()
+    assert (live / "part-0.parquet").exists()
+    assert (other / "part-0.parquet").exists()
